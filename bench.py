@@ -269,12 +269,20 @@ def main() -> None:
     # of stdout (measured: every BENCH_r*.json tail capture is exactly
     # 2000), so degrade at 1980 — drop the load field first, then go to
     # decisecond precision (never needed at current suite size: 67
-    # queries at 2 decimals measure 1944/1920 bytes)
+    # queries at 2 decimals measure 1944/1920 bytes), and past that fail
+    # with an explicit overflow marker and a non-zero exit
     line = _line(2, {"loadavg_ambient": ambient_load})
     if len(line) > 1980:
         line = _line(2, {})
     if len(line) > 1980:
         line = _line(1, {})
+    if len(line) > 1980:
+        # no rung left: a head-truncated line would parse as null, so print
+        # an explicit marker and fail instead of the map
+        sys.stdout.write(
+            '\n{"metric":"headline_suite_wall_seconds","error":"stdout_line_overflow"}\n'
+        )
+        sys.exit(f"bench.py: stdout line is {len(line)} chars, over 1980; see {detail_path}")
     # the one-line contract: flush everything else, then emit the JSON as
     # the LAST stdout line, newline-led so any unterminated log/progress
     # residue can't prefix-garble it for the driver's tail parse

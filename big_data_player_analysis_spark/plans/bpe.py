@@ -19,8 +19,7 @@ Scale shape, designed for the 100 TB corpus:
 * Each merge iteration is: adjacent-pair explode over the symbol arrays
   (JVM `transform`, no UDF) -> vocab-sized hash aggregate -> 1-row argmax
   (`max_by` with lexicographic tie-break; the single `.first()` is the
-  per-iteration driver scalar, same contract as heroic's convergence
-  probe) -> greedy left-to-right pair merge as a pure `F.aggregate` fold
+  per-iteration driver scalar) -> greedy left-to-right pair merge as a pure `F.aggregate` fold
   over each symbol array (JVM-side, matches the reference algorithm's
   non-overlapping single-pass replace) -> ``localCheckpoint`` so the plan
   does not grow with the iteration count.

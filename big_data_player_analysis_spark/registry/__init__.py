@@ -66,6 +66,13 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # (still-image decode via png/jpeg/mjpeg; the RIFF-AVI container walk runs
 # verbatim inside mjpeg/ipframe/mcframe; the distinct-challenger rank init
 # runs verbatim inside q16's heroic_score).
+#
+# Round-11 rotation (ROTATION.md r11): IN q18_rank_vector_init — its
+# duels derivation changed (plain window at one bucket) and it sat outside
+# the window; the other three changed closures (q00, q16,
+# olap_triangle_count) are in-window — displacing dedup_ngram_jaccard
+# (hash-green r10 on unchanged code; near-duplicate Jaccard stays
+# in-window via dedup_minhash_lsh and llm_near_dedup_survivors).
 PRIMARY_ORDER: tuple[str, ...] = (
     "q00_duel_edges",
     "llm_decontaminate",
@@ -81,8 +88,8 @@ PRIMARY_ORDER: tuple[str, ...] = (
     "olap_quantile_shard_merge",
     "llm_curation_pipeline",
     "q16_heroic_iterative",
+    "q18_rank_vector_init",
     "olap_partition_pruned_scan",
-    "dedup_ngram_jaccard",
     "llm_corpus_curation",
     "olap_key_skew_profile",
     "dedup_simhash",
@@ -124,11 +131,13 @@ PRIMARY_ORDER: tuple[str, ...] = (
 # registration order. The rotated-out entries lead: they hold green
 # r01/r02 driver rows on unchanged code.
 EXTENDED_ORDER: tuple[str, ...] = (
+    # round-11 displacement (hash-green r10 row on unchanged code;
+    # ROTATION.md r11 entry)
+    "dedup_ngram_jaccard",
     # round-10 displacements (hash-green r09 rows on round-10-unchanged
     # code; ROTATION.md r10 entry)
     "multimodal_image_decode",
     "multimodal_video_decode",
-    "q18_rank_vector_init",
     # round-9 displacements (hash-green r08 rows on round-9-unchanged code)
     "olap_funnel_conversion",
     "llm_semantic_dedup",

@@ -378,11 +378,13 @@ def q16(spark: SparkSession, sf: str) -> DataFrame:
     fixed point.
 
     num/vector partitions are occupancy knobs sized for the driver's sf
-    window (<=1M edges: 4 edge partitions keep per-iteration jobs at 4
-    tasks instead of 32 near-empty ones — measured 5.7 -> 2.8 s at sf0.1;
-    same local-scale-setting contract as llm_pack_sequences' n_groups). A
-    deploy sizes them to edge volume / target-partition-rows; results are
-    partition-independent."""
+    window (<=1M edges): num_partitions=4 hash-partitions the duels, and
+    so the persisted edge table, on challenger_id into 4 partitions, so
+    each iteration's job runs 4 tasks instead of one near-empty task per
+    shuffle partition; vector_partitions=2 coalesces the checkpointed
+    score vector (same local-scale-setting contract as
+    llm_pack_sequences' n_groups). A deploy sizes them to edge volume /
+    target-partition-rows; results are partition-independent."""
     result = heroic_score(
         duel_edges(spark, sf),
         alpha=0.1,

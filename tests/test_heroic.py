@@ -126,3 +126,123 @@ def test_heroic_two_player_fixed_point(spark):
     got = {r_.player_id: r_.hs for r_ in result.scores.collect()}
     assert got[1] == pytest.approx(want_a, rel=1e-6)
     assert got[2] == pytest.approx(want_b, rel=1e-6)
+
+
+def _jobs_for(spark, tag, fn):
+    """Run fn() under job group `tag`; return (fn's result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_heroic_job_budget_and_observed_msd(spark, sf_small):
+    """The flagship over sf0.001's events-derived duels: the whole op (ts
+    stats, edge build, every iteration) stays within 22 Spark jobs, each
+    iteration adds at most 3, and every msd the checkpoint observes equals
+    the explicit keyed squared difference of consecutive score vectors."""
+    from pyspark.sql import functions as F
+
+    from big_data_player_analysis_spark.caching import (
+        release_tracked,
+        reset_runtime_memos,
+    )
+    from big_data_player_analysis_spark.operators.joins import keyed_squared_difference
+    from big_data_player_analysis_spark.registry.common import duel_edges
+
+    def run(k):
+        reset_runtime_memos()  # every run pays the cold ts-stats jobs
+        return _jobs_for(
+            spark,
+            f"heroic_budget_{k}",
+            lambda: heroic_score(duel_edges(spark, sf_small), alpha=0.1, tol=0.1, max_iter=k),
+        )
+
+    try:
+        runs = [run(k) for k in (1, 2, 3)]
+        jobs = [n for _, n in runs]
+        full = runs[-1][0]
+        assert full.iterations == 3 and full.diverged  # the q16 oracle's unroll
+        assert jobs[-1] <= 22, jobs
+        assert all(b - a <= 3 for a, b in zip(jobs, jobs[1:])), jobs
+
+        vectors = [r.scores for r, _ in runs]
+        init = vectors[0].select("player_id").withColumn("hs", F.lit(1.0))
+        for prev, new, msd in zip([init] + vectors, vectors, full.msd_history):
+            want = (
+                keyed_squared_difference(prev, new, "player_id", "hs")
+                .agg(F.avg("sq_diff"))
+                .first()[0]
+            )
+            assert msd == pytest.approx(want, rel=1e-12)
+        for r, _ in runs[:-1]:  # each shorter run is a prefix of the full one
+            assert r.msd_history == pytest.approx(full.msd_history[: r.iterations], rel=1e-12)
+    finally:
+        release_tracked()
+
+
+def test_heroic_null_keys_and_null_scores_match_sql(spark):
+    """Edge build null semantics against DuckDB running SQL_Q16_HEROIC's own
+    avgs/edges/iteration CTEs over the same duel rows: a null challenger
+    never forms an edge, a null challenged still counts towards its
+    challenger's average but forms no edge, an all-null-score challenger
+    and a challenged-only player both get the 1.0 prior."""
+    import duckdb
+
+    from big_data_player_analysis_spark.caching import release_tracked
+    from big_data_player_analysis_spark.registry.common import DUELS_CTE
+    from big_data_player_analysis_spark.registry.reference_surface import SQL_Q16_HEROIC
+
+    rows = [
+        (1, 2, 10.0),
+        (1, 2, 4.0),
+        (1, 3, 5.0),  # 3 is challenged-only
+        (1, None, 3.0),  # null challenged: counts in avg(1), no edge
+        (2, 1, 20.0),
+        (2, 3, 1.0),
+        (None, 1, 7.0),  # null challenger: nothing
+        (4, 1, None),  # 4's scores are all null
+        (4, 2, None),
+        (5, 4, 2.0),
+        (5, 1, None),  # one null score among 5's
+        (6, None, 1.0),  # 6 only ever meets a null challenged
+    ]
+    duels = spark.createDataFrame(
+        rows, "challenger_id long, challenged_id long, score double"
+    )
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE TABLE duel_rows (challenger_id BIGINT, challenged_id BIGINT, score DOUBLE)"
+        )
+        con.executemany("INSERT INTO duel_rows VALUES (?, ?, ?)", rows)
+        ctes = SQL_Q16_HEROIC.replace(
+            DUELS_CTE.strip(), "duels AS (SELECT * FROM duel_rows)"
+        )
+        ctes = ctes[: ctes.index("SELECT player_id, round(hs, 6)")]
+        want_hs = dict(con.execute(f"{ctes} SELECT player_id, hs FROM it3").fetchall())
+        want_msd = [
+            con.execute(
+                f"{ctes} SELECT avg(power(a.hs - b.hs, 2)) "
+                f"FROM it{k - 1} a JOIN it{k} b USING (player_id)"
+            ).fetchone()[0]
+            for k in (1, 2, 3)
+        ]
+    finally:
+        con.close()
+
+    try:
+        result = heroic_score(duels, alpha=0.1, tol=0.0, max_iter=3)
+        got_hs = {r.player_id: r.hs for r in result.scores.collect()}
+        assert result.iterations == 3
+        assert set(got_hs) == set(want_hs) == {1, 2, 4, 5}
+        for p, v in want_hs.items():
+            assert got_hs[p] == pytest.approx(float(v), rel=1e-12), p
+        assert result.msd_history == pytest.approx([float(m) for m in want_msd], rel=1e-12)
+    finally:
+        release_tracked()

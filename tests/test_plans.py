@@ -228,6 +228,10 @@ def test_heroic_iteration_plan_shape_and_no_growth(spark, specs):
     grow from one iteration to the next (lineage truncation really works)."""
     from pyspark.storagelevel import StorageLevel
 
+    from big_data_player_analysis_spark.caching import (
+        release_tracked,
+        tracked_local_checkpoint,
+    )
     from big_data_player_analysis_spark.plans.heroic import (
         edges_with_avgs,
         iteration_step,
@@ -237,25 +241,95 @@ def test_heroic_iteration_plan_shape_and_no_growth(spark, specs):
     edges = edges_with_avgs(duel_edges(spark, SF)).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         edges.count()  # materialize the cache so the plan shows the scan
-        hs0 = (
+        hs0 = tracked_local_checkpoint(
             edges.select("challenger_id")
             .distinct()
             .selectExpr("challenger_id as player_id", "1.0d as hs")
-            .localCheckpoint()
         )
         p1 = plan_str(iteration_step(edges, hs0, alpha=0.1))
         assert "BroadcastHashJoin" in p1
         assert "InMemoryTableScan" in p1  # probes the cache, not a re-scan
         assert "SortMergeJoin" not in p1  # the vector never shuffles the edges
 
-        hs1 = iteration_step(edges, hs0, alpha=0.1).localCheckpoint()
-        hs2 = iteration_step(edges, hs1, alpha=0.1).localCheckpoint()
+        hs1 = tracked_local_checkpoint(iteration_step(edges, hs0, alpha=0.1))
+        hs2 = tracked_local_checkpoint(iteration_step(edges, hs1, alpha=0.1))
         p2 = plan_str(iteration_step(edges, hs1, alpha=0.1))
         p3 = plan_str(iteration_step(edges, hs2, alpha=0.1))
         # identical node counts iteration-over-iteration = no lineage growth
         assert p2.count("\n") == p3.count("\n")
     finally:
         edges.unpersist()
+        release_tracked()
+
+
+def _executed_nodes(df):
+    """(node name, one-line description) of every operator the collected
+    df actually ran: AQE's final plan, descending into query stages but
+    not into reused exchanges (a reuse ran nothing) or cached relations
+    (an InMemoryTableScan reads blocks another plan wrote)."""
+    df.collect()
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        out.append((name, node.simpleString(25)))
+        if name != "ReusedExchange":
+            children = node.children()
+            todo.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_heroic_edge_build_one_window_exchange_and_shuffle_free_iterations(spark):
+    """The edge build moves the duels through ONE events-sized window
+    exchange and one challenger repartition, under which both aggregates
+    (pairs, per-challenger window) run: the probe side and the broadcast
+    avg table read the same challenger-hashed pairs, so the second branch
+    reuses the exchanges.
+    An iteration over the persisted, challenger-partitioned edge table —
+    update, broadcast score joins and the squared difference the
+    checkpoint observes — runs no shuffle exchange at all."""
+    from pyspark.storagelevel import StorageLevel
+
+    from big_data_player_analysis_spark.caching import (
+        release_tracked,
+        tracked_local_checkpoint,
+    )
+    from big_data_player_analysis_spark.plans.heroic import (
+        edges_with_avgs,
+        iteration_step,
+        with_sq_diff,
+    )
+    from big_data_player_analysis_spark.registry.common import duel_edges
+
+    for num_partitions in (None, 4):  # perfbench's call and q16's
+        edges = edges_with_avgs(duel_edges(spark, SF), num_partitions=num_partitions)
+        build = _executed_nodes(edges)
+        window_exchanges = [
+            d for n, d in build
+            if n == "Exchange" and "hashpartitioning(event_type" in d
+        ]
+        assert len(window_exchanges) == 1, build
+        assert len([n for n, _ in build if n == "Exchange"]) == 2, build
+        assert any(n == "ReusedExchange" for n, _ in build), build
+
+        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            hs = None
+            for _ in range(2):  # the join-free first step, then a joined one
+                step = with_sq_diff(iteration_step(edges, hs, alpha=0.1), hs)
+                nodes = _executed_nodes(step)
+                assert not [d for n, d in nodes if n == "Exchange"], nodes
+                assert any(n == "InMemoryTableScan" for n, _ in nodes), nodes
+                hs = tracked_local_checkpoint(step.select("player_id", "hs"))
+        finally:
+            edges.unpersist()
+            release_tracked()
 
 
 def test_chunking_is_shuffle_free(spark, specs):

@@ -4,6 +4,8 @@ sf0.01 sweep is tools/oracle_check.py)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -12,6 +14,7 @@ from big_data_player_analysis_spark.registry import all_queries
 from tools.oracle_check import normalize
 
 SPECS = all_queries()
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -178,7 +181,7 @@ def test_entry_smoke(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", str(REPO_ROOT / "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -202,7 +205,7 @@ def test_registry_doc_is_current():
     from tools.registry_doc import first_sentence
     from big_data_player_analysis_spark.registry import PRIMARY_ORDER
 
-    with open("/root/repo/REGISTRY.md") as f:
+    with open(REPO_ROOT / "REGISTRY.md") as f:
         have = f.read()
     window = set(PRIMARY_ORDER)
     for name, spec in all_queries().items():

@@ -15,7 +15,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from big_data_player_analysis_spark.catalog import TABLES
 from big_data_player_analysis_spark.registry import all_queries

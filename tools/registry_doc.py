@@ -8,10 +8,12 @@ Usage: python tools/registry_doc.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from big_data_player_analysis_spark.registry import PRIMARY_ORDER, all_queries
 
@@ -51,7 +53,7 @@ def main() -> int:
         desc = first_sentence(spec.fn.__doc__)
         lines.append(f"| {i} | {name} | {in_w} | {mode} | {tags} | {desc} |")
     lines.append("")
-    with open("/root/repo/REGISTRY.md", "w") as f:
+    with open(os.path.join(REPO_ROOT, "REGISTRY.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote REGISTRY.md ({len(specs)} entries)")
     return 0

@@ -253,17 +253,14 @@ NOTES = {
         "linear in the corpus."
     ),
     "q16_heroic_iterative": (
-        "per-iteration score vectors broadcast; the shuffled bytes are "
-        "the ONE materialization of the duels window exchange (round 7: "
-        "the duels input is eagerly persisted before the three-consumer "
-        "edge build — the old broadcast-hint futures raced three "
-        "column-pruned copies of that exchange that ReuseExchange cannot "
-        "dedup, which was the r6 sf1 row's sr:sw 4.2) plus the distinct-"
-        "edge and per-iteration vector aggregates, lineage truncated by "
-        "localCheckpoint. Measured post-fix at composed sf1: sw 95.8 -> "
-        "36.3 MB, sr:sw 1.0; re-recorded r8 on the bucketed duels "
-        "derivation at 40.2 MB — the small delta is the derivation's "
-        "firsts/stitch branches, not a new consumer."
+        "per-iteration score vectors broadcast onto the challenger-"
+        "partitioned edge table, so iterations shuffle nothing; the "
+        "shuffled bytes are the ONE materialization of the duels window "
+        "exchange plus the challenger repartition under the pair "
+        "aggregate, both reused by the broadcast avg branch (same pair "
+        "payload on both consumers; lineage truncated by localCheckpoint). "
+        "The r8 record, 40.2 MB at composed sf1, predates this edge build "
+        "and is not re-measured."
     ),
     "llm_substring_dedup": (
         "the rewrite half of EXACTSUBSTR: same exchanges as the profile "
