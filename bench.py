@@ -78,10 +78,7 @@ def run_one(spark, spec, sf_dir: str) -> float:
     the true cold cost this bench now reports every pass (~3.4 s
     measured quiet). Compare r6+ numbers to PRIOR rounds' first-pass
     values, not their cache-warmed minima."""
-    from big_data_player_analysis_spark.caching import (
-        release_tracked,
-        reset_runtime_memos,
-    )
+    from big_data_player_analysis_spark.caching import release_tracked
 
     t0 = time.time()
     try:
@@ -92,14 +89,6 @@ def run_one(spark, spec, sf_dir: str) -> float:
         # release even when the build/write throws, or this run's tracked
         # blocks stay cached and pollute every later query's cold timing
         release_tracked()
-        # MEASUREMENT FIX (round 10, verdict item #5): also drop the
-        # module-level plan-sizing/training memos (_BPE_MERGES_MEMO,
-        # _COUNT_MEMO, _TS_STATS_MEMO), so every run is the declared cold
-        # path — llm_bpe_encode now re-trains its merges in EVERY pass
-        # (its r9-and-earlier minima excluded training after pass 1), and
-        # plan-sizing count jobs recur per run. Within-plan sharing is
-        # untouched; only cross-run reuse ends.
-        reset_runtime_memos()
     return elapsed
 
 
@@ -231,9 +220,9 @@ def main() -> None:
         "extra_pass": extra_pass,
         # r1-r5 minima were flattered by cross-run CacheManager plan reuse
         # (persists were never released); r6+ releases tracked persists per
-        # run; r10 additionally clears the runtime memos per run (BPE merge
-        # table, plan-sizing counts), so every run is the declared cold path
-        "semantics": "cold per-run (persists + runtime memos released per run since r10)",
+        # run; since r10 every run also recomputes its plan-sizing counts
+        # and BPE merge table (the engine keeps no cross-run memos)
+        "semantics": "cold per-run (persists released per run; no cross-run memos)",
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "tools", "bench_last.json"

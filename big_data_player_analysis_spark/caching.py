@@ -20,6 +20,12 @@ most ONE entry's intermediates are ever cached, and
 Plans that scope their persists locally (plans/heroic.py's iteration
 frames, streaming/ingest.py's per-batch persist) keep their own inline
 ``unpersist`` — their lifetime ends inside the function that created them.
+
+``_TRACKED`` is the only state the Spark side carries between calls. Plan
+sizing scalars (corpus counts, ts bounds) and trained artifacts (BPE
+merges) are computed afresh by every build from the tables as they are
+then, so a sweep driver has nothing else to reset and a rewritten table
+is never answered from an earlier one.
 """
 
 from __future__ import annotations
@@ -54,32 +60,6 @@ def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     df = df.localCheckpoint(eager)
     _TRACKED.append(("checkpoint", df))
     return df
-
-
-def reset_runtime_memos() -> int:
-    """Clear the module-level plan-sizing/training memos so a timed run
-    measures the declared COLD path (round-9 verdict item: the bench's
-    min-of-passes otherwise excludes work that only pass 1 paid).
-
-    The memos exist for composed callers inside ONE query (several
-    operators sizing themselves off the same immutable corpus in one
-    plan build) — that sharing is untouched, because the sweep drivers
-    call this BETWEEN entries/passes, never mid-build. What it removes
-    is cross-RUN reuse: the BPE merge table trained in an earlier run,
-    and corpus-count / ts-stats scalars counted in an earlier run.
-    Returns how many memo entries were dropped."""
-    from big_data_player_analysis_spark.operators import similarity
-    from big_data_player_analysis_spark.registry import common, llm_ops
-
-    n = (
-        len(similarity._COUNT_MEMO)
-        + len(common._TS_STATS_MEMO)
-        + len(llm_ops._BPE_MERGES_MEMO)
-    )
-    similarity._COUNT_MEMO.clear()
-    common._TS_STATS_MEMO.clear()
-    llm_ops._BPE_MERGES_MEMO.clear()
-    return n
 
 
 def release_tracked() -> int:

@@ -35,10 +35,7 @@ from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.functions.text import char_shingles
 from big_data_player_analysis_spark.functions.vectors import cosine_similarity
-from big_data_player_analysis_spark.operators.similarity import (
-    ann_lsh_buckets,
-    corpus_count,
-)
+from big_data_player_analysis_spark.operators.similarity import ann_lsh_buckets
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -468,7 +465,6 @@ def dedup_ngram_jaccard_auto(
     threshold: float = 0.6,
     max_df: int = 20,
     max_exact_rows: int = EXACT_PAIRS_MAX_ROWS,
-    count_memo_key: str | None = None,
 ) -> DataFrame:
     """Count-derived dispatch over the two Jaccard near-dup paths (round-8
     verdict ask #1): same (doc_a, doc_b, jaccard) output contract either
@@ -488,9 +484,9 @@ def dedup_ngram_jaccard_auto(
         loss — callers needing exactness above the ceiling must raise
         max_exact_rows explicitly and pay the verify constant.
 
-    The count is one metadata-cheap job, memoizable via count_memo_key
-    (same contract as the GEMM block sizer and the LSH width sizer)."""
-    n = corpus_count(df, count_memo_key)
+    The count is one metadata-cheap job (same contract as the GEMM block
+    sizer and the LSH width sizer)."""
+    n = df.count()
     if n <= max_exact_rows:
         return dedup_ngram_jaccard(
             df, id_col, text_col, k=k, threshold=threshold, max_df=max_df
@@ -1210,7 +1206,7 @@ def dedup_embedding_cosine(
     threshold: float = 0.45,
     n_blocks: int | None = None,
     target_block_rows: int = 8192,
-    count_memo_key: str | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine >= threshold — EXACT, via
     blocked all-pairs GEMM instead of a theta join.
@@ -1245,8 +1241,9 @@ def dedup_embedding_cosine(
     stays ~0.5 GB regardless of corpus size — a fixed B is a scale trap:
     the 64x probe measured the default-8 blocks at 320k rows building
     13 GB matrices per task (333 s of allocation/GC for ~30 s of BLAS).
-    Pass n_blocks explicitly to pin task count instead. The plan contains
-    no BroadcastNestedLoopJoin/CartesianProduct (pinned in
+    A caller that already counted the corpus passes n_rows to skip that
+    job; pass n_blocks explicitly to pin task count instead. The plan
+    contains no BroadcastNestedLoopJoin/CartesianProduct (pinned in
     tests/test_plans.py)."""
     import math
 
@@ -1263,7 +1260,9 @@ def dedup_embedding_cosine(
         min_b = math.ceil((math.sqrt(8 * par + 1) - 1) / 2)
         n_blocks = max(
             min_b,
-            math.ceil(corpus_count(df, count_memo_key) / target_block_rows),
+            math.ceil(
+                (df.count() if n_rows is None else n_rows) / target_block_rows
+            ),
         )
     route_df = F.broadcast(
         spark.createDataFrame(
@@ -1361,7 +1360,6 @@ def dedup_embedding_cosine_auto(
     threshold: float = 0.45,
     max_exact_rows: int = EXACT_PAIRS_MAX_ROWS,
     target_block_rows: int = 8192,
-    count_memo_key: str | None = None,
 ) -> DataFrame:
     """Count-derived dispatch over the two embedding near-dup paths
     (round-8 verdict ask #1): same (id_a, id_b, cosine) output contract,
@@ -1381,9 +1379,9 @@ def dedup_embedding_cosine_auto(
         verify). Callers needing the exact product above the ceiling must
         raise max_exact_rows explicitly and budget the GEMM flops.
 
-    The count is one metadata-cheap job, shared with the chosen path's
-    own sizer through count_memo_key."""
-    n = corpus_count(df, count_memo_key)
+    The count is one metadata-cheap job, passed down as the chosen path's
+    n_rows so its own sizer does not count again."""
+    n = df.count()
     if n <= max_exact_rows:
         return dedup_embedding_cosine(
             df,
@@ -1391,14 +1389,14 @@ def dedup_embedding_cosine_auto(
             vec_col,
             threshold,
             target_block_rows=target_block_rows,
-            count_memo_key=count_memo_key,
+            n_rows=n,
         )
     return ann_lsh_buckets(
         df,
         id_col=id_col,
         vec_col=vec_col,
         threshold=threshold,
-        count_memo_key=count_memo_key,
+        n_rows=n,
     )
 
 

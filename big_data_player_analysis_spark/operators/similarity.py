@@ -40,28 +40,6 @@ LSH_ALL_HYPERPLANES = [
 LSH_HYPERPLANES = LSH_ALL_HYPERPLANES[:LSH_PLANES]
 
 
-# Plan-build corpus counts (GEMM block sizing, LSH signature width, the
-# exact-vs-banded auto-dispatch) memoized per caller-supplied key — the
-# same immutable-input contract as registry/common.py's _TS_STATS_MEMO
-# (round-8 advice: ann_lsh_buckets re-counted its input at every
-# plan-build). Callers that mutate their input between calls must not
-# pass a key.
-_COUNT_MEMO: dict[str, int] = {}
-
-
-def corpus_count(df: DataFrame, memo_key: str | None = None) -> int:
-    """df.count() with an optional per-key memo for the plan-sizing
-    scalars. The count is parquet-stats-cheap on raw tables; the memo
-    exists for composed callers that size several operators off the same
-    immutable corpus in one session."""
-    if memo_key is not None and memo_key in _COUNT_MEMO:
-        return _COUNT_MEMO[memo_key]
-    n = df.count()
-    if memo_key is not None:
-        _COUNT_MEMO[memo_key] = n
-    return n
-
-
 def lsh_band_bits_for(n: int, target_occupancy: int = 4) -> int:
     """Per-band bucket width (bits) sized to the corpus: the smallest b in
     [3, 12] with n <= target_occupancy * 2^b, i.e. expected band-bucket
@@ -299,7 +277,7 @@ def ann_lsh_buckets(
     threshold: float = 0.45,
     max_hamming: int = 4,
     n_planes: int | None = None,
-    count_memo_key: str | None = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """All-pairs near-neighbor search, LSH-bucketed: candidate pairs share
     at least one of 5 bands of the hyperplane signature (pigeonhole
@@ -317,13 +295,14 @@ def ann_lsh_buckets(
     fixed 16-bit demo signature whose candidates grew 120x on the 10x
     step (round-7 SHUFFLE row). The count() at plan-build is a
     parquet-stats-cheap single-column action, the same class as the
-    GEMM auto-sizer's. Passing an explicit n_planes (e.g. 16) pins the
-    historical demo config. NOTE the semantics knob: hamming <= 4 over
-    MORE planes is a stricter angular test, so auto recall tightens as
-    the corpus grows — the published tradeoff of count-sized LSH; where
-    required recall pushes candidates toward brute-force density,
-    dedup_embedding_cosine's blocked GEMM or semantic_dedup's adaptive
-    sign-buckets are the designed alternatives.
+    GEMM auto-sizer's; a caller that already counted the corpus passes
+    n_rows instead (the _auto dispatcher does). Passing an explicit
+    n_planes (e.g. 16) pins the historical demo config. NOTE the
+    semantics knob: hamming <= 4 over MORE planes is a stricter angular
+    test, so auto recall tightens as the corpus grows — the published
+    tradeoff of count-sized LSH; where required recall pushes candidates
+    toward brute-force density, dedup_embedding_cosine's blocked GEMM or
+    semantic_dedup's adaptive sign-buckets are the designed alternatives.
 
     Candidate plumbing carries IDS AND SIGS ONLY (two longs per row): the
     first-cut plan attached both 64-double vectors to every band-join row
@@ -336,7 +315,7 @@ def ann_lsh_buckets(
     from pyspark.sql.functions import pandas_udf
 
     if n_planes is None:
-        bb = lsh_band_bits_for(corpus_count(vectors, count_memo_key))
+        bb = lsh_band_bits_for(vectors.count() if n_rows is None else n_rows)
         n_planes = LSH_BANDS * bb
         bounds = [(i * bb, bb) for i in range(LSH_BANDS)]
     elif n_planes == LSH_PLANES:

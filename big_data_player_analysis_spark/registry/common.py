@@ -10,8 +10,6 @@ and expressible identically in ANSI SQL for the oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -33,31 +31,19 @@ from big_data_player_analysis_spark.catalog import load_table
 TS_BUCKET_TARGET_ROWS = 262_144
 TS_BUCKET_MAX = 65_536
 
-# (lo_micros, hi_micros, n_rows) per corpus dir — three scalars collected
-# once per session by one min/max/count job (parquet-stats-cheap); the
-# immutable-testdata contract is the same one the BPE merge memo and the
-# composed-scale cache already take.
-_TS_STATS_MEMO: dict[str, tuple[int | None, int | None, int]] = {}
-
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _events_ts_stats(
-    events: DataFrame, memo_key: str | None = None
-) -> tuple[int | None, int | None, int]:
-    if memo_key is not None and memo_key in _TS_STATS_MEMO:
-        return _TS_STATS_MEMO[memo_key]
+def _events_ts_stats(events: DataFrame) -> tuple[int | None, int | None, int]:
+    """(lo_micros, hi_micros, n_rows): one min/max/count job."""
     row = events.agg(
         F.min(F.unix_micros("ts")).alias("lo"),
         F.max(F.unix_micros("ts")).alias("hi"),
         F.count(F.lit(1)).alias("n"),
     ).first()
-    stats = (row["lo"], row["hi"], row["n"])
-    if memo_key is not None:
-        _TS_STATS_MEMO[memo_key] = stats
-    return stats
+    return row["lo"], row["hi"], row["n"]
 
 
 def duel_edges(
@@ -75,8 +61,8 @@ def duel_edges(
     the identical output shuffle-parallel instead:
 
     1. range-bucket ts into equal spans (bounds + row count come from one
-       memoized 3-scalar driver agg; bucket count auto-sizes from the row
-       count — see TS_BUCKET_TARGET_ROWS). Bucket is a monotone function
+       3-scalar driver agg, one job per build; bucket count auto-sizes from
+       the row count — see TS_BUCKET_TARGET_ROWS). Bucket is a monotone function
        of ts alone, so ties in ts land in one bucket and the concatenation
        of within-bucket (ts, event_id) orders IS the global order.
     2. lead() within (event_type, bucket) — n_types x n_buckets window
@@ -94,23 +80,15 @@ def duel_edges(
     tests/test_plans.py::test_duel_edges_matches_direct_window and the
     unchanged DUELS_CTE oracle); only the physical plan changes.
     """
-    return duel_edges_from(
-        t(spark, sf_dir, "events"),
-        n_buckets=n_buckets,
-        memo_key=os.path.realpath(sf_dir),
-    )
+    return duel_edges_from(t(spark, sf_dir, "events"), n_buckets=n_buckets)
 
 
-def duel_edges_from(
-    events: DataFrame,
-    n_buckets: int | None = None,
-    memo_key: str | None = None,
-) -> DataFrame:
+def duel_edges_from(events: DataFrame, n_buckets: int | None = None) -> DataFrame:
     """The derivation over an arbitrary events frame (same semantics and
     plan as duel_edges; split out so the scale probes can feed composed
     scaled copies of the table). n_buckets=None auto-sizes from the row
     count; pass an explicit value to pin a plan shape (tests do)."""
-    lo, hi, n_rows = _events_ts_stats(events, memo_key)
+    lo, hi, n_rows = _events_ts_stats(events)
     if n_buckets is None:
         n_buckets = max(
             1, min(TS_BUCKET_MAX, -(-n_rows // TS_BUCKET_TARGET_ROWS))

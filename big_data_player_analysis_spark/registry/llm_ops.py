@@ -12,8 +12,6 @@ as the exact SQL) or are rows-only (SimHash).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_player_analysis_spark.caching import (
@@ -399,7 +397,6 @@ def dedup_jaccard_q(spark: SparkSession, sf: str) -> DataFrame:
     return dedup_ngram_jaccard_auto(
         t(spark, sf, "documents"), "doc_id", "text",
         k=SHINGLE_K, threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF,
-        count_memo_key=f"{sf}:documents",
     )
 
 
@@ -852,8 +849,7 @@ def dedup_cosine_q(spark: SparkSession, sf: str) -> DataFrame:
     contract holds in the exact regime, which is where the driver gates
     it."""
     return dedup_embedding_cosine_auto(
-        t(spark, sf, "embeddings"), "vec_id", "embedding",
-        COSINE_DUP_THRESHOLD, count_memo_key=f"{sf}:embeddings",
+        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD
     )
 
 
@@ -984,8 +980,7 @@ def ann_lsh_q(spark: SparkSession, sf: str) -> DataFrame:
     both the pinned 16-bit config and the auto width, band
     non-degeneracy, and pigeonhole completeness for hamming <= 4."""
     return ann_lsh_buckets(
-        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD,
-        count_memo_key=f"{sf}:embeddings",
+        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD
     )
 
 
@@ -2705,11 +2700,6 @@ def bpe_train_q(spark: SparkSession, sf: str) -> DataFrame:
     return bpe_merges_df(t(spark, sf, "documents"), "text", n_merges=12)
 
 
-# trained merge lists per (corpus dir, n_merges): a 12-tuple list each —
-# see bpe_encode_q's docstring for the sharing contract
-_BPE_MERGES_MEMO: dict[tuple[str, int], list] = {}
-
-
 @query("llm_bpe_encode", sql=None, tags=("llm", "tokenizer", "iterative", "bench"))
 def bpe_encode_q(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer application end-to-end: learn 12 merges from the corpus
@@ -2735,29 +2725,16 @@ def bpe_encode_q(spark: SparkSession, sf: str) -> DataFrame:
     (round-6 verdict wrong #1). Full information is preserved: the
     string is the exact id stream, order included.
 
-    The learned merge list memoizes per (corpus dir, n_merges) — the
-    same sweep-scoped sharing contract as _CLOSURE_MEMO and the simhash
-    signature reuse: a 63-query bench/gate sweep otherwise re-runs the
-    identical 12-iteration training loop inside this entry (~2.4 s of
-    its 6.4 s sf0.1 wall, round-7 ask #6), and a tokenizer IS a
-    train-once artifact — re-deriving it per encode batch is not a
-    semantics anyone ships. The merges are a 12-tuple Python list, not
-    cached Spark state; a data change under the same path is out of
-    contract for the immutable testdata dirs (same contract as the
-    composed-scale cache). Round-10 (verdict item #5): the BENCH clears
-    this memo per run (caching.reset_runtime_memos next to
-    release_tracked), so every timed pass pays the full train + encode —
-    the memo now only serves composed callers inside one sweep entry."""
+    Every call trains on the table as it is now, then encodes: the
+    12-merge training loop is ~2.4 s of the entry's 6.4 s sf0.1 wall
+    (round-7 ask #6), but merges kept across calls would encode a
+    rewritten table with the old corpus's vocabulary. A caller that
+    ships a train-once tokenizer keeps bpe_train's merges itself and
+    calls plans/bpe.py:bpe_token_ids directly."""
     from big_data_player_analysis_spark.plans.bpe import bpe_token_ids, bpe_train
 
     docs = t(spark, sf, "documents")
-    memo_key = (os.path.realpath(sf), 12)
-    merges = _BPE_MERGES_MEMO.get(memo_key)
-    if merges is None:
-        merges = [
-            (l, r) for l, r, _ in bpe_train(docs, "text", n_merges=12).merges
-        ]
-        _BPE_MERGES_MEMO[memo_key] = merges
+    merges = [(l, r) for l, r, _ in bpe_train(docs, "text", n_merges=12).merges]
     out = bpe_token_ids(docs, "doc_id", "text", merges)
     return out.select(
         "doc_id",

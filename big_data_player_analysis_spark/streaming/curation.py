@@ -32,6 +32,7 @@ from big_data_player_analysis_spark.operators.repetition import (
     REPEAT_MIN_DOCS,
     REPEAT_WINDOW_TOKENS,
 )
+from big_data_player_analysis_spark.streaming.events import await_completion
 from big_data_player_analysis_spark.streaming.ingest import documents_stream
 
 #: same gate as the batch mega-pipeline (registry/llm_ops.py)
@@ -123,11 +124,7 @@ def stream_curation_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
+    await_completion(q, timeout_sec)
     return _read_curated(spark, corpus_dir)
 
 

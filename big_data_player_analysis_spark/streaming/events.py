@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 
 def _events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -94,9 +95,21 @@ def run_stream_to_table(
         .trigger(availableNow=True)
         .start()
     )
+    await_completion(q, timeout_sec)
+    return sdf.sparkSession.table(name)
+
+
+def await_completion(q: StreamingQuery, timeout_sec: float) -> None:
+    """Wait for an availableNow query to drain its source, then make sure
+    it is stopped. A query still running after timeout_sec raises
+    TimeoutError carrying its last progress: stopping it and reading the
+    sink would return a partial result as if it were complete."""
     try:
-        q.awaitTermination(timeout_sec)
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} still running after "
+                f"{timeout_sec}s; last progress: {q.lastProgress}"
+            )
     finally:
         if q.isActive:
             q.stop()
-    return sdf.sparkSession.table(name)

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from big_data_player_analysis_spark.streaming.events import await_completion
+
 DOCS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -108,11 +110,7 @@ def stream_near_dedup_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
+    await_completion(q, timeout_sec)
     return _read_corpus(spark, corpus_dir)
 
 

@@ -29,7 +29,10 @@ import glob as _glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_player_analysis_spark.streaming.events import events_stream
+from big_data_player_analysis_spark.streaming.events import (
+    await_completion,
+    events_stream,
+)
 
 _STATE_SCHEMA = (
     "event_type string, n_events long, sum_value double, "
@@ -121,11 +124,7 @@ def stream_incremental_mv(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
+    await_completion(q, timeout_sec)
     return read_mv(spark, mv_dir)
 
 

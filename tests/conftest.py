@@ -32,3 +32,16 @@ def rows_set(df, ndigits: int = 6):
             vals.append(round(v, ndigits) if isinstance(v, float) else v)
         out.append(tuple(vals))
     return sorted(out, key=repr)
+
+
+def jobs_for(spark, tag, fn):
+    """Run fn() under job group `tag`; return (fn's result, jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return out, len(sc.statusTracker().getJobIdsForGroup(tag))

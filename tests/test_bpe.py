@@ -253,3 +253,43 @@ def test_bpe_tokenize_then_pack_chain(spark):
             fill += n
         # documents larger than the budget still occupy their own pack
     assert got == want
+
+
+def test_bpe_encode_entry_retrains_on_a_rewritten_table(spark, tmp_path):
+    """The registered llm_bpe_encode entry trains on the table as it is
+    when the entry runs: after documents.parquet is rewritten in place
+    with different text, its token ids equal a fresh train + encode of
+    the new text, not an encode with the first corpus's merges."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_player_analysis_spark.plans.bpe import _encode_word, bpe_vocab_ids
+    from big_data_player_analysis_spark.registry import all_queries
+
+    entry = all_queries()["llm_bpe_encode"].fn
+    path = tmp_path / "documents.parquet"
+
+    def reference(texts):
+        merges = [(a, b) for a, b, _ in python_bpe([(t,) for t in texts], 12)]
+        tok2id = bpe_vocab_ids(merges)
+        out = {}
+        for doc_id, text in enumerate(texts):
+            ws = [w for w in re.split(r"[^a-z]+", text.lower()) if w]
+            ids = [tok2id[s] for w in ws for s in _encode_word(w, merges)]
+            out[doc_id] = (" ".join(map(str, ids)), len(ws), len(ids))
+        return out
+
+    rewritten = [
+        "banana bandana cabana banana nab",
+        "bandana banana banana cab cabana",
+        "nab cab banana bandana bandana",
+    ]
+    for texts in ([t for (t,) in CORPUS], rewritten):
+        pq.write_table(
+            pa.table({"doc_id": list(range(len(texts))), "text": texts}), path
+        )
+        got = {
+            r.doc_id: (r.token_ids_str, r.n_words, r.n_tokens)
+            for r in entry(spark, str(tmp_path)).collect()
+        }
+        assert got == reference(texts)

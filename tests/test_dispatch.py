@@ -20,6 +20,7 @@ from big_data_player_analysis_spark.operators.dedup import (
     dedup_ngram_jaccard_auto,
 )
 from big_data_player_analysis_spark.registry.common import t
+from tests.conftest import jobs_for
 
 SF = "/root/testdata/sf0.001"
 
@@ -81,3 +82,21 @@ def test_cosine_dispatch_routes_above_ceiling(spark):
     assert "ArrowEvalPython" in p
     # schema contract is identical across the dispatch
     assert [f.name for f in auto.schema.fields] == ["id_a", "id_b", "cosine"]
+
+
+def test_cosine_dispatch_counts_the_corpus_once(spark):
+    """Building either regime runs the dispatcher's one count and nothing
+    else: the chosen path sizes itself (GEMM block count, LSH signature
+    width) from the n_rows it is handed instead of counting again."""
+    emb = t(spark, SF, "embeddings")
+    _, one_count = jobs_for(spark, "dispatch_bare_count", emb.count)
+    assert one_count >= 1
+    for ceiling in (EXACT_PAIRS_MAX_ROWS, 10):  # GEMM, then the ANN route
+        _, jobs = jobs_for(
+            spark,
+            f"dispatch_build_{ceiling}",
+            lambda: dedup_embedding_cosine_auto(
+                emb, "vec_id", "embedding", max_exact_rows=ceiling
+            ),
+        )
+        assert jobs == one_count, (ceiling, jobs, one_count)

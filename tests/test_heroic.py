@@ -14,6 +14,7 @@ from big_data_player_analysis_spark.plans.heroic import (
     heroic_score,
     smoothed_avg_completed,
 )
+from tests.conftest import jobs_for
 
 
 def simulate(duel_rows, alpha=0.1, tol=0.1, max_iter=50):
@@ -128,19 +129,6 @@ def test_heroic_two_player_fixed_point(spark):
     assert got[2] == pytest.approx(want_b, rel=1e-6)
 
 
-def _jobs_for(spark, tag, fn):
-    """Run fn() under job group `tag`; return (fn's result, jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
-    return out, len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 def test_heroic_job_budget_and_observed_msd(spark, sf_small):
     """The flagship over sf0.001's events-derived duels: the whole op (ts
     stats, edge build, every iteration) stays within 22 Spark jobs, each
@@ -148,16 +136,12 @@ def test_heroic_job_budget_and_observed_msd(spark, sf_small):
     the explicit keyed squared difference of consecutive score vectors."""
     from pyspark.sql import functions as F
 
-    from big_data_player_analysis_spark.caching import (
-        release_tracked,
-        reset_runtime_memos,
-    )
+    from big_data_player_analysis_spark.caching import release_tracked
     from big_data_player_analysis_spark.operators.joins import keyed_squared_difference
     from big_data_player_analysis_spark.registry.common import duel_edges
 
-    def run(k):
-        reset_runtime_memos()  # every run pays the cold ts-stats jobs
-        return _jobs_for(
+    def run(k):  # every run pays its own ts-stats job
+        return jobs_for(
             spark,
             f"heroic_budget_{k}",
             lambda: heroic_score(duel_edges(spark, sf_small), alpha=0.1, tol=0.1, max_iter=k),

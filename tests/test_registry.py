@@ -52,131 +52,6 @@ def test_query_matches_oracle(spark, sf_small, oracle, name):
     assert normalize(sdf) == normalize(odf)
 
 
-def test_primary_window():
-    """The driver records correctness rows for the first 50 entries only;
-    the reference surface, every engine-scope category representative, the
-    mandated LLM ops, and the streaming tier must all land inside that
-    window (round-1 lesson: 27 entries incl. all of q01-q18 fell outside)."""
-    from big_data_player_analysis_spark.registry import PRIMARY_ORDER
-
-    names = list(SPECS)
-    assert len(PRIMARY_ORDER) == 50
-    assert names[:50] == list(PRIMARY_ORDER)
-    window = set(PRIMARY_ORDER)
-    # reference surface minus the rotated-out twins (q02/q03/q07/q08/q09/
-    # q11/q12/q13/q15/q17/q18 hold green r01-r03 rows on per-entry-unchanged
-    # code; each overlaps a remaining windowed entry — see PRIMARY_ORDER's
-    # rotation notes)
-    rotated_out = {1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 17, 18}
-    assert {f"q{i:02d}" for i in range(1, 19) if i not in rotated_out} <= {
-        n[:3] for n in window
-    }
-    # twenty-ninth/thirtieth rotations: the streaming tier keeps FOUR
-    # in-window rows (tumbling, session_window, stateful_user_stats
-    # rotated out on triple-green/union evidence, hash-unchanged code);
-    # round 6 adds stream_curation_ingest (new) -> FIVE
-    assert sum(n.startswith("stream_") for n in window) == 5
-    # round-4 rotations: dedup_ngram_jaccard -> llm_near_dedup_survivors,
-    # multimodal_image_decode (BMP) -> multimodal_png_decode,
-    # llm_chunk_fixed -> llm_dedup_incremental, llm_pii_redact ->
-    # multimodal_video_decode, llm_unigram_logprob -> llm_bpe_train,
-    # olap_window_topk_per_group -> olap_zorder_key, olap_salted_join ->
-    # olap_key_skew_profile, llm_shard_assign -> olap_hll_shard_merge
-    # (see PRIMARY_ORDER's rotation notes)
-    # nineteenth round-4 rotation: olap_gap_fill, olap_window_distribution,
-    # olap_triangle_count, llm_title_hamming_dedup in; q04_smoothed_avg,
-    # q06_distinct_pairs, sim_bruteforce_topk, dedup_exact out (green r03
-    # rows on unchanged code; see PRIMARY_ORDER's rotation notes)
-    # round-5 rotations: dedup_simhash (changed contract), dedup_simhash_web
-    # (new web-scale operating point) and llm_curation_pipeline (new
-    # end-to-end mega-pipeline) in; olap_gap_fill, olap_zorder_key and
-    # olap_quantile_binning out (green r4 rows on unchanged code, families
-    # still represented — see PRIMARY_ORDER's rotation notes)
-    # round-6 rotations: dedup_minhash_lsh (tracked-persist contract
-    # changed its code on a stale green row), multimodal_phash_dedup (new)
-    # and stream_curation_ingest (new) in; olap_rolling_average,
-    # olap_retention_cohorts and olap_min_cost_supplier out (green r05
-    # rows on round-6-unchanged code, families still represented — see
-    # PRIMARY_ORDER's rotation notes)
-    # round-7 rotations: ann_lsh_pairs + six bench-tag closure changes +
-    # the new multimodal_jpeg_decode in; olap_triangle_count,
-    # olap_tpch_q18_large_orders, olap_unpivot,
-    # llm_quality_percentile_filter, olap_dq_audit, olap_cdc_upsert,
-    # llm_weighted_sample, llm_title_hamming_dedup out (hash-match green
-    # r06 rows on round-7-unchanged code, families still represented —
-    # see PRIMARY_ORDER's rotation notes)
-    # round-8 rotations: the bucketed duels derivation changed the
-    # closures of its consumers, so q00_duel_edges (new, gates the
-    # derivation itself), q18_rank_vector_init and olap_triangle_count
-    # in; multimodal_image_decode, multimodal_frame_sample,
-    # multimodal_features out (hash-green r07 rows on round-8-unchanged
-    # code — decode family stays via png/jpeg/mjpeg, frame walks via
-    # multimodal_video_decode, features via the decode entries' means)
-    # second round-8 rotation: multimodal_ipframe_decode (new — real
-    # inter-frame video, I-frame + sequential residual reconstruction)
-    # in; olap_variant_metrics out (hash-green r07 on round-8-unchanged
-    # code; two-sample experiment stats stay via olap_ks_drift)
-    # third round-8 rotation: olap_window_distribution (rewritten
-    # bucket-parallel) and olap_window_topk_per_group (WindowGroupLimit
-    # contract annotated) in; olap_anomaly_zscore and llm_decontaminate
-    # out (hash-green r07 on round-8-unchanged code — window evidence
-    # stays via the two incoming entries, decontamination runs inside
-    # the in-window llm_curation_pipeline)
-    # round-9 rotation: llm_shard_assign (pos rewritten bucket-parallel)
-    # in; llm_substring_dedup out (hash-green r08 on round-9-unchanged
-    # code; the EXACTSUBSTR machinery runs verbatim inside the in-window
-    # llm_substring_dup_spans)
-    # second round-9 rotation: multimodal_mcframe_decode (new — motion-
-    # compensated P-frames) in; multimodal_video_decode out (hash-green
-    # r08 on round-9-unchanged code; the AVI container walk runs verbatim
-    # inside the in-window mjpeg/ipframe/mcframe paths)
-    # fourth round-9 rotation (the _scatter partition-awareness +
-    # decontaminate hash-join ripple): llm_decontaminate,
-    # llm_substring_dedup, multimodal_image_decode and
-    # multimodal_video_decode back in (changed closures need fresh rows);
-    # olap_funnel_conversion, llm_semantic_dedup, olap_scd2_history and
-    # llm_bigram_surprisal out — the only in-window entries hash-equal to
-    # the round-8-final baseline (green r8 rows on unchanged code), with
-    # family coverage retained via olap_top_paths, dedup_embedding_cosine
-    # + ann_lsh_pairs, olap_cogroup_order_lag and llm_heavy_ngrams_sketch
-    assert {
-        "dedup_simhash", "dedup_simhash_web", "llm_curation_pipeline",
-        "dedup_minhash_lsh", "multimodal_phash_dedup", "stream_curation_ingest",
-        "llm_shard_assign",
-        "llm_near_dedup_survivors", "llm_substring_dup_spans",
-        # fifth round-9 rotation: llm_repetition_profile (new — Gopher
-        # within-doc repetition signals, distributed form) in;
-        # llm_heavy_ngrams_sketch out (hash-green r08 on round-9-unchanged
-        # code; n-gram counting stays via the incoming profile, MG-sketch
-        # semantics via property tests + the local gate)
-        "llm_repetition_profile", "stream_outer_interval_join",
-        "olap_quantile_shard_merge", "olap_ks_drift", "olap_cogroup_order_lag",
-        "olap_top_paths",
-        "multimodal_ipframe_decode",
-        "dedup_embedding_cosine", "dedup_components",
-        "llm_dedup_incremental", "multimodal_mjpeg_decode",
-        "multimodal_mcframe_decode", "llm_bpe_train", "multimodal_image_resize",
-        "llm_line_dedup", "olap_key_skew_profile", "llm_near_dedup_best_quality",
-        "llm_pack_sequences", "llm_bpe_encode", "llm_corpus_curation",
-        "multimodal_png_decode",
-        "olap_partition_pruned_scan", "olap_hll_shard_merge",
-        "ann_lsh_pairs", "multimodal_jpeg_decode",
-        "olap_window_distribution", "olap_window_topk_per_group",
-        "llm_url_canonical_dedup", "multimodal_audio_decode",
-        "q00_duel_edges", "olap_triangle_count",
-        "llm_decontaminate", "llm_substring_dedup",
-        # round-10 rotation (ROTATION.md r10): dedup_exact,
-        # llm_bigram_surprisal and llm_cdc_chunks in on the changed-code
-        # rule; q18_rank_vector_init, multimodal_image_decode and
-        # multimodal_video_decode out (hash-green r09 on round-10-unchanged
-        # code, families covered in-window — q16 runs the rank init
-        # verbatim, png/jpeg/mjpeg cover still-image decode, and the AVI
-        # container walk runs inside mjpeg/ipframe/mcframe)
-        "dedup_exact", "llm_bigram_surprisal", "llm_cdc_chunks",
-        "q16_heroic_iterative",
-    } <= window
-
-
 def test_entry_smoke(spark):
     import importlib.util
 
@@ -203,14 +78,12 @@ def test_registry_doc_is_current():
     from contextlib import redirect_stdout
 
     from tools.registry_doc import first_sentence
-    from big_data_player_analysis_spark.registry import PRIMARY_ORDER
 
     with open(REPO_ROOT / "REGISTRY.md") as f:
         have = f.read()
-    window = set(PRIMARY_ORDER)
     for name, spec in all_queries().items():
         mode = "oracle" if spec.sql else "rows-only"
-        row_frag = f"| {name} | {'yes' if name in window else ''} | {mode} |"
+        row_frag = f"| {name} | {mode} |"
         assert row_frag in have, (
             f"REGISTRY.md stale for {name} — run python tools/registry_doc.py"
         )

@@ -6,6 +6,7 @@ unchanged."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from big_data_player_analysis_spark.catalog import load_table
 from big_data_player_analysis_spark.streaming.mv import (
@@ -126,3 +127,23 @@ def test_time_travel_and_vacuum(spark, sf_small, tmp_path):
 
     with _pytest.raises(ValueError):
         vacuum_mv(mv_dir, keep_last=0)
+
+
+def test_timed_out_stream_raises_instead_of_returning_rows(spark, sf_small, tmp_path):
+    """A stream still draining its source when timeout_sec runs out must
+    raise TimeoutError (with the last progress in the message) and leave no
+    active query behind; stopping it and reading the MV would return a
+    partial aggregate as if it were the whole one."""
+    ev = load_table(spark, sf_small, "events")
+    src = str(tmp_path / "src")
+    ev.repartition(4).write.parquet(src)
+    with pytest.raises(TimeoutError, match="last progress"):
+        stream_incremental_mv(
+            spark,
+            src,
+            str(tmp_path / "mv"),
+            str(tmp_path / "ckpt"),
+            max_files_per_trigger=1,
+            timeout_sec=0.001,
+        )
+    assert not spark.streams.active

