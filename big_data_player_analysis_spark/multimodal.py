@@ -3,31 +3,38 @@
 Media (image/audio/video) is modeled as an opaque ``binary`` payload column
 plus a typed metadata struct — the layout a 100 TB training-data lake uses
 (payload bytes inline in parquet or as object-store references; metadata
-queryable without touching bytes). Decode/feature-extraction runs as an
-Arrow-batched ``mapInPandas`` operator: one Python process per partition,
-whole column batches across the boundary, no per-row pickling.
+queryable without touching bytes). Every decoder runs behind one narrow
+columnar interface, ``_map_payloads``: an Arrow-batched ``mapInPandas``
+over ``(doc_id, payload)``, one Python process per partition, whole column
+batches across the boundary, no per-row pickling, payload bytes never
+shuffled. ``attach_synth_payload`` is the matching ingestion stand-in.
 
-Six decode paths are REAL: audio (stdlib ``wave`` over RIFF/WAVE
-payloads), uncompressed images (numpy over 24-bit BMP, parsed from the
-public spec), COMPRESSED images twice over — PNG (stdlib zlib inflate +
-RFC 2083 per-scanline unfiltering with CRC-checked chunk parsing, no
-imaging library) and baseline JPEG (``decode_jpeg_features`` — ITU-T T.81
-marker walk, standard-table huffman entropy decode, dequantization and a
-float IDCT, stdlib+numpy only) — uncompressed video
-(``decode_video_frames`` — RIFF 'AVI ' container walk with nested
-LISTs/stream headers and per-frame DIB raster parse, one output row per
-frame) and COMPRESSED video (``decode_mjpeg_frames`` — Motion-JPEG AVI:
-the container walk feeding the full baseline-JPEG pipeline per '00dc'
-frame). Only INTER-FRAME codecs (H.264/VP9-class) remain a documented
-stub (``decode_video``; they need an ffmpeg-class library this container
-doesn't ship); ``decode_features`` keeps the deterministic
-pseudo-feature path for the generic opaque-binary case.
+Eight decode paths are REAL, stdlib+numpy only: audio (stdlib ``wave``
+over RIFF/WAVE), uncompressed images (24-bit BMP, parsed from the public
+spec by ``_bmp_pixels``), PNG (zlib inflate + RFC 2083 per-scanline
+unfiltering with CRC-checked chunks), baseline JPEG (``decode_baseline_jpeg``
+— ITU-T T.81 marker walk, standard-table huffman entropy decode,
+dequantization and a float IDCT), and four video codecs over one RIFF
+'AVI ' container reader (``_avi_stream``): uncompressed DIB frames
+(``decode_video_frames``), Motion-JPEG (``decode_mjpeg_frames``), I/P
+temporal prediction (``decode_ipframe_frames``) and motion-compensated
+prediction (``decode_mcframe_frames``). Only standards inter-frame
+BITSTREAMS (H.264/VP9-class) remain a documented stub (``decode_video``;
+they need an ffmpeg-class library this container doesn't ship);
+``decode_features`` keeps the deterministic pseudo-feature path for the
+generic opaque-binary case.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import io
+import math
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,6 +64,66 @@ def attach_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.lit("application/octet-stream").alias("mime"),
         ).alias("meta"),
     )
+
+
+def attach_synth_payload(
+    df: DataFrame, id_col: str, synth: Callable[[int], bytes]
+) -> DataFrame:
+    """Simulate media ingestion: one ``synth(doc_id)`` payload per row of
+    ``df`` (real ingestion lands the bytes from the object store; the
+    downstream decode operator is identical), as an Arrow pandas_udf so
+    synthesis is batch-at-a-time, not per-row pickled.
+
+    The bare ids are round-robined across the session's default
+    parallelism BEFORE synthesis: a compact input (one small parquet file
+    -> one scan partition) otherwise pins the whole synth + decode chain to
+    a single task — profiled as the entire wall of the still-JPEG and MJPEG
+    bench entries (synthesis and decode are CPU-bound Python). Only ids
+    move through the exchange (8 bytes a row); payload bytes are created
+    AFTER it and never shuffle, which is the contract the plan pins assert.
+    A 100 TB input already has thousands of splits and skips the exchange
+    entirely (same heuristic as operators/dedup.py:_scatter)."""
+    from pyspark.sql.functions import pandas_udf
+
+    from big_data_player_analysis_spark.operators.dedup import _scatter
+
+    @pandas_udf("binary")
+    def _synth(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda i: synth(int(i)))
+
+    ids = _scatter(df.select(F.col(id_col).alias("doc_id")))
+    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+
+
+def _map_payloads(
+    media: DataFrame,
+    schema: T.StructType,
+    row_fn: Callable[[int, bytes], Iterable[tuple]],
+) -> DataFrame:
+    """The decode runner: ``row_fn(doc_id, payload)`` yields output tuples
+    in ``schema`` field order — one per image, or one per frame for the
+    1-to-N video explodes. Narrow per-partition map, Arrow-batched."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                row
+                for did, payload in zip(pdf["doc_id"], pdf["payload"])
+                for row in row_fn(int(did), payload)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.mapInPandas(batches, schema)
+
+
+def _rounded_mean(a: np.ndarray) -> float:
+    return round(float(a.astype(np.float64).mean()), 6)
+
+
+def _channel_means(pix: np.ndarray) -> tuple[float, float, float]:
+    """Per-channel means of an (h, w, 3) pixel matrix, in channel order."""
+    return tuple(_rounded_mean(pix[:, :, c]) for c in range(3))
 
 
 def decode_video(payload: bytes):  # pragma: no cover - documented stub
@@ -113,19 +180,12 @@ def sample_frames(media: DataFrame, stride: int = 5) -> DataFrame:
     payload[frame_no::n_frames] standing in for a real decoder; its length
     ceil((n - frame_no) / n_frames) is what the SQL oracle reproduces."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list[int]] = {"doc_id": [], "frame_no": [], "frame_len": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                nf = n % 30 + 1
-                for f0 in range(0, nf, stride):
-                    rows["doc_id"].append(int(did))
-                    rows["frame_no"].append(f0)
-                    rows["frame_len"].append(len(payload[f0::nf]))
-            yield pd.DataFrame(rows, dtype="int64")
+    def rows(did: int, payload: bytes):
+        nf = len(payload) % 30 + 1
+        for f0 in range(0, nf, stride):
+            yield did, f0, len(payload[f0::nf])
 
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return _map_payloads(media, FRAME_SCHEMA, rows)
 
 
 # ----------------------------------------------------- real audio decode
@@ -154,17 +214,12 @@ def synth_wav_payload(doc_id: int) -> bytes:
     alternating) — RMS is exactly A, so the decoded features are
     relationally derivable while the bytes still exercise a genuine codec
     container format."""
-    import io
-    import wave as _wave
-
-    import numpy as np
-
     n, amp = _wav_params(doc_id)
     samples = np.empty(n, dtype="<i2")
     samples[0::2] = amp
     samples[1::2] = -amp
     buf = io.BytesIO()
-    with _wave.open(buf, "wb") as w:
+    with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(AUDIO_SAMPLE_RATE)
@@ -172,75 +227,21 @@ def synth_wav_payload(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _scatter_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Project to the id column and round-robin it across the session's
-    default parallelism BEFORE payload synthesis: a compact input (one
-    small parquet file -> one scan partition) otherwise pins the whole
-    synth + decode chain to a single task — profiled as the entire wall
-    of the still-JPEG and MJPEG bench entries (synthesis and decode are
-    CPU-bound Python). Only bare ids move through the exchange (8 bytes a
-    row); payload bytes are created AFTER it and never shuffle, which is
-    the contract the plan pins assert. A 100 TB input already has
-    thousands of splits and skips the exchange entirely (same heuristic
-    as operators/dedup.py:_scatter)."""
-    from big_data_player_analysis_spark.operators.dedup import _scatter
-
-    return _scatter(df.select(F.col(id_col).alias("doc_id")))
-
-
-def attach_wav_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """Simulate audio ingestion: one WAV payload per row, synthesized
-    deterministically from the id (real ingestion lands the bytes from the
-    object store; the downstream decode operator is identical). Arrow
-    pandas_udf so payload generation is batch-at-a-time, not per-row
-    pickled."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_wav_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
-
-
 def decode_audio_features(media: DataFrame) -> DataFrame:
     """REAL codec decode via mapInPandas: parse each payload's RIFF/WAVE
     header and PCM frames with the stdlib ``wave`` module (no external
-    codec needed), then compute sample stats with numpy. This is the one
-    decode path the environment can run end-to-end — images/video keep the
-    documented decode_image stub. Scale shape: narrow per-partition map,
-    Arrow-batched; payload bytes never shuffle."""
+    codec needed), then compute sample stats with numpy."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import math
-        import wave as _wave
+    def rows(did: int, payload: bytes):
+        with wave.open(io.BytesIO(payload), "rb") as w:
+            sr, nch, nf = w.getframerate(), w.getnchannels(), w.getnframes()
+            pcm = np.frombuffer(w.readframes(nf), dtype="<i2")
+        yield did, sr, nch, nf, math.sqrt(float(np.mean(pcm.astype(np.float64) ** 2)))
 
-        import numpy as np
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "n_channels": [],
-                "n_samples": [], "rms": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with _wave.open(io.BytesIO(payload), "rb") as w:
-                    sr = w.getframerate()
-                    nch = w.getnchannels()
-                    nf = w.getnframes()
-                    pcm = np.frombuffer(w.readframes(nf), dtype="<i2")
-                rows["doc_id"].append(int(did))
-                rows["sample_rate"].append(sr)
-                rows["n_channels"].append(nch)
-                rows["n_samples"].append(nf)
-                rows["rms"].append(math.sqrt(float(np.mean(pcm.astype(np.float64) ** 2))))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+    return _map_payloads(media, AUDIO_FEATURE_SCHEMA, rows)
 
 
-# ----------------------------------------------------- real image decode
+# ------------------------------------------------ BMP / DIB raster layer
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
     [
@@ -253,6 +254,75 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
     ]
 )
 
+#: biCompression of an uncompressed (BI_RGB) BITMAPINFOHEADER
+BI_RGB = b"\x00\x00\x00\x00"
+
+
+def _dib_stride(w: int) -> int:
+    """Bytes per stored 24-bit row: 3 * w padded to a 4-byte boundary."""
+    return (3 * w + 3) // 4 * 4
+
+
+def _bitmap_info(w: int, h: int, size_image: int, compression: bytes = BI_RGB) -> bytes:
+    """A 24-bit BITMAPINFOHEADER (BMP DIB header, AVI video 'strf')."""
+    return struct.pack(
+        "<IiiHH4sIiiII", 40, w, h, 1, 24, compression, size_image, 2835, 2835, 0, 0
+    )
+
+
+def _dib_raster(bgr: np.ndarray) -> bytes:
+    """Image-order (h, w, 3) BGR pixels -> bottom-up 24-bit DIB rows with
+    4-byte stride padding (the BMP pixel array and an AVI 'DIB ' frame)."""
+    h, w, _ = bgr.shape
+    px = np.zeros((h, _dib_stride(w)), dtype=np.uint8)
+    px[:, : 3 * w] = bgr.reshape(h, 3 * w)
+    return px[::-1].tobytes()
+
+
+def _read_dib(buf: bytes, offset: int, w: int, h: int) -> np.ndarray:
+    """Stored-order (h, w, 3) BGR view of a 24-bit DIB raster at ``offset``."""
+    stride = _dib_stride(w)
+    arr = np.frombuffer(buf, dtype=np.uint8, count=stride * h, offset=offset)
+    return arr.reshape(h, stride)[:, : 3 * w].reshape(h, w, 3)
+
+
+def _bmp_file(bgr: np.ndarray) -> bytes:
+    """A REAL 24-bit uncompressed BMP (BITMAPFILEHEADER + BITMAPINFOHEADER
+    + bottom-up BGR rows, per the public BMP spec)."""
+    h, w, _ = bgr.shape
+    data = _dib_raster(bgr)
+    offset = 14 + 40
+    hdr = struct.pack("<2sIHHI", b"BM", offset + len(data), 0, 0, offset)
+    return hdr + _bitmap_info(w, h, len(data)) + data
+
+
+def _bmp_pixels(did: int, payload: bytes) -> np.ndarray:
+    """Parse a 24-bit BMP (magic, pixel-data offset, DIB width/height/bpp)
+    into its (h, w, 3) BGR matrix in IMAGE orientation: a positive
+    biHeight stores rows bottom-up and is flipped, a negative one stores
+    them top-down and is not."""
+    if payload[:2] != b"BM":
+        raise ValueError(f"doc {did}: not a BMP payload")
+    (offset,) = struct.unpack_from("<I", payload, 10)
+    _, w, h, _, bpp = struct.unpack_from("<IiiHH", payload, 14)
+    if bpp != 24:
+        raise ValueError(f"doc {did}: unsupported bpp {bpp}")
+    pix = _read_dib(payload, offset, w, abs(h))
+    return pix[::-1] if h > 0 else pix
+
+
+def _gradient_bgr(w: int, h: int, red: int) -> np.ndarray:
+    """B = x, G = y, R = constant: channel means are exactly (w-1)/2,
+    (h-1)/2 and the constant."""
+    bgr = np.empty((h, w, 3), dtype=np.uint8)
+    bgr[:, :, 0] = np.arange(w)
+    bgr[:, :, 1] = np.arange(h)[:, None]
+    bgr[:, :, 2] = red
+    return bgr
+
+
+# ----------------------------------------------------- real image decode
+
 
 def _bmp_params(doc_id: int) -> tuple[int, int, int]:
     """(width, height, red) for the synthesized image — closed-form in
@@ -262,43 +332,25 @@ def _bmp_params(doc_id: int) -> tuple[int, int, int]:
 
 
 def synth_bmp_payload(doc_id: int) -> bytes:
-    """A REAL 24-bit uncompressed BMP (BITMAPFILEHEADER + BITMAPINFOHEADER
-    + bottom-up BGR rows with 4-byte row padding, per the public BMP
-    spec). Pixels: B = x, G = y, R = constant — channel means are exactly
-    (w-1)/2, (h-1)/2, and the constant, so the decoded features are
-    relationally derivable while the bytes still exercise genuine
-    container parsing (magic, data offset, DIB geometry, stride)."""
-    import struct
-
-    import numpy as np
-
-    w, h, red = _bmp_params(doc_id)
-    stride = (3 * w + 3) // 4 * 4
-    px = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        px[y, 0 : 3 * w : 3] = np.arange(w)  # B = x
-        px[y, 1 : 3 * w : 3] = y             # G = y
-        px[y, 2 : 3 * w : 3] = red           # R = const
-    data = px[::-1].tobytes()  # bottom-up scan order
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    offset = 14 + 40
-    hdr = struct.pack("<2sIHHI", b"BM", offset + len(data), 0, 0, offset)
-    return hdr + dib + data
+    """A REAL 24-bit BMP of the closed-form gradient (B = x, G = y,
+    R = constant): the decoded features are relationally derivable while
+    the bytes still exercise genuine container parsing (magic, data
+    offset, DIB geometry, stride)."""
+    return _bmp_file(_gradient_bgr(*_bmp_params(doc_id)))
 
 
-def attach_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """Simulate image ingestion: one BMP payload per row, synthesized
-    deterministically from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
+def decode_bmp_features(media: DataFrame) -> DataFrame:
+    """REAL image decode via mapInPandas: parse each payload's BMP headers
+    and the padded BGR pixel matrix with numpy, then reduce to geometry +
+    per-channel means. No imaging library needed — BMP's uncompressed
+    layout is decodable from its public spec."""
 
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_bmp_payload(int(i)))
+    def rows(did: int, payload: bytes):
+        pix = _bmp_pixels(did, payload)
+        h, w, _ = pix.shape
+        yield (did, w, h, *_channel_means(pix))
 
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    return _map_payloads(media, IMAGE_FEATURE_SCHEMA, rows)
 
 
 # ------------------------------------------------- real image resize
@@ -313,49 +365,19 @@ def resize_bmp_features(media: DataFrame, factor: int = RESIZE_FACTOR) -> DataFr
     src_idx = (dst_idx * src_len) // dst_len (exact in int arithmetic, so
     an ANSI-SQL oracle can replay it with generate_series), and reduce the
     resized pixel matrix to geometry + per-channel means — the
-    thumbnail/downsample step of an image-corpus pipeline. Scale shape:
-    narrow per-partition map, Arrow-batched; payload bytes never shuffle."""
+    thumbnail/downsample step of an image-corpus pipeline. The row mapping
+    is defined over IMAGE coordinates, so row storage order matters."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows(did: int, payload: bytes):
+        pix = _bmp_pixels(did, payload)
+        h, w, _ = pix.shape
+        w2, h2 = max(1, w // factor), max(1, h // factor)
+        small = pix[(np.arange(h2) * h) // h2][:, (np.arange(w2) * w) // w2]
+        yield (did, w2, h2, *_channel_means(small))
 
-        import numpy as np
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "mean_b": [], "mean_g": [], "mean_r": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[:2] != b"BM":
-                    raise ValueError(f"doc {did}: not a BMP payload")
-                offset = struct.unpack_from("<I", payload, 10)[0]
-                _, w, h, _, bpp = struct.unpack_from("<IiiHH", payload, 14)
-                if bpp != 24:
-                    raise ValueError(f"doc {did}: unsupported bpp {bpp}")
-                nrows = abs(h)
-                stride = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    payload, dtype=np.uint8, count=stride * nrows, offset=offset
-                ).reshape(nrows, stride)
-                # flip bottom-up storage to image order first: the resize
-                # row mapping is defined over IMAGE coordinates
-                pix = arr[:, : 3 * w].reshape(nrows, w, 3)[::-1]
-                w2, h2 = max(1, w // factor), max(1, nrows // factor)
-                ix = (np.arange(w2) * w) // w2
-                iy = (np.arange(h2) * nrows) // h2
-                small = pix[iy][:, ix].astype(np.float64)
-                rows["doc_id"].append(int(did))
-                rows["width"].append(int(w2))
-                rows["height"].append(int(h2))
-                rows["mean_b"].append(round(float(small[:, :, 0].mean()), 6))
-                rows["mean_g"].append(round(float(small[:, :, 1].mean()), 6))
-                rows["mean_r"].append(round(float(small[:, :, 2].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    return _map_payloads(media, IMAGE_FEATURE_SCHEMA, rows)
 
 
 # ------------------------------------------------------ real PNG decode
@@ -393,9 +415,6 @@ def synth_png_payload(doc_id: int) -> bytes:
     BMP path (R constant, G = y, B = x), so the decoded features have an
     exact ANSI-SQL oracle while the bytes round-trip a genuinely
     COMPRESSED container format."""
-    import struct
-    import zlib
-
     w, h, red = _bmp_params(doc_id)
     bpp = 3
     raw_rows = []
@@ -445,19 +464,6 @@ def synth_png_payload(doc_id: int) -> bytes:
     )
 
 
-def attach_png_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """Simulate image ingestion: one PNG payload per row, synthesized
-    deterministically from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_png_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
-
-
 def decode_png_features(media: DataFrame) -> DataFrame:
     """REAL compressed-image decode via mapInPandas, no imaging library:
     chunk walk with CRC32 verification, IHDR geometry parse, zlib inflate
@@ -465,93 +471,171 @@ def decode_png_features(media: DataFrame) -> DataFrame:
     five RFC 2083 filters — None/Sub/Up/Average/Paeth) before reducing the
     RGB matrix to geometry + per-channel means. Covers the part BMP's raw
     array cannot: a genuinely compressed, predictively-filtered container.
-    Scale shape: narrow per-partition map, Arrow-batched; payload bytes
-    never shuffle (plan-pinned like the audio/BMP paths). Only 8-bit
-    truecolor (type 2, non-interlaced) is supported — other color types
-    raise rather than mis-decode."""
+    Only 8-bit truecolor (type 2, non-interlaced) is supported — other
+    color types raise rather than mis-decode."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        import numpy as np
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[:8] != PNG_SIG:
-                    raise ValueError(f"doc {did}: not a PNG payload")
-                pos, ihdr, idat = 8, None, bytearray()
-                while pos < len(payload):
-                    (clen,) = struct.unpack_from(">I", payload, pos)
-                    ctype = payload[pos + 4 : pos + 8]
-                    data = payload[pos + 8 : pos + 8 + clen]
-                    (crc,) = struct.unpack_from(">I", payload, pos + 8 + clen)
-                    if crc != zlib.crc32(ctype + data):
-                        raise ValueError(f"doc {did}: CRC mismatch in {ctype!r}")
-                    if ctype == b"IHDR":
-                        ihdr = struct.unpack(">IIBBBBB", data)
-                    elif ctype == b"IDAT":
-                        idat += data
-                    elif ctype == b"IEND":
-                        break
-                    pos += 12 + clen
-                if ihdr is None:
-                    raise ValueError(f"doc {did}: missing IHDR")
-                w, h, depth, ctype_n, comp, filt, interlace = ihdr
-                if (depth, ctype_n, comp, filt, interlace) != (8, 2, 0, 0, 0):
-                    raise ValueError(
-                        f"doc {did}: unsupported PNG layout {ihdr} "
-                        "(only 8-bit truecolor, non-interlaced)"
-                    )
-                stream = zlib.decompress(bytes(idat))
-                bpp, rowlen = 3, 3 * w
-                if len(stream) != h * (rowlen + 1):
-                    raise ValueError(f"doc {did}: bad IDAT length")
-                pix = np.empty((h, rowlen), dtype=np.uint8)
-                prior = np.zeros(rowlen, dtype=np.int64)
-                for y in range(h):
-                    ftype = stream[y * (rowlen + 1)]
-                    line = np.frombuffer(
-                        stream, dtype=np.uint8,
-                        count=rowlen, offset=y * (rowlen + 1) + 1,
-                    ).astype(np.int64)
-                    raw = np.empty(rowlen, dtype=np.int64)
-                    if ftype == 0:
-                        raw = line
-                    elif ftype == 2:
-                        raw = (line + prior) & 0xFF
+    def rows(did: int, payload: bytes):
+        if payload[:8] != PNG_SIG:
+            raise ValueError(f"doc {did}: not a PNG payload")
+        pos, ihdr, idat = 8, None, bytearray()
+        while pos < len(payload):
+            (clen,) = struct.unpack_from(">I", payload, pos)
+            ctype = payload[pos + 4 : pos + 8]
+            data = payload[pos + 8 : pos + 8 + clen]
+            (crc,) = struct.unpack_from(">I", payload, pos + 8 + clen)
+            if crc != zlib.crc32(ctype + data):
+                raise ValueError(f"doc {did}: CRC mismatch in {ctype!r}")
+            if ctype == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif ctype == b"IDAT":
+                idat += data
+            elif ctype == b"IEND":
+                break
+            pos += 12 + clen
+        if ihdr is None:
+            raise ValueError(f"doc {did}: missing IHDR")
+        w, h, depth, ctype_n, comp, filt, interlace = ihdr
+        if (depth, ctype_n, comp, filt, interlace) != (8, 2, 0, 0, 0):
+            raise ValueError(
+                f"doc {did}: unsupported PNG layout {ihdr} "
+                "(only 8-bit truecolor, non-interlaced)"
+            )
+        stream = zlib.decompress(bytes(idat))
+        bpp, rowlen = 3, 3 * w
+        if len(stream) != h * (rowlen + 1):
+            raise ValueError(f"doc {did}: bad IDAT length")
+        pix = np.empty((h, rowlen), dtype=np.uint8)
+        prior = np.zeros(rowlen, dtype=np.int64)
+        for y in range(h):
+            ftype = stream[y * (rowlen + 1)]
+            line = np.frombuffer(
+                stream, dtype=np.uint8,
+                count=rowlen, offset=y * (rowlen + 1) + 1,
+            ).astype(np.int64)
+            raw = np.empty(rowlen, dtype=np.int64)
+            if ftype == 0:
+                raw = line
+            elif ftype == 2:
+                raw = (line + prior) & 0xFF
+            else:
+                # Sub/Average/Paeth need the just-reconstructed
+                # left neighbor: sequential per byte within the row
+                for i in range(rowlen):
+                    left = raw[i - bpp] if i >= bpp else 0
+                    up = prior[i]
+                    upleft = prior[i - bpp] if i >= bpp else 0
+                    if ftype == 1:
+                        v = line[i] + left
+                    elif ftype == 3:
+                        v = line[i] + (left + up) // 2
+                    elif ftype == 4:
+                        v = line[i] + _paeth(int(left), int(up), int(upleft))
                     else:
-                        # Sub/Average/Paeth need the just-reconstructed
-                        # left neighbor: sequential per byte within the row
-                        for i in range(rowlen):
-                            left = raw[i - bpp] if i >= bpp else 0
-                            up = prior[i]
-                            upleft = prior[i - bpp] if i >= bpp else 0
-                            if ftype == 1:
-                                v = line[i] + left
-                            elif ftype == 3:
-                                v = line[i] + (left + up) // 2
-                            elif ftype == 4:
-                                v = line[i] + _paeth(int(left), int(up), int(upleft))
-                            else:
-                                raise ValueError(f"doc {did}: bad filter {ftype}")
-                            raw[i] = v & 0xFF
-                    pix[y] = raw.astype(np.uint8)
-                    prior = raw
-                rgb = pix.reshape(h, w, 3).astype(np.float64)
-                rows["doc_id"].append(int(did))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["mean_r"].append(round(float(rgb[:, :, 0].mean()), 6))
-                rows["mean_g"].append(round(float(rgb[:, :, 1].mean()), 6))
-                rows["mean_b"].append(round(float(rgb[:, :, 2].mean()), 6))
-            yield pd.DataFrame(rows)
+                        raise ValueError(f"doc {did}: bad filter {ftype}")
+                    raw[i] = v & 0xFF
+            pix[y] = raw.astype(np.uint8)
+            prior = raw
+        yield (did, w, h, *_channel_means(pix.reshape(h, w, 3)))
 
-    return media.mapInPandas(batches, PNG_FEATURE_SCHEMA)
+    return _map_payloads(media, PNG_FEATURE_SCHEMA, rows)
+
+
+# ------------------------------------------------ RIFF 'AVI ' container
+
+VIDEO_FPS = 10
+
+
+def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
+    # RIFF chunks are word-aligned: odd-length data gets a pad byte that
+    # is NOT counted in the stored size
+    pad = b"\x00" if len(data) % 2 else b""
+    return fourcc + struct.pack("<I", len(data)) + data + pad
+
+
+def _riff_list(list_type: bytes, payload: bytes) -> bytes:
+    return _riff_chunk(b"LIST", list_type + payload)
+
+
+def _avi_payload(
+    w: int, h: int, handler: bytes, frames: list[bytes], frame_fourcc: bytes
+) -> bytes:
+    """A REAL AVI container (RIFF 'AVI ' per the public AVI 1.0 / OpenDML
+    spec): LIST hdrl with a MainAVIHeader ('avih'), one video stream's
+    LIST strl (AVIStreamHeader 'strh' fccType='vids' + BITMAPINFOHEADER
+    'strf'), then LIST movi holding one ``frame_fourcc`` chunk per frame.
+    A 'DIB ' handler advertises biCompression BI_RGB; a codec handler is
+    its own biCompression."""
+    nf, max_frame = len(frames), max(len(fr) for fr in frames)
+    # MainAVIHeader: usec/frame, max bytes/sec, padding, flags,
+    # total frames, initial frames, streams, suggested buffer, w, h, rsvd[4]
+    avih = struct.pack(
+        "<10I4I",
+        1_000_000 // VIDEO_FPS, max_frame * VIDEO_FPS, 0, 0,
+        nf, 0, 1, max_frame, w, h, 0, 0, 0, 0,
+    )
+    # AVIStreamHeader: fccType, fccHandler, flags, prio+lang, initial,
+    # scale, rate (rate/scale = fps), start, length, sugg buffer, quality,
+    # sample size, rcFrame
+    strh = struct.pack(
+        "<4s4sIIIIIIIIiI4h",
+        b"vids", handler, 0, 0, 0, 1, VIDEO_FPS, 0, nf,
+        max_frame, 0, 0, 0, 0, w, h,
+    )
+    strf = _bitmap_info(w, h, max_frame, BI_RGB if handler == b"DIB " else handler)
+    strl = _riff_list(b"strl", _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf))
+    hdrl = _riff_list(b"hdrl", _riff_chunk(b"avih", avih) + strl)
+    movi = _riff_list(b"movi", b"".join(_riff_chunk(frame_fourcc, fr) for fr in frames))
+    return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
+
+
+def _avi_stream(did: int, payload: bytes) -> tuple[bytes, int, int, int, list[bytes]]:
+    """Walk a RIFF 'AVI ' payload (word-aligned chunks, nested LISTs) and
+    return the first video stream's (biCompression, width, |height|,
+    bitcount) from its 'strf' BITMAPINFOHEADER plus the '00db'/'00dc'
+    frame chunk bodies of LIST movi. Only a 'vids' stream's strf is read:
+    an audio strf is a WAVEFORMATEX. Fails closed, naming the doc, when a
+    chunk's declared length runs past its enclosing RIFF/LIST, when no
+    video stream format is present, or when the movi list holds fewer or
+    more frames than the 'avih' MainAVIHeader declares."""
+    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+        raise ValueError(f"doc {did}: not an AVI payload")
+    riff_end = 8 + struct.unpack_from("<I", payload, 4)[0]
+    if riff_end > len(payload):
+        raise ValueError(
+            f"doc {did}: chunk b'RIFF' overruns the payload ({riff_end} > {len(payload)} bytes)"
+        )
+    fmt = total = stream_type = None
+    frames: list[bytes] = []
+
+    def walk(pos: int, end: int) -> None:
+        nonlocal fmt, total, stream_type
+        while pos + 8 <= end:
+            fourcc = payload[pos : pos + 4]
+            (clen,) = struct.unpack_from("<I", payload, pos + 4)
+            data, pos = pos + 8, pos + 8 + clen + clen % 2
+            if data + clen > end:
+                raise ValueError(
+                    f"doc {did}: chunk {fourcc!r} at byte {data - 8} overruns its "
+                    f"parent ({data + clen} > {end})"
+                )
+            if fourcc == b"LIST":
+                walk(data + 4, data + clen)
+            elif fourcc == b"avih":
+                (total,) = struct.unpack_from("<I", payload, data + 16)
+            elif fourcc == b"strh":
+                stream_type = payload[data : data + 4]
+            elif fourcc == b"strf" and stream_type == b"vids" and fmt is None:
+                fmt = struct.unpack_from("<iiHH4s", payload, data + 4)
+            elif fourcc in (b"00db", b"00dc"):
+                frames.append(payload[data : data + clen])
+
+    walk(12, riff_end)
+    if fmt is None:
+        raise ValueError(f"doc {did}: missing video stream format (strf)")
+    if total is not None and total != len(frames):
+        raise ValueError(f"doc {did}: avih declares {total} frames, movi has {len(frames)}")
+    w, h, _planes, bpp, compression = fmt
+    return compression, w, abs(h), bpp, frames
 
 
 # ------------------------------------------------------ real video decode
@@ -568,8 +652,6 @@ VIDEO_FRAME_SCHEMA = T.StructType(
     ]
 )
 
-VIDEO_FPS = 10
-
 
 def _avi_params(doc_id: int) -> tuple[int, int, int, int]:
     """(width, height, n_frames, red0) for the synthesized clip —
@@ -580,215 +662,40 @@ def _avi_params(doc_id: int) -> tuple[int, int, int, int]:
 
 
 def synth_avi_payload(doc_id: int) -> bytes:
-    """A REAL AVI container (RIFF 'AVI ' per the public AVI 1.0 / OpenDML
-    spec): LIST hdrl with a MainAVIHeader ('avih'), one video stream's
-    LIST strl (AVIStreamHeader 'strh' fccType='vids' handler='DIB ' +
-    BITMAPINFOHEADER 'strf'), then LIST movi holding one uncompressed
-    '00db' DIB chunk per frame (bottom-up BGR rows, 4-byte stride padding —
-    the same raster layout as BMP). Frame f pixels: B = x, G = y,
-    R = red0 + f, so each frame's channel means are exactly (w-1)/2,
-    (h-1)/2, red0 + f — relationally derivable while the bytes exercise a
-    genuine multi-chunk container with nested LISTs, stream headers, and
-    word-aligned chunk walking."""
-    import struct
-
-    import numpy as np
-
+    """A REAL uncompressed AVI: handler 'DIB ', one '00db' DIB chunk per
+    frame (bottom-up BGR rows, 4-byte stride padding — the BMP raster).
+    Frame f pixels: B = x, G = y, R = red0 + f, so each frame's channel
+    means are exactly (w-1)/2, (h-1)/2, red0 + f — relationally derivable
+    while the bytes exercise a genuine multi-chunk container with nested
+    LISTs, stream headers, and word-aligned chunk walking."""
     w, h, nf, red0 = _avi_params(doc_id)
-    stride = (3 * w + 3) // 4 * 4
-
-    def frame_bytes(f: int) -> bytes:
-        px = np.zeros((h, stride), dtype=np.uint8)
-        for y in range(h):
-            px[y, 0 : 3 * w : 3] = np.arange(w)  # B = x
-            px[y, 1 : 3 * w : 3] = y             # G = y
-            px[y, 2 : 3 * w : 3] = red0 + f      # R = red0 + frame index
-        return px[::-1].tobytes()  # bottom-up scan order, like BMP
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        # RIFF chunks are word-aligned: odd-length data gets a pad byte
-        # that is NOT counted in the stored size
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(list_type: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", list_type + payload)
-
-    frame_size = stride * h
-    # MainAVIHeader: usec/frame, max bytes/sec, padding, flags,
-    # total frames, initial frames, streams, suggested buffer, w, h, rsvd[4]
-    avih = struct.pack(
-        "<10I4I",
-        1_000_000 // VIDEO_FPS, frame_size * VIDEO_FPS, 0, 0,
-        nf, 0, 1, frame_size, w, h, 0, 0, 0, 0,
-    )
-    # AVIStreamHeader: fccType, fccHandler, flags, prio+lang, initial,
-    # scale, rate (rate/scale = fps), start, length, sugg buffer, quality,
-    # sample size, rcFrame
-    strh = struct.pack(
-        "<4s4sIIIIIIIIiI4h",
-        b"vids", b"DIB ", 0, 0, 0, 1, VIDEO_FPS, 0, nf,
-        frame_size, 0, 0, 0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_size, 2835, 2835, 0, 0
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00db", frame_bytes(f)) for f in range(nf)))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def attach_avi_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """Simulate video ingestion: one AVI payload per row, synthesized
-    deterministically from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_avi_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    frames = [_dib_raster(_gradient_bgr(w, h, red0 + f)) for f in range(nf)]
+    return _avi_payload(w, h, b"DIB ", frames, b"00db")
 
 
 def decode_video_frames(media: DataFrame) -> DataFrame:
     """REAL video decode via mapInPandas, no codec library: walk the RIFF
-    'AVI ' container (word-aligned chunks, nested LISTs), read the stream
-    geometry from the 'strf' BITMAPINFOHEADER, cross-check the frame count
-    against the 'avih' MainAVIHeader, then parse every uncompressed '00db'
-    DIB frame in LIST movi with numpy (bottom-up padded-stride BGR, same
-    raster as BMP) and emit ONE ROW PER FRAME with geometry + per-channel
-    means — the frame-extraction explode shape of a video-corpus pipeline.
-    Only uncompressed 24-bit DIB streams are supported; anything else
-    (i.e. a real codec) raises and routes to the documented decode_video
-    hook rather than mis-decoding. Scale shape: narrow per-partition map,
-    Arrow-batched, output fan-out is frames-per-clip; payload bytes never
-    shuffle."""
+    'AVI ' container (_avi_stream), then parse every uncompressed DIB
+    frame with numpy (bottom-up padded-stride BGR, same raster as BMP) and
+    emit ONE ROW PER FRAME with geometry + per-channel means — the
+    frame-extraction explode shape of a video-corpus pipeline. Only
+    uncompressed 24-bit DIB streams are supported; anything else (i.e. a
+    real codec) raises and routes to the documented decode_video hook
+    rather than mis-decoding."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows(did: int, payload: bytes):
+        comp, w, h, bpp, frames = _avi_stream(did, payload)
+        if bpp != 24 or comp != BI_RGB:
+            raise ValueError(
+                f"doc {did}: compressed/non-24bpp stream "
+                f"(bpp={bpp}, comp={comp!r}) — needs decode_video codec hook"
+            )
+        for fno, fr in enumerate(frames):
+            if len(fr) != _dib_stride(w) * h:
+                raise ValueError(f"doc {did}: frame {fno} bad DIB length")
+            yield (did, fno, w, h, *_channel_means(_read_dib(fr, 0, w, h)))
 
-        import numpy as np
-
-        def walk(buf: bytes, pos: int, end: int):
-            """Yield (fourcc, data_start, data_len) over a chunk sequence,
-            honoring RIFF word alignment."""
-            while pos + 8 <= end:
-                fourcc = buf[pos : pos + 4]
-                (clen,) = struct.unpack_from("<I", buf, pos + 4)
-                yield fourcc, pos + 8, clen
-                pos += 8 + clen + (clen % 2)
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_no": [], "width": [], "height": [],
-                "mean_b": [], "mean_g": [], "mean_r": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-                    raise ValueError(f"doc {did}: not an AVI payload")
-                (riff_len,) = struct.unpack_from("<I", payload, 4)
-                w = h = None
-                total_frames = None
-                stream_type = None  # fccType of the most recent strh
-                frames: list[tuple[int, int]] = []
-
-                def scan_list(start: int, end: int):
-                    nonlocal w, h, total_frames, stream_type
-                    for fourcc, dstart, dlen in walk(payload, start, end):
-                        if fourcc == b"LIST":
-                            scan_list(dstart + 4, dstart + dlen)
-                        elif fourcc == b"avih":
-                            total_frames = struct.unpack_from("<I", payload, dstart + 16)[0]
-                        elif fourcc == b"strh":
-                            stream_type = payload[dstart : dstart + 4]
-                        elif fourcc == b"strf" and stream_type == b"vids" and w is None:
-                            # only a VIDEO stream's strf is a
-                            # BITMAPINFOHEADER; an audio strf is a
-                            # WAVEFORMATEX (round-7 ADVICE #2 — first
-                            # video stream wins)
-                            _, bw, bh, _, bpp, comp = struct.unpack_from(
-                                "<IiiHHI", payload, dstart
-                            )
-                            if bpp != 24 or comp != 0:
-                                raise ValueError(
-                                    f"doc {did}: compressed/non-24bpp stream "
-                                    f"(bpp={bpp}, comp={comp}) — needs decode_video codec hook"
-                                )
-                            w, h = bw, abs(bh)
-                        elif fourcc in (b"00db", b"00dc"):
-                            frames.append((dstart, dlen))
-
-                scan_list(12, 8 + riff_len)
-                if w is None or h is None:
-                    raise ValueError(f"doc {did}: missing strf stream format")
-                if total_frames is not None and total_frames != len(frames):
-                    raise ValueError(
-                        f"doc {did}: avih declares {total_frames} frames, movi has {len(frames)}"
-                    )
-                stride = (3 * w + 3) // 4 * 4
-                for fno, (dstart, dlen) in enumerate(frames):
-                    if dlen != stride * h:
-                        raise ValueError(f"doc {did}: frame {fno} bad DIB length")
-                    arr = np.frombuffer(
-                        payload, dtype=np.uint8, count=stride * h, offset=dstart
-                    ).reshape(h, stride)
-                    pix = arr[:, : 3 * w].reshape(h, w, 3).astype(np.float64)
-                    rows["doc_id"].append(int(did))
-                    rows["frame_no"].append(fno)
-                    rows["width"].append(int(w))
-                    rows["height"].append(int(h))
-                    rows["mean_b"].append(round(float(pix[:, :, 0].mean()), 6))
-                    rows["mean_g"].append(round(float(pix[:, :, 1].mean()), 6))
-                    rows["mean_r"].append(round(float(pix[:, :, 2].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, VIDEO_FRAME_SCHEMA)
-
-
-def decode_bmp_features(media: DataFrame) -> DataFrame:
-    """REAL image decode via mapInPandas: parse each payload's BMP headers
-    (magic, pixel-data offset, DIB width/height/bpp) and the padded BGR
-    pixel matrix with numpy, then reduce to geometry + per-channel means.
-    No imaging library needed — BMP's uncompressed layout is decodable
-    from its public spec, which makes it the image counterpart of the
-    stdlib-wave audio path (video keeps the documented decode_image stub
-    for codecs the environment genuinely lacks). Scale shape: narrow
-    per-partition map, Arrow-batched; payload bytes never shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "mean_b": [], "mean_g": [], "mean_r": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[:2] != b"BM":
-                    raise ValueError(f"doc {did}: not a BMP payload")
-                offset = struct.unpack_from("<I", payload, 10)[0]
-                _, w, h, _, bpp = struct.unpack_from("<IiiHH", payload, 14)
-                if bpp != 24:
-                    raise ValueError(f"doc {did}: unsupported bpp {bpp}")
-                nrows = abs(h)
-                stride = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    payload, dtype=np.uint8, count=stride * nrows, offset=offset
-                ).reshape(nrows, stride)
-                pix = arr[:, : 3 * w].reshape(nrows, w, 3).astype(np.float64)
-                rows["doc_id"].append(int(did))
-                rows["width"].append(int(w))
-                rows["height"].append(nrows)
-                rows["mean_b"].append(round(float(pix[:, :, 0].mean()), 6))
-                rows["mean_g"].append(round(float(pix[:, :, 1].mean()), 6))
-                rows["mean_r"].append(round(float(pix[:, :, 2].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    return _map_payloads(media, VIDEO_FRAME_SCHEMA, rows)
 
 
 # ------------------------------------------- perceptual hash (dHash)
@@ -856,41 +763,12 @@ def synth_textured_bmp_payload(doc_id: int) -> bytes:
     thousands of docs and turn any near-dup join quadratic), the scrambled
     texture gives every content id a distinct signature; near-duplicates
     exist ONLY where planted."""
-    import struct
-
-    import numpy as np
-
     _cid, w, h, seed, planted = _texture_params(doc_id)
-    xs = np.arange(w, dtype=np.int64)
-    ys = np.arange(h, dtype=np.int64)[:, None]
-    g = _texture_value(seed, xs, ys)
+    g = _texture_value(seed, np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)[:, None])
     if planted:
         px, py = (3 * w) // 10, (2 * h) // 7
         g[py, px] = (g[py, px] + 128) % 256
-    stride = (3 * w + 3) // 4 * 4
-    rowbuf = np.zeros((h, stride), dtype=np.uint8)
-    for c in range(3):  # B = G = R = g
-        rowbuf[:, c : 3 * w : 3] = g
-    data = rowbuf[::-1].tobytes()  # bottom-up scan order
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    offset = 14 + 40
-    hdr = struct.pack("<2sIHHI", b"BM", offset + len(data), 0, 0, offset)
-    return hdr + dib + data
-
-
-def attach_textured_bmp_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """One textured BMP payload per row, synthesized deterministically
-    from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_textured_bmp_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    return _bmp_file(np.repeat(g[:, :, None], 3, axis=2).astype(np.uint8))
 
 
 DHASH_SCHEMA = T.StructType(
@@ -903,8 +781,8 @@ DHASH_SCHEMA = T.StructType(
 
 def dhash_signatures(media: DataFrame) -> DataFrame:
     """REAL difference-hash over decoded BMP payloads via mapInPandas:
-    parse the container (same header walk as decode_bmp_features), reduce
-    to integer grayscale ((B + G + R) // 3), nearest-neighbor sample a
+    parse the container (_bmp_pixels, image orientation), reduce to
+    integer grayscale ((B + G + R) // 3), nearest-neighbor sample a
     (GW+1) x GH grid with the exact integer mapping src = (dst*len)//n —
     the same mapping resize_bmp_features uses — then emit one bit per
     horizontal neighbor comparison: 126 bits packed little-endian into
@@ -912,43 +790,22 @@ def dhash_signatures(media: DataFrame) -> DataFrame:
     idx // SEG_BITS at position idx % SEG_BITS. The canonical LAION-style
     image fingerprint: payload bytes never shuffle, one narrow
     (doc_id, array<int>) row leaves the scan."""
+    idx = np.arange(DHASH_GW * DHASH_GH, dtype=np.int64)
+    seg_of = idx // DHASH_SEG_BITS
+    weight = 1 << (idx % DHASH_SEG_BITS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows(did: int, payload: bytes):
+        pix = _bmp_pixels(did, payload).astype(np.int64)
+        h, w, _ = pix.shape
+        gray = pix.sum(axis=2) // 3
+        ix = (np.arange(DHASH_GW + 1) * w) // (DHASH_GW + 1)
+        iy = (np.arange(DHASH_GH) * h) // DHASH_GH
+        grid = gray[iy][:, ix]
+        bits = (grid[:, 1:] > grid[:, :-1]).astype(np.int64).flatten()
+        segs = np.bincount(seg_of, weights=bits * weight, minlength=DHASH_N_SEG)
+        yield did, [int(s) for s in segs.astype(np.int64)]
 
-        import numpy as np
-
-        idx = np.arange(DHASH_GW * DHASH_GH, dtype=np.int64)
-        seg_of = idx // DHASH_SEG_BITS
-        weight = 1 << (idx % DHASH_SEG_BITS)
-        for pdf in it:
-            rows: dict[str, list] = {"doc_id": [], "sig": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[:2] != b"BM":
-                    raise ValueError(f"doc {did}: not a BMP payload")
-                offset = struct.unpack_from("<I", payload, 10)[0]
-                _, w, h, _, bpp = struct.unpack_from("<IiiHH", payload, 14)
-                if bpp != 24:
-                    raise ValueError(f"doc {did}: unsupported bpp {bpp}")
-                nrows = abs(h)
-                stride = (3 * w + 3) // 4 * 4
-                arr = np.frombuffer(
-                    payload, dtype=np.uint8, count=stride * nrows, offset=offset
-                ).reshape(nrows, stride)
-                pix = arr[:, : 3 * w].reshape(nrows, w, 3)[::-1].astype(np.int64)
-                gray = pix.sum(axis=2) // 3
-                ix = (np.arange(DHASH_GW + 1) * w) // (DHASH_GW + 1)
-                iy = (np.arange(DHASH_GH) * nrows) // DHASH_GH
-                grid = gray[iy][:, ix]
-                bits = (grid[:, 1:] > grid[:, :-1]).astype(np.int64).flatten()
-                segs = np.bincount(
-                    seg_of, weights=bits * weight, minlength=DHASH_N_SEG
-                ).astype(np.int64)
-                rows["doc_id"].append(int(did))
-                rows["sig"].append([int(s) for s in segs])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, DHASH_SCHEMA)
+    return _map_payloads(media, DHASH_SCHEMA, rows)
 
 
 # ------------------------------------------------- real JPEG decode (baseline)
@@ -1025,8 +882,6 @@ def _jpeg_canonical_codes(bits, vals):
 
 
 def _jpeg_idct_matrix():
-    import numpy as np
-
     M = np.zeros((8, 8))
     for k in range(8):
         for n in range(8):
@@ -1072,8 +927,6 @@ def jpeg_pattern_constants() -> tuple[float, float]:
     quantized-AC(0,1) basis, averaged over the whole block and over its
     x=0 column — the constants the SQL oracle adds per pattern block.
     Pure math in the fixed tables (k_mean = 0.0, k_col0 = 2.0)."""
-    import numpy as np
-
     M = _jpeg_idct_matrix()
     coef = np.zeros((8, 8))
     coef[0, 1] = JPEG_AC_QVAL * JPEG_QUANT_LUMA[0][1]
@@ -1081,17 +934,22 @@ def jpeg_pattern_constants() -> tuple[float, float]:
     return float(pat.mean()), float(pat[:, 0].mean())
 
 
-def synth_jpeg_payload(doc_id: int) -> bytes:
+def _gray_features(g: np.ndarray) -> tuple[float, float]:
+    """(whole-image mean, x%8==0 column mean): the column mean is
+    AC-sensitive — the planted AC basis is antisymmetric, so the
+    whole-image mean alone cannot catch a dropped coefficient."""
+    return _rounded_mean(g), _rounded_mean(g[:, 0::8])
+
+
+def _encode_dc_frame(w: int, h: int, level_fn, with_pattern: bool) -> bytes:
     """A REAL baseline JFIF (SOI, APP0, DQT, SOF0, 2x DHT, SOS, entropy
     data with byte stuffing, EOI): one grayscale component, standard
-    tables, differential DC coding across MCUs, AC run/size coding with
-    EOB per block."""
-    import struct
-
-    w, h, seed = _jpeg_params(doc_id)
+    tables, differential DC coding of the per-block levels ``level_fn(bx,
+    by)``, AC run/size coding with EOB per block, and (optionally) the
+    shared AC(0,1) pattern. Every JPEG payload and video frame of this
+    module is one of these."""
     dc_codes = _jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
     ac_codes = _jpeg_canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
-
     buf = bytearray()
     acc = nbits = 0
 
@@ -1110,7 +968,7 @@ def synth_jpeg_payload(doc_id: int) -> bytes:
     prev_dc = 0
     for by in range(h // 8):
         for bx in range(w // 8):
-            qdc = (_jpeg_block_level(seed, bx, by) - 128) // 2
+            qdc = (level_fn(bx, by) - 128) // 2
             diff = qdc - prev_dc
             prev_dc = qdc
             if diff == 0:
@@ -1122,7 +980,7 @@ def synth_jpeg_payload(doc_id: int) -> bytes:
             write(c, ln)
             if size:
                 write(bits, size)
-            if _jpeg_has_pattern(bx, by):
+            if with_pattern and _jpeg_has_pattern(bx, by):
                 c, ln = ac_codes[0x01]  # run 0, size 1
                 write(c, ln)
                 write(JPEG_AC_QVAL, 1)  # amplitude +1
@@ -1149,51 +1007,27 @@ def synth_jpeg_payload(doc_id: int) -> bytes:
     return bytes(out)
 
 
-def attach_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """One baseline-JFIF payload per row, synthesized deterministically
-    from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_jpeg_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+def synth_jpeg_payload(doc_id: int) -> bytes:
+    """A REAL baseline JFIF of the closed-form block levels, with the
+    AC(0,1) pattern on (bx+by)%3==0 blocks."""
+    w, h, seed = _jpeg_params(doc_id)
+    return _encode_dc_frame(
+        w, h, lambda bx, by: _jpeg_block_level(seed, bx, by), with_pattern=True
+    )
 
 
 def decode_jpeg_features(media: DataFrame) -> DataFrame:
-    """REAL baseline-JPEG decode via mapInPandas, no imaging library:
-    marker walk, DQT/DHT parse (canonical huffman reconstruction), SOF0
-    geometry, entropy decode with 0xFF00 unstuffing, differential-DC +
-    AC run/size coefficient recovery, dequantization, zigzag placement,
-    float separable IDCT, level shift, round + clamp — then geometry +
-    whole-image mean and the x%8==0 column mean (AC-sensitive; the
-    planted AC basis is antisymmetric so the whole-image mean alone
-    cannot catch a dropped coefficient). Only 8-bit single-component
-    baseline, no subsampling — anything else raises rather than
-    mis-decodes (same contract as decode_png_features). Scale shape:
-    narrow Arrow-batched map, payload bytes never shuffle."""
+    """REAL baseline-JPEG decode via mapInPandas, no imaging library
+    (decode_baseline_jpeg), reduced to geometry + whole-image mean and the
+    x%8==0 column mean. Only 8-bit single-component baseline, no
+    subsampling — anything else raises rather than mis-decodes (same
+    contract as decode_png_features)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows(did: int, payload: bytes):
+        w, h, img = decode_baseline_jpeg(did, payload)
+        yield (did, w, h, *_gray_features(img))
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "mean_gray": [], "mean_col0": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, img = decode_baseline_jpeg(int(did), payload)
-                g = img.astype(np.float64)
-                rows["doc_id"].append(int(did))
-                rows["width"].append(int(w))
-                rows["height"].append(int(h))
-                rows["mean_gray"].append(round(float(g.mean()), 6))
-                rows["mean_col0"].append(round(float(g[:, 0::8].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, JPEG_FEATURE_SCHEMA)
+    return _map_payloads(media, JPEG_FEATURE_SCHEMA, rows)
 
 def decode_baseline_jpeg(did: int, payload: bytes):
     """Decode one baseline JFIF payload -> (width, height, uint8 HxW
@@ -1385,80 +1219,11 @@ def _mjpeg_block_level(seed: int, bx: int, by: int, f: int) -> int:
     return 2 * ((seed + 17 * bx + 29 * by + 37 * f) % 80) + 48
 
 
-def _encode_dc_frame(w: int, h: int, level_fn, with_pattern: bool) -> bytes:
-    """One baseline JFIF frame with per-block DC levels from ``level_fn
-    (bx, by)`` and (optionally) the shared AC(0,1) pattern — the encoder
-    machinery of synth_jpeg_payload parameterized so both the MJPEG
-    per-frame images and the I/P codec's residual frames share it."""
-    import struct
-
-    dc_codes = _jpeg_canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
-    buf = bytearray()
-    acc = nbits = 0
-
-    def write(code: int, length: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << length) | (code & ((1 << length) - 1))
-        nbits += length
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            buf.append(byte)
-            if byte == 0xFF:
-                buf.append(0x00)
-            nbits -= 8
-            acc &= (1 << nbits) - 1
-
-    prev_dc = 0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            qdc = (level_fn(bx, by) - 128) // 2
-            diff = qdc - prev_dc
-            prev_dc = qdc
-            if diff == 0:
-                size, bits = 0, 0
-            else:
-                size = abs(diff).bit_length()
-                bits = diff if diff > 0 else diff + (1 << size) - 1
-            c, ln = dc_codes[size]
-            write(c, ln)
-            if size:
-                write(bits, size)
-            if with_pattern and _jpeg_has_pattern(bx, by):
-                c, ln = ac_codes[0x01]
-                write(c, ln)
-                write(JPEG_AC_QVAL, 1)
-            c, ln = ac_codes[0x00]
-            write(c, ln)
-    if nbits:
-        pad = 8 - nbits
-        write((1 << pad) - 1, pad)
-    scan = bytes(buf)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    qz = bytes(JPEG_QUANT_LUMA[r][c] for (r, c) in JPEG_ZIGZAG)
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + qz)
-    out += seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    out += seg(0xC4, b"\x00" + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS))
-    out += seg(0xC4, b"\x10" + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS))
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += scan
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 def synth_mjpeg_avi_payload(doc_id: int) -> bytes:
     """A REAL MJPEG AVI: the same RIFF 'AVI ' structure as
-    synth_avi_payload (LIST hdrl with avih + strl, LIST movi), but the
-    stream handler is 'MJPG', strf advertises biCompression='MJPG', and
-    every movi chunk is a COMPRESSED '00dc' frame holding a complete
-    baseline JFIF image."""
-    import struct
-
+    synth_avi_payload, but the stream handler and biCompression are
+    'MJPG' and every movi chunk is a COMPRESSED '00dc' frame holding a
+    complete baseline JFIF image."""
     w, h, nf, seed = _mjpeg_params(doc_id)
     frames = [
         _encode_dc_frame(
@@ -1468,123 +1233,31 @@ def synth_mjpeg_avi_payload(doc_id: int) -> bytes:
         )
         for f in range(nf)
     ]
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(list_type: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", list_type + payload)
-
-    max_frame = max(len(fr) for fr in frames)
-    avih = struct.pack(
-        "<10I4I",
-        1_000_000 // VIDEO_FPS, max_frame * VIDEO_FPS, 0, 0,
-        nf, 0, 1, max_frame, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIIIIIIIIiI4h",
-        b"vids", b"MJPG", 0, 0, 0, 1, VIDEO_FPS, 0, nf,
-        max_frame, 0, 0, 0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, w, h, 1, 24, b"MJPG", max_frame, 2835, 2835, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def attach_mjpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """One MJPEG-AVI payload per row, synthesized deterministically from
-    the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_mjpeg_avi_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    return _avi_payload(w, h, b"MJPG", frames, b"00dc")
 
 
 def decode_mjpeg_frames(media: DataFrame) -> DataFrame:
     """REAL compressed-video decode via mapInPandas, no codec library:
-    walk the RIFF 'AVI ' container (word-aligned chunks, nested LISTs),
-    verify the stream is MJPG-compressed from the strf BITMAPINFOHEADER,
-    then run the FULL baseline-JPEG pipeline (decode_baseline_jpeg:
-    huffman entropy decode, dequant, IDCT) on every '00dc' chunk — one
-    output row per frame with geometry + the whole-frame and x%8==0
-    column means (the same AC-sensitive feature pair as the still-image
-    path). Scale shape: narrow Arrow-batched map, payload bytes never
-    shuffle; a 1-to-N frame explode like decode_video_frames."""
+    walk the RIFF 'AVI ' container (_avi_stream), verify the stream is
+    MJPG-compressed, then run the FULL baseline-JPEG pipeline
+    (decode_baseline_jpeg: huffman entropy decode, dequant, IDCT) on every
+    '00dc' chunk — one output row per frame with geometry + the
+    whole-frame and x%8==0 column means (the same AC-sensitive feature
+    pair as the still-image path); a 1-to-N frame explode like
+    decode_video_frames."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows(did: int, payload: bytes):
+        comp, *_, frames = _avi_stream(did, payload)
+        if comp != b"MJPG":
+            raise ValueError(
+                f"doc {did}: not an MJPEG stream (biCompression={comp!r}); "
+                "uncompressed DIB video is decode_video_frames' path"
+            )
+        for f, fr in enumerate(frames):
+            w, h, img = decode_baseline_jpeg(did, fr)
+            yield (did, f, w, h, *_gray_features(img))
 
-        import numpy as np
-
-        def walk_frames(did: int, payload: bytes):
-            if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-                raise ValueError(f"doc {did}: not an AVI payload")
-            compression = None
-            stream_type = None  # fccType of the most recent strh
-            frames: list[bytes] = []
-
-            def scan(start: int, end: int) -> None:
-                nonlocal compression, stream_type
-                pos = start
-                while pos + 8 <= end:
-                    fourcc = payload[pos : pos + 4]
-                    (clen,) = struct.unpack_from("<I", payload, pos + 4)
-                    data_start = pos + 8
-                    if fourcc == b"LIST":
-                        scan(data_start + 4, data_start + clen)
-                    elif fourcc == b"strh":
-                        stream_type = payload[data_start : data_start + 4]
-                    elif fourcc == b"strf":
-                        # biCompression only exists in a VIDEO stream's
-                        # BITMAPINFOHEADER; an audio strf is a WAVEFORMATEX
-                        # whose offset 16 is garbage for this purpose.
-                        # First video stream wins (round-7 ADVICE #2).
-                        if stream_type == b"vids" and compression is None:
-                            compression = payload[data_start + 16 : data_start + 20]
-                    elif fourcc == b"00dc":
-                        frames.append(payload[data_start : data_start + clen])
-                    pos = data_start + clen + (clen % 2)
-
-            scan(12, 12 + struct.unpack_from("<I", payload, 4)[0] - 4)
-            if compression != b"MJPG":
-                raise ValueError(
-                    f"doc {did}: not an MJPEG stream "
-                    f"(biCompression={compression!r}); uncompressed DIB "
-                    "video is decode_video_frames' path"
-                )
-            return frames
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_no": [], "width": [], "height": [],
-                "mean_gray": [], "mean_col0": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for f, fr in enumerate(walk_frames(int(did), bytes(payload))):
-                    w, h, img = decode_baseline_jpeg(int(did), fr)
-                    g = img.astype(np.float64)
-                    rows["doc_id"].append(int(did))
-                    rows["frame_no"].append(f)
-                    rows["width"].append(int(w))
-                    rows["height"].append(int(h))
-                    rows["mean_gray"].append(round(float(g.mean()), 6))
-                    rows["mean_col0"].append(round(float(g[:, 0::8].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, MJPEG_FRAME_SCHEMA)
+    return _map_payloads(media, MJPEG_FRAME_SCHEMA, rows)
 
 
 # ----------------------------------------- INTER-FRAME video (I/P codec)
@@ -1619,13 +1292,29 @@ def _ipframe_block_level(seed: int, bx: int, by: int, f: int) -> int:
     return 2 * ((seed + 17 * bx + 29 * by + 37 * f) % 40) + 88
 
 
+def _check_p_geometry(did: int, f: int, wh: tuple[int, int], ref: tuple[int, int]) -> None:
+    if wh != ref:
+        raise ValueError(
+            f"doc {did}: P-frame {f} geometry {wh[0]}x{wh[1]} != reference {ref[0]}x{ref[1]}"
+        )
+
+
+def _check_p_recon(did: int, f: int, recon: np.ndarray) -> np.ndarray:
+    """A reconstructed pixel outside [0, 255] means prediction drift
+    (wrong reference frame, corrupt chunk): raise rather than clip into
+    silently wrong pixels."""
+    if recon.min() < 0 or recon.max() > 255:
+        raise ValueError(
+            f"doc {did}: P-frame {f} reconstruction out of range — prediction drift"
+        )
+    return recon
+
+
 def synth_ipframe_avi_payload(doc_id: int) -> bytes:
     """A RIFF 'AVI ' container with biCompression='IPDC': '00dc' chunk 0
     is the intra JFIF frame (with the AC(0,1) pattern on (bx+by)%3==0
     blocks — carried forward by prediction, never re-coded), chunks 1..n
     are JFIF-coded DC-only residual frames."""
-    import struct
-
     w, h, nf, seed = _ipframe_params(doc_id)
     frames = [
         _encode_dc_frame(
@@ -1645,49 +1334,7 @@ def synth_ipframe_avi_payload(doc_id: int) -> bytes:
                 with_pattern=False,
             )
         )
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(list_type: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", list_type + payload)
-
-    max_frame = max(len(fr) for fr in frames)
-    avih = struct.pack(
-        "<10I4I",
-        1_000_000 // VIDEO_FPS, max_frame * VIDEO_FPS, 0, 0,
-        nf, 0, 1, max_frame, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIIIIIIIIiI4h",
-        b"vids", b"IPDC", 0, 0, 0, 1, VIDEO_FPS, 0, nf,
-        max_frame, 0, 0, 0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, w, h, 1, 24, b"IPDC", max_frame, 2835, 2835, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def attach_ipframe_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """One I/P-coded AVI payload per row, synthesized deterministically
-    from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_ipframe_avi_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    return _avi_payload(w, h, b"IPDC", frames, b"00dc")
 
 
 def decode_ipframe_frames(media: DataFrame) -> DataFrame:
@@ -1697,85 +1344,28 @@ def decode_ipframe_frames(media: DataFrame) -> DataFrame:
     prev + (residual - 128) — a temporal fold that cannot fan out across
     frames, which is the defining execution shape of inter-frame codecs
     (and why the per-DOCUMENT axis, not the frame axis, is this
-    operator's parallelism unit). Reconstruction is fail-closed: a
-    residual pushing any pixel outside [0, 255] means prediction drift
-    (wrong reference frame, corrupt chunk) and raises rather than
-    clipping into silently wrong pixels. One output row per frame, same
-    feature pair as the MJPEG path."""
+    operator's parallelism unit). Reconstruction is fail-closed on
+    geometry drift and on prediction drift. One output row per frame,
+    same feature pair as the MJPEG path."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def rows(did: int, payload: bytes):
+        comp, *_, frames = _avi_stream(did, payload)
+        if comp != b"IPDC":
+            raise ValueError(
+                f"doc {did}: not an I/P-coded stream (biCompression={comp!r}); "
+                "MJPG is decode_mjpeg_frames' path"
+            )
+        prev = None
+        for f, fr in enumerate(frames):
+            w, h, img = decode_baseline_jpeg(did, fr)
+            if prev is None:
+                prev, ref = img.astype(np.int64), (w, h)
+            else:
+                _check_p_geometry(did, f, (w, h), ref)
+                prev = _check_p_recon(did, f, prev + (img.astype(np.int64) - 128))
+            yield (did, f, w, h, *_gray_features(prev))
 
-        import numpy as np
-
-        def walk_frames(did: int, payload: bytes):
-            if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-                raise ValueError(f"doc {did}: not an AVI payload")
-            compression = None
-            stream_type = None
-            frames: list[bytes] = []
-
-            def scan(start: int, end: int) -> None:
-                nonlocal compression, stream_type
-                pos = start
-                while pos + 8 <= end:
-                    fourcc = payload[pos : pos + 4]
-                    (clen,) = struct.unpack_from("<I", payload, pos + 4)
-                    data_start = pos + 8
-                    if fourcc == b"LIST":
-                        scan(data_start + 4, data_start + clen)
-                    elif fourcc == b"strh":
-                        stream_type = payload[data_start : data_start + 4]
-                    elif fourcc == b"strf":
-                        if stream_type == b"vids" and compression is None:
-                            compression = payload[data_start + 16 : data_start + 20]
-                    elif fourcc == b"00dc":
-                        frames.append(payload[data_start : data_start + clen])
-                    pos = data_start + clen + (clen % 2)
-
-            scan(12, 12 + struct.unpack_from("<I", payload, 4)[0] - 4)
-            if compression != b"IPDC":
-                raise ValueError(
-                    f"doc {did}: not an I/P-coded stream "
-                    f"(biCompression={compression!r}); MJPG is "
-                    "decode_mjpeg_frames' path"
-                )
-            return frames
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_no": [], "width": [], "height": [],
-                "mean_gray": [], "mean_col0": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                prev = None
-                pw = ph = None
-                for f, fr in enumerate(walk_frames(int(did), bytes(payload))):
-                    w, h, img = decode_baseline_jpeg(int(did), fr)
-                    if f == 0:
-                        prev, pw, ph = img.astype(np.int64), w, h
-                    else:
-                        if (w, h) != (pw, ph):
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} geometry "
-                                f"{w}x{h} != reference {pw}x{ph}"
-                            )
-                        prev = prev + (img.astype(np.int64) - 128)
-                        if prev.min() < 0 or prev.max() > 255:
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} reconstruction "
-                                "out of range — prediction drift"
-                            )
-                    g = prev.astype(np.float64)
-                    rows["doc_id"].append(int(did))
-                    rows["frame_no"].append(f)
-                    rows["width"].append(int(w))
-                    rows["height"].append(int(h))
-                    rows["mean_gray"].append(round(float(g.mean()), 6))
-                    rows["mean_col0"].append(round(float(g[:, 0::8].mean()), 6))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, MJPEG_FRAME_SCHEMA)
+    return _map_payloads(media, MJPEG_FRAME_SCHEMA, rows)
 
 
 # ------------------------------- MOTION-COMPENSATED video (MC P-frames)
@@ -1819,7 +1409,7 @@ def _mc_motion(seed: int, bx: int, by: int, f: int, nbx: int, nby: int) -> tuple
     zeroed when the source would fall outside the frame. The decoder
     itself handles ARBITRARY pixel displacements (the payload stores
     pixels, not blocks — non-aligned vectors are covered by a hand-built
-    payload in tests/test_multimodal.py); alignment here keeps the DuckDB
+    payload in tests/test_llm_ops.py); alignment here keeps the DuckDB
     oracle closed-form over flat block levels."""
     mx = (seed + 5 * bx + 7 * by + 11 * f) % 3 - 1
     my = (seed + 3 * bx + 13 * by + 17 * f) % 3 - 1
@@ -1836,8 +1426,6 @@ def synth_mcframe_avi_payload(doc_id: int) -> bytes:
     Levels reuse _ipframe_block_level's even [88, 166] range, so every
     residual lands losslessly in [50, 206] and reconstruction is exact:
     the decoder's output frame f IS the planted level field of frame f."""
-    import struct
-
     w, h, nf, seed = _mcframe_params(doc_id)
     nbx, nby = w // 8, h // 8
     frames = [
@@ -1862,49 +1450,7 @@ def synth_mcframe_avi_payload(doc_id: int) -> bytes:
                 mx, my = _mc_motion(seed, bx, by, f, nbx, nby)
                 mv += struct.pack("bb", 8 * mx, 8 * my)
         frames.append(bytes(mv) + _encode_dc_frame(w, h, _res, with_pattern=False))
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(list_type: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", list_type + payload)
-
-    max_frame = max(len(fr) for fr in frames)
-    avih = struct.pack(
-        "<10I4I",
-        1_000_000 // VIDEO_FPS, max_frame * VIDEO_FPS, 0, 0,
-        nf, 0, 1, max_frame, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIIIIIIIIiI4h",
-        b"vids", b"MCDC", 0, 0, 0, 1, VIDEO_FPS, 0, nf,
-        max_frame, 0, 0, 0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, w, h, 1, 24, b"MCDC", max_frame, 2835, 2835, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", fr) for fr in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def attach_mcframe_payload(df: DataFrame, id_col: str) -> DataFrame:
-    """One motion-compensated AVI payload per row, synthesized
-    deterministically from the id (Arrow pandas_udf, batch-at-a-time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_mcframe_avi_payload(int(i)))
-
-    ids = _scatter_ids(df, id_col)
-    return ids.select("doc_id", _synth("doc_id").alias("payload"))
+    return _avi_payload(w, h, b"MCDC", frames, b"00dc")
 
 
 def decode_mcframe_frames(media: DataFrame) -> DataFrame:
@@ -1922,115 +1468,49 @@ def decode_mcframe_frames(media: DataFrame) -> DataFrame:
     mean_gray plus the mean motion vector actually parsed from the
     bitstream (0.0 for the I-frame)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        def walk_frames(did: int, payload: bytes):
-            if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-                raise ValueError(f"doc {did}: not an AVI payload")
-            compression = None
-            stream_type = None
-            frames: list[bytes] = []
-
-            def scan(start: int, end: int) -> None:
-                nonlocal compression, stream_type
-                pos = start
-                while pos + 8 <= end:
-                    fourcc = payload[pos : pos + 4]
-                    (clen,) = struct.unpack_from("<I", payload, pos + 4)
-                    data_start = pos + 8
-                    if fourcc == b"LIST":
-                        scan(data_start + 4, data_start + clen)
-                    elif fourcc == b"strh":
-                        stream_type = payload[data_start : data_start + 4]
-                    elif fourcc == b"strf":
-                        if stream_type == b"vids" and compression is None:
-                            compression = payload[data_start + 16 : data_start + 20]
-                    elif fourcc == b"00dc":
-                        frames.append(payload[data_start : data_start + clen])
-                    pos = data_start + clen + (clen % 2)
-
-            scan(12, 12 + struct.unpack_from("<I", payload, 4)[0] - 4)
-            if compression != b"MCDC":
+    def rows(did: int, payload: bytes):
+        comp, *_, frames = _avi_stream(did, payload)
+        if comp != b"MCDC":
+            raise ValueError(
+                f"doc {did}: not a motion-compensated stream (biCompression={comp!r}); "
+                "IPDC is decode_ipframe_frames' path"
+            )
+        prev = None
+        for f, fr in enumerate(frames):
+            if prev is None:
+                w, h, img = decode_baseline_jpeg(did, fr)
+                prev = img.astype(np.int64)
+                yield did, f, w, h, _rounded_mean(prev), 0.0, 0.0
+                continue
+            if fr[:4] != b"MV01":
+                raise ValueError(f"doc {did}: P-frame {f} missing MV01 vector table")
+            nbx, nby = w // 8, h // 8
+            tbl_end = 4 + 2 * nbx * nby
+            mv = np.frombuffer(fr[4:tbl_end], dtype=np.int8)
+            if mv.size != 2 * nbx * nby:
                 raise ValueError(
-                    f"doc {did}: not a motion-compensated stream "
-                    f"(biCompression={compression!r}); IPDC is "
-                    "decode_ipframe_frames' path"
+                    f"doc {did}: P-frame {f} vector table holds {mv.size // 2} "
+                    f"blocks, geometry needs {nbx * nby}"
                 )
-            return frames
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_no": [], "width": [], "height": [],
-                "mean_gray": [], "mv_dx_mean": [], "mv_dy_mean": [],
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                prev = None
-                pw = ph = None
-                for f, fr in enumerate(walk_frames(int(did), bytes(payload))):
-                    if f == 0:
-                        w, h, img = decode_baseline_jpeg(int(did), fr)
-                        prev, pw, ph = img.astype(np.int64), w, h
-                        dxm = dym = 0.0
-                    else:
-                        if fr[:4] != b"MV01":
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} missing MV01 "
-                                "vector table"
-                            )
-                        nbx, nby = pw // 8, ph // 8
-                        tbl_len = 2 * nbx * nby
-                        mv = np.frombuffer(
-                            fr[4 : 4 + tbl_len], dtype=np.int8
+            mv = mv.reshape(nby, nbx, 2).astype(np.int64)
+            rw, rh, res = decode_baseline_jpeg(did, fr[tbl_end:])
+            _check_p_geometry(did, f, (rw, rh), (w, h))
+            recon = np.empty_like(prev)
+            for by in range(nby):
+                for bx in range(nbx):
+                    dx, dy = int(mv[by, bx, 0]), int(mv[by, bx, 1])
+                    sx, sy = bx * 8 + dx, by * 8 + dy
+                    if not (0 <= sx <= w - 8 and 0 <= sy <= h - 8):
+                        raise ValueError(
+                            f"doc {did}: P-frame {f} block ({bx},{by}) motion "
+                            f"({dx},{dy}) reads outside the reference frame"
                         )
-                        if mv.size != 2 * nbx * nby:
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} vector table "
-                                f"holds {mv.size // 2} blocks, geometry "
-                                f"needs {nbx * nby}"
-                            )
-                        mv = mv.reshape(nby, nbx, 2).astype(np.int64)
-                        w, h, res = decode_baseline_jpeg(int(did), fr[4 + tbl_len:])
-                        if (w, h) != (pw, ph):
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} geometry "
-                                f"{w}x{h} != reference {pw}x{ph}"
-                            )
-                        recon = np.empty_like(prev)
-                        for by in range(nby):
-                            for bx in range(nbx):
-                                dx, dy = int(mv[by, bx, 0]), int(mv[by, bx, 1])
-                                sx, sy = bx * 8 + dx, by * 8 + dy
-                                if not (0 <= sx <= pw - 8 and 0 <= sy <= ph - 8):
-                                    raise ValueError(
-                                        f"doc {did}: P-frame {f} block "
-                                        f"({bx},{by}) motion ({dx},{dy}) "
-                                        "reads outside the reference frame"
-                                    )
-                                pred = prev[sy : sy + 8, sx : sx + 8]
-                                recon[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                                    pred
-                                    + res[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8].astype(np.int64)
-                                    - 128
-                                )
-                        if recon.min() < 0 or recon.max() > 255:
-                            raise ValueError(
-                                f"doc {did}: P-frame {f} reconstruction "
-                                "out of range — prediction drift"
-                            )
-                        prev = recon
-                        dxm = round(float(mv[:, :, 0].mean()), 6)
-                        dym = round(float(mv[:, :, 1].mean()), 6)
-                    g = prev.astype(np.float64)
-                    rows["doc_id"].append(int(did))
-                    rows["frame_no"].append(f)
-                    rows["width"].append(int(pw))
-                    rows["height"].append(int(ph))
-                    rows["mean_gray"].append(round(float(g.mean()), 6))
-                    rows["mv_dx_mean"].append(dxm)
-                    rows["mv_dy_mean"].append(dym)
-            yield pd.DataFrame(rows)
+                    block = res[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8].astype(np.int64)
+                    recon[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                        prev[sy : sy + 8, sx : sx + 8] + block - 128
+                    )
+            prev = _check_p_recon(did, f, recon)
+            dxm, dym = (_rounded_mean(mv[:, :, k]) for k in (0, 1))
+            yield did, f, w, h, _rounded_mean(prev), dxm, dym
 
-    return media.mapInPandas(batches, MCFRAME_SCHEMA)
+    return _map_payloads(media, MCFRAME_SCHEMA, rows)

@@ -1435,15 +1435,14 @@ def multimodal_audio_q(spark: SparkSession, sf: str) -> DataFrame:
     with numpy. The synthesis is closed-form in doc_id (square wave of
     amplitude A has RMS exactly A; sign parity is irrelevant since squares
     are equal), so the decoded output is fully relationally derivable while
-    the bytes still round-trip a real container format — the one decode
-    path this environment can run end-to-end (images/video keep the
-    documented stub)."""
+    the bytes still round-trip a real container format."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_wav_payload,
+        attach_synth_payload,
         decode_audio_features,
+        synth_wav_payload,
     )
 
-    media = attach_wav_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_wav_payload)
     return decode_audio_features(media)
 
 
@@ -1469,11 +1468,12 @@ def multimodal_image_q(spark: SparkSession, sf: str) -> DataFrame:
     derivable while the bytes still round-trip a real container format
     (multimodal.py:synth_bmp_payload/decode_bmp_features)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_bmp_payload,
+        attach_synth_payload,
         decode_bmp_features,
+        synth_bmp_payload,
     )
 
-    media = attach_bmp_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_bmp_payload)
     return decode_bmp_features(media)
 
 
@@ -1509,11 +1509,12 @@ def multimodal_resize_q(spark: SparkSession, sf: str) -> DataFrame:
     reduced to resized geometry + channel means — the thumbnail step of an
     image-corpus pipeline (multimodal.py:resize_bmp_features)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_bmp_payload,
+        attach_synth_payload,
         resize_bmp_features,
+        synth_bmp_payload,
     )
 
-    media = attach_bmp_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_bmp_payload)
     return resize_bmp_features(media)
 
 
@@ -1542,11 +1543,12 @@ def multimodal_png_q(spark: SparkSession, sf: str) -> DataFrame:
     the round-3 verdict's last plumbing-only-image gap
     (multimodal.py:synth_png_payload/decode_png_features)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_png_payload,
+        attach_synth_payload,
         decode_png_features,
+        synth_png_payload,
     )
 
-    media = attach_png_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_png_payload)
     return decode_png_features(media)
 
 
@@ -1602,11 +1604,12 @@ def multimodal_jpeg_q(spark: SparkSession, sf: str) -> DataFrame:
     mean_col0 (k=2.0/pattern block) and a DC error shifts everything
     (multimodal.py:synth_jpeg_payload/decode_jpeg_features)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_jpeg_payload,
+        attach_synth_payload,
         decode_jpeg_features,
+        synth_jpeg_payload,
     )
 
-    media = attach_jpeg_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_jpeg_payload)
     return decode_jpeg_features(media)
 
 
@@ -1665,11 +1668,12 @@ def multimodal_mjpeg_q(spark: SparkSession, sf: str) -> DataFrame:
     that is honestly implementable from the public specs alone
     (multimodal.py:synth_mjpeg_avi_payload/decode_mjpeg_frames)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_mjpeg_payload,
+        attach_synth_payload,
         decode_mjpeg_frames,
+        synth_mjpeg_avi_payload,
     )
 
-    media = attach_mjpeg_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_mjpeg_avi_payload)
     return decode_mjpeg_frames(media)
 
 
@@ -1735,11 +1739,12 @@ def multimodal_ipframe_q(spark: SparkSession, sf: str) -> DataFrame:
     parallelism is per-DOCUMENT (the frame fold is inherently
     sequential), which is the right axis for a video corpus."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_ipframe_payload,
+        attach_synth_payload,
         decode_ipframe_frames,
+        synth_ipframe_avi_payload,
     )
 
-    media = attach_ipframe_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_ipframe_avi_payload)
     return decode_ipframe_frames(media)
 
 
@@ -1817,11 +1822,12 @@ def multimodal_mcframe_q(spark: SparkSession, sf: str) -> DataFrame:
     parallelism is per-DOCUMENT (the motion-compensated fold is
     inherently sequential across frames)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_mcframe_payload,
+        attach_synth_payload,
         decode_mcframe_frames,
+        synth_mcframe_avi_payload,
     )
 
-    media = attach_mcframe_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_mcframe_avi_payload)
     return decode_mcframe_frames(media)
 
 
@@ -1853,11 +1859,12 @@ def multimodal_video_q(spark: SparkSession, sf: str) -> DataFrame:
     (multimodal.py:synth_avi_payload/decode_video_frames; compressed
     codecs keep the documented decode_video hook)."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_avi_payload,
+        attach_synth_payload,
         decode_video_frames,
+        synth_avi_payload,
     )
 
-    media = attach_avi_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_avi_payload)
     return decode_video_frames(media)
 
 
@@ -3363,12 +3370,13 @@ def multimodal_phash_q(spark: SparkSession, sf: str) -> DataFrame:
     all pairs (proving blocking completeness); the scale oracle replays
     the blocked form."""
     from big_data_player_analysis_spark.multimodal import (
-        attach_textured_bmp_payload,
+        attach_synth_payload,
         dhash_signatures,
+        synth_textured_bmp_payload,
     )
     from big_data_player_analysis_spark.operators.dedup import hamming_sig_pairs
 
-    media = attach_textured_bmp_payload(t(spark, sf, "documents"), "doc_id")
+    media = attach_synth_payload(t(spark, sf, "documents"), "doc_id", synth_textured_bmp_payload)
     return hamming_sig_pairs(
         dhash_signatures(media), "doc_id", "sig", max_dist=6
     )

@@ -701,13 +701,14 @@ def test_bmp_decode_roundtrip(spark):
     closed forms, including non-multiple-of-4 strides (w=5 -> padding)."""
     from big_data_player_analysis_spark.multimodal import (
         _bmp_params,
-        attach_bmp_payload,
+        attach_synth_payload,
         decode_bmp_features,
+        synth_bmp_payload,
     )
 
     df = spark.createDataFrame([(i,) for i in (0, 1, 9, 14, 300)], "doc_id long")
     out = {r.doc_id: r for r in decode_bmp_features(
-        attach_bmp_payload(df, "doc_id")
+        attach_synth_payload(df, "doc_id", synth_bmp_payload)
     ).collect()}
     for i in (0, 1, 9, 14, 300):
         w, h, red = _bmp_params(i)
@@ -734,14 +735,15 @@ def test_bmp_resize_nearest_neighbor(spark):
 
     from big_data_player_analysis_spark.multimodal import (
         _bmp_params,
-        attach_bmp_payload,
+        attach_synth_payload,
         resize_bmp_features,
+        synth_bmp_payload,
     )
 
     ids = (0, 1, 9, 14, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {r.doc_id: r for r in resize_bmp_features(
-        attach_bmp_payload(df, "doc_id")
+        attach_synth_payload(df, "doc_id", synth_bmp_payload)
     ).collect()}
     for i in ids:
         w, h, red = _bmp_params(i)
@@ -757,6 +759,42 @@ def test_bmp_resize_nearest_neighbor(spark):
         assert r.mean_r == float(red)
 
 
+def _top_down_bmp(bmp: bytes) -> bytes:
+    """The same image stored top-down: rows reversed, biHeight negated."""
+    import struct
+
+    (offset,) = struct.unpack_from("<I", bmp, 10)
+    w, h = struct.unpack_from("<ii", bmp, 18)
+    stride = (3 * w + 3) // 4 * 4
+    rows = [bmp[offset + r * stride : offset + (r + 1) * stride] for r in range(h)]
+    out = bytearray(bmp[:offset] + b"".join(reversed(rows)))
+    struct.pack_into("<i", out, 22, -h)
+    return bytes(out)
+
+
+def test_bmp_top_down_decodes_like_bottom_up(spark):
+    """A negative biHeight is legal and means rows are stored top-down.
+    Resize and dHash depend on row order, so each must return the same
+    output for the same image in either orientation."""
+    from big_data_player_analysis_spark.multimodal import (
+        decode_bmp_features,
+        dhash_signatures,
+        resize_bmp_features,
+        synth_textured_bmp_payload,
+    )
+
+    schema = "doc_id long, payload binary"
+    ids = (2, 7, 51)
+    bottom_up = spark.createDataFrame(
+        [(i, synth_textured_bmp_payload(i)) for i in ids], schema
+    )
+    top_down = spark.createDataFrame(
+        [(i, _top_down_bmp(synth_textured_bmp_payload(i))) for i in ids], schema
+    )
+    for op in (decode_bmp_features, resize_bmp_features, dhash_signatures):
+        assert sorted(op(top_down).collect()) == sorted(op(bottom_up).collect()), op
+
+
 def test_png_decode_roundtrip(spark):
     """Real PNG decode: decoded geometry + channel means must equal the
     closed forms. The synth cycles filter types y % 5, so ids with h >= 5
@@ -764,14 +802,15 @@ def test_png_decode_roundtrip(spark):
     2083 filters including Average and Paeth."""
     from big_data_player_analysis_spark.multimodal import (
         _bmp_params,
-        attach_png_payload,
+        attach_synth_payload,
         decode_png_features,
+        synth_png_payload,
     )
 
     ids = (0, 1, 3, 9, 14, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {r.doc_id: r for r in decode_png_features(
-        attach_png_payload(df, "doc_id")
+        attach_synth_payload(df, "doc_id", synth_png_payload)
     ).collect()}
     assert any(_bmp_params(i)[1] >= 5 for i in ids)  # Paeth really exercised
     for i in ids:
@@ -809,18 +848,48 @@ def test_png_decode_rejects_non_png(spark):
         decode_png_features(df).collect()
 
 
+#: sha256 over the concatenated synth_*_payload(i) bytes for i in
+#: (0, 1, 5, 51, 300). The decode oracles check features, not bytes, so
+#: these digests are what catches a writer change that alters the
+#: container but still decodes to the same features.
+SYNTH_PAYLOAD_SHA256 = {
+    "synth_wav_payload": "99be224720b52a0f7561a5c1107fb01852e476a2d6be4026122cf10a970dff3b",
+    "synth_bmp_payload": "5f198f36413e4e1e123b14e38ab0f946b58f352f8b93298700b68aa440a48bd0",
+    "synth_textured_bmp_payload": "023834ed2ba6240e124772063fe3ed995ec8914b7986f33bb0e3e51e8a5d36f4",
+    "synth_png_payload": "80414109ed9fda7c5d7ecb153bb8753259ec66b346c97fc3289be1cac9692120",
+    "synth_avi_payload": "4a325e859002aab430f5a3b2d8518a3a484637dc92bcf912b61875ad2f4457c3",
+    "synth_jpeg_payload": "3b4d1b79fd251288bacebb5202136c66e9c5eb7e0a1b9399f8f5c68e1ccd6308",
+    "synth_mjpeg_avi_payload": "24eb92196b95dda0ce95e1f0e6dc7ec671addfd14c85520b90dd1a767b22b81e",
+    "synth_ipframe_avi_payload": "57b1c763102e40e6bddffc4b9fd5032fc1f31a2450a87682676e0bfad6f14e41",
+    "synth_mcframe_avi_payload": "0ab7a249f8b3abea45a6de6d4525a715f85c1d2e56615090d81836b450882087",
+}
+
+
+def test_synth_payload_bytes_pinned():
+    import hashlib
+
+    from big_data_player_analysis_spark import multimodal
+
+    for name, want in SYNTH_PAYLOAD_SHA256.items():
+        digest = hashlib.sha256()
+        for i in (0, 1, 5, 51, 300):
+            digest.update(getattr(multimodal, name)(i))
+        assert digest.hexdigest() == want, name
+
+
 def test_video_decode_roundtrip(spark):
     """Real AVI decode: one row per frame, geometry + channel means equal
     the closed forms (B = x, G = y, R = red0 + frame index)."""
     from big_data_player_analysis_spark.multimodal import (
         _avi_params,
-        attach_avi_payload,
+        attach_synth_payload,
         decode_video_frames,
+        synth_avi_payload,
     )
 
     ids = (0, 1, 5, 12, 255, 9999)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    out = decode_video_frames(attach_avi_payload(df, "doc_id")).collect()
+    out = decode_video_frames(attach_synth_payload(df, "doc_id", synth_avi_payload)).collect()
     assert len(out) == sum(_avi_params(i)[2] for i in ids)  # explode fan-out
     for r in out:
         w, h, nf, red0 = _avi_params(r.doc_id)
@@ -830,33 +899,93 @@ def test_video_decode_roundtrip(spark):
         assert r.mean_r == float(red0 + r.frame_no)
 
 
+def _movi_chunks(payload: bytes) -> tuple[int, list[int]]:
+    """(offset of LIST movi, offsets of the chunks inside it)."""
+    import struct
+
+    movi = payload.find(b"movi") - 8
+    (mlen,) = struct.unpack_from("<I", payload, movi + 4)
+    pos, chunks = movi + 12, []
+    while pos < movi + 8 + mlen:
+        chunks.append(pos)
+        (clen,) = struct.unpack_from("<I", payload, pos + 4)
+        pos += 8 + clen + clen % 2
+    return movi, chunks
+
+
+def _drop_last_frame(payload: bytes) -> bytes:
+    """Cut the last chunk out of an AVI's movi list and fix up the RIFF
+    and movi LIST sizes: structurally valid, one frame short of avih."""
+    import struct
+
+    movi, chunks = _movi_chunks(payload)
+    last = chunks[-1]
+    (clen,) = struct.unpack_from("<I", payload, last + 4)
+    cut = 8 + clen + clen % 2
+    out = bytearray(payload[:last] + payload[last + cut :])
+    struct.pack_into("<I", out, 4, len(out) - 8)
+    (mlen,) = struct.unpack_from("<I", out, movi + 4)
+    struct.pack_into("<I", out, movi + 4, mlen - cut)
+    return bytes(out)
+
+
 def test_video_decode_checks_frame_count(spark):
     """A movi list missing a declared frame must raise (avih dwTotalFrames
-    cross-check), not silently emit fewer rows."""
+    cross-check), not silently emit fewer rows — in the DIB, MJPEG, IPDC
+    and MCDC decoders alike."""
+    from big_data_player_analysis_spark.multimodal import (
+        decode_ipframe_frames,
+        decode_mcframe_frames,
+        decode_mjpeg_frames,
+        decode_video_frames,
+        synth_avi_payload,
+        synth_ipframe_avi_payload,
+        synth_mcframe_avi_payload,
+        synth_mjpeg_avi_payload,
+    )
+
+    cases = (  # doc 5 declares 6, 2, 4 and 4 frames
+        (synth_avi_payload, decode_video_frames, 6),
+        (synth_mjpeg_avi_payload, decode_mjpeg_frames, 2),
+        (synth_ipframe_avi_payload, decode_ipframe_frames, 4),
+        (synth_mcframe_avi_payload, decode_mcframe_frames, 4),
+    )
+    for synth, decode, nf in cases:
+        bad = _drop_last_frame(synth(5))
+        df = spark.createDataFrame([(5, bad)], "doc_id long, payload binary")
+        with pytest.raises(Exception, match=f"doc 5: avih declares {nf} frames"):
+            decode(df).collect()
+
+
+def test_avi_chunk_overrun_names_doc(spark):
+    """A chunk whose declared length runs past its enclosing RIFF/LIST
+    must raise an error naming the doc, not whatever numpy or struct
+    raises on a short buffer."""
     import struct
 
     from big_data_player_analysis_spark.multimodal import (
+        decode_mjpeg_frames,
         decode_video_frames,
         synth_avi_payload,
+        synth_mjpeg_avi_payload,
     )
 
-    good = synth_avi_payload(5)  # 6 frames
-    # truncate the last '00db' chunk off the movi list and fix up the
-    # RIFF + movi LIST sizes so the container stays structurally valid
-    last = good.rfind(b"00db")
-    (flen,) = struct.unpack_from("<I", good, last + 4)
-    cut = 8 + flen + (flen % 2)
-    bad = bytearray(good[: last] + good[last + cut :])
-    struct.pack_into("<I", bad, 4, len(bad) - 8)
-    movi = bad.find(b"LIST", 12, len(bad))
-    while bad[movi + 8 : movi + 12] != b"movi":
-        (ll,) = struct.unpack_from("<I", bad, movi + 4)
-        movi = bad.find(b"LIST", movi + 8 + ll)
-    (mlen,) = struct.unpack_from("<I", bad, movi + 4)
-    struct.pack_into("<I", bad, movi + 4, mlen - cut)
-    df = spark.createDataFrame([(1, bytes(bad))], "doc_id long, payload binary")
-    with pytest.raises(Exception, match="declares 6 frames"):
-        decode_video_frames(df).collect()
+    schema = "doc_id long, payload binary"
+    for synth, decode in (
+        (synth_avi_payload, decode_video_frames),
+        (synth_mjpeg_avi_payload, decode_mjpeg_frames),
+    ):
+        df = spark.createDataFrame([(5, synth(5)[:-7])], schema)
+        with pytest.raises(Exception, match=r"doc 5: chunk b'RIFF' overruns"):
+            decode(df).collect()
+    # a frame chunk that claims more bytes than its LIST movi holds
+    bad = bytearray(synth_mjpeg_avi_payload(5))
+    last = _movi_chunks(bytes(bad))[1][-1]
+    (clen,) = struct.unpack_from("<I", bad, last + 4)
+    struct.pack_into("<I", bad, last + 4, clen + 16)
+    df = spark.createDataFrame([(5, bytes(bad))], schema)
+    with pytest.raises(Exception, match=r"doc 5: chunk b'00dc' at byte \d+ overruns its parent"):
+        decode_mjpeg_frames(df).collect()
 
 
 def test_video_decode_rejects_compressed_and_non_avi(spark):
@@ -1284,14 +1413,17 @@ class TestAudioDecode:
 
     def test_roundtrip_known_signal(self, spark):
         from big_data_player_analysis_spark.multimodal import (
-            attach_wav_payload,
+            attach_synth_payload,
             decode_audio_features,
+            synth_wav_payload,
         )
 
         df = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
         out = {
             r.doc_id: r
-            for r in decode_audio_features(attach_wav_payload(df, "doc_id")).collect()
+            for r in decode_audio_features(
+                attach_synth_payload(df, "doc_id", synth_wav_payload)
+            ).collect()
         }
         for i in range(16):
             r = out[i]
@@ -1579,8 +1711,9 @@ def test_phash_dhash_matches_pure_python(spark):
         DHASH_GW,
         _texture_params,
         _texture_value,
-        attach_textured_bmp_payload,
+        attach_synth_payload,
         dhash_signatures,
+        synth_textured_bmp_payload,
     )
 
     from big_data_player_analysis_spark.multimodal import (
@@ -1592,7 +1725,9 @@ def test_phash_dhash_matches_pure_python(spark):
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     got = {
         r.doc_id: list(r.sig)
-        for r in dhash_signatures(attach_textured_bmp_payload(df, "doc_id")).collect()
+        for r in dhash_signatures(
+            attach_synth_payload(df, "doc_id", synth_textured_bmp_payload)
+        ).collect()
     }
     for i in ids:
         _cid, w, h, seed, planted = _texture_params(i)
@@ -1623,13 +1758,14 @@ def test_phash_pairs_find_all_planted(spark, sf_small):
     from big_data_player_analysis_spark.catalog import load_table
     from big_data_player_analysis_spark.multimodal import (
         PHASH_PLANT_MOD,
-        attach_textured_bmp_payload,
+        attach_synth_payload,
         dhash_signatures,
+        synth_textured_bmp_payload,
     )
     from big_data_player_analysis_spark.operators.dedup import hamming_sig_pairs
 
     docs = load_table(spark, sf_small, "documents").select("doc_id")
-    sigs = dhash_signatures(attach_textured_bmp_payload(docs, "doc_id"))
+    sigs = dhash_signatures(attach_synth_payload(docs, "doc_id", synth_textured_bmp_payload))
     pairs = hamming_sig_pairs(sigs, "doc_id", "sig", max_dist=6)
     got = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
 
@@ -1680,16 +1816,17 @@ def test_jpeg_decode_roundtrip(spark):
         _jpeg_block_level,
         _jpeg_has_pattern,
         _jpeg_params,
-        attach_jpeg_payload,
+        attach_synth_payload,
         decode_jpeg_features,
         jpeg_pattern_constants,
+        synth_jpeg_payload,
     )
 
     k_mean, k_col0 = jpeg_pattern_constants()
     ids = (0, 1, 2, 3, 17, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {r.doc_id: r for r in decode_jpeg_features(
-        attach_jpeg_payload(df, "doc_id")
+        attach_synth_payload(df, "doc_id", synth_jpeg_payload)
     ).collect()}
     for i in ids:
         w, h, seed = _jpeg_params(i)
@@ -1745,16 +1882,19 @@ def test_mjpeg_decode_roundtrip(spark):
         _jpeg_has_pattern,
         _mjpeg_block_level,
         _mjpeg_params,
-        attach_mjpeg_payload,
+        attach_synth_payload,
         decode_mjpeg_frames,
         jpeg_pattern_constants,
+        synth_mjpeg_avi_payload,
     )
 
     k_mean, k_col0 = jpeg_pattern_constants()
     ids = (0, 1, 2, 5, 17, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {}
-    for r in decode_mjpeg_frames(attach_mjpeg_payload(df, "doc_id")).collect():
+    for r in decode_mjpeg_frames(
+        attach_synth_payload(df, "doc_id", synth_mjpeg_avi_payload)
+    ).collect():
         out[(r.doc_id, r.frame_no)] = r
     for i in ids:
         w, h, nf, seed = _mjpeg_params(i)
@@ -1858,16 +1998,19 @@ def test_ipframe_decode_roundtrip(spark):
         _ipframe_block_level,
         _ipframe_params,
         _jpeg_has_pattern,
-        attach_ipframe_payload,
+        attach_synth_payload,
         decode_ipframe_frames,
         jpeg_pattern_constants,
+        synth_ipframe_avi_payload,
     )
 
     k_mean, k_col0 = jpeg_pattern_constants()
     ids = (0, 1, 2, 5, 17, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {}
-    for r in decode_ipframe_frames(attach_ipframe_payload(df, "doc_id")).collect():
+    for r in decode_ipframe_frames(
+        attach_synth_payload(df, "doc_id", synth_ipframe_avi_payload)
+    ).collect():
         out[(r.doc_id, r.frame_no)] = r
     for i in ids:
         w, h, nf, seed = _ipframe_params(i)
@@ -1959,14 +2102,17 @@ def test_mcframe_decode_roundtrip(spark):
         _ipframe_block_level,
         _mc_motion,
         _mcframe_params,
-        attach_mcframe_payload,
+        attach_synth_payload,
         decode_mcframe_frames,
+        synth_mcframe_avi_payload,
     )
 
     ids = (0, 1, 2, 5, 17, 300)
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     out = {}
-    for r in decode_mcframe_frames(attach_mcframe_payload(df, "doc_id")).collect():
+    for r in decode_mcframe_frames(
+        attach_synth_payload(df, "doc_id", synth_mcframe_avi_payload)
+    ).collect():
         out[(r.doc_id, r.frame_no)] = r
     for i in ids:
         w, h, nf, seed = _mcframe_params(i)

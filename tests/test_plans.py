@@ -380,7 +380,7 @@ def test_jaccard_verify_no_nested_loop_and_primitive_intersect(spark, specs):
 def _assert_only_id_scatter(p: str) -> None:
     """Payload bytes never shuffle: the ONLY allowed exchange is the
     single pre-synthesis round-robin of bare doc ids
-    (multimodal._scatter_ids) — everything above it (synth pandas_udf,
+    (multimodal.attach_synth_payload) — everything above it (synth pandas_udf,
     decode mapInPandas) must stay narrow. On a many-split production
     input the scatter heuristic skips even that exchange."""
     import re

@@ -26,8 +26,9 @@ from big_data_player_analysis_spark.catalog import load_table
 from big_data_player_analysis_spark.functions.text import word_ngrams
 from big_data_player_analysis_spark.functions.urls import canonicalize_url
 from big_data_player_analysis_spark.multimodal import (
-    attach_wav_payload,
+    attach_synth_payload,
     decode_audio_features,
+    synth_wav_payload,
 )
 from big_data_player_analysis_spark.operators.chunking import (
     cdc_chunks,
@@ -306,12 +307,13 @@ def _title_hamming_probe(docs):
 
 def _phash_probe(docs):
     from big_data_player_analysis_spark.multimodal import (
-        attach_textured_bmp_payload,
+        attach_synth_payload,
         dhash_signatures,
+        synth_textured_bmp_payload,
     )
     from big_data_player_analysis_spark.operators.dedup import hamming_sig_pairs
 
-    media = attach_textured_bmp_payload(docs.select("doc_id"), "doc_id")
+    media = attach_synth_payload(docs.select("doc_id"), "doc_id", synth_textured_bmp_payload)
     return hamming_sig_pairs(
         dhash_signatures(media), "doc_id", "sig", max_dist=6
     )
@@ -319,38 +321,50 @@ def _phash_probe(docs):
 
 def _jpeg_probe(docs):
     from big_data_player_analysis_spark.multimodal import (
-        attach_jpeg_payload,
+        attach_synth_payload,
         decode_jpeg_features,
+        synth_jpeg_payload,
     )
 
-    return decode_jpeg_features(attach_jpeg_payload(docs.select("doc_id"), "doc_id"))
+    return decode_jpeg_features(
+        attach_synth_payload(docs.select("doc_id"), "doc_id", synth_jpeg_payload)
+    )
 
 
 def _mjpeg_probe(docs):
     from big_data_player_analysis_spark.multimodal import (
-        attach_mjpeg_payload,
+        attach_synth_payload,
         decode_mjpeg_frames,
+        synth_mjpeg_avi_payload,
     )
 
-    return decode_mjpeg_frames(attach_mjpeg_payload(docs.select("doc_id"), "doc_id"))
+    return decode_mjpeg_frames(
+        attach_synth_payload(docs.select("doc_id"), "doc_id", synth_mjpeg_avi_payload)
+    )
 
 
 def _ipframe_probe(docs):
     from big_data_player_analysis_spark.multimodal import (
-        attach_ipframe_payload,
+        attach_synth_payload,
         decode_ipframe_frames,
+        synth_ipframe_avi_payload,
     )
 
-    return decode_ipframe_frames(attach_ipframe_payload(docs.select("doc_id"), "doc_id"))
+    return decode_ipframe_frames(
+        attach_synth_payload(docs.select("doc_id"), "doc_id", synth_ipframe_avi_payload)
+    )
 
 
 def _mcframe_probe(docs):
     from big_data_player_analysis_spark.multimodal import (
-        attach_mcframe_payload,
+        attach_synth_payload,
         decode_mcframe_frames,
+        synth_mcframe_avi_payload,
     )
 
-    return decode_mcframe_frames(attach_mcframe_payload(docs.select("doc_id"), "doc_id"))
+    return decode_mcframe_frames(
+        attach_synth_payload(docs.select("doc_id"), "doc_id", synth_mcframe_avi_payload)
+    )
 
 
 def _bpe_probe(docs):
@@ -482,8 +496,9 @@ def probe_set(docs, emb, events=None, factor=1, events_path=None, docs_path=None
     )
     from big_data_player_analysis_spark.operators.similarity import ann_lsh_buckets
     from big_data_player_analysis_spark.multimodal import (
-        attach_png_payload,
+        attach_synth_payload,
         decode_png_features,
+        synth_png_payload,
     )
 
     extra = {}
@@ -730,7 +745,7 @@ def probe_set(docs, emb, events=None, factor=1, events_path=None, docs_path=None
             docs, "doc_id", "text"
         ),
         "multimodal_png_decode": lambda: decode_png_features(
-            attach_png_payload(docs, "doc_id")
+            attach_synth_payload(docs, "doc_id", synth_png_payload)
         ),
         # baseline JFIF huffman+IDCT decode: narrow per-doc Arrow map like
         # the PNG row (payload bytes never leave the scan split), so the
@@ -832,7 +847,7 @@ def probe_set(docs, emb, events=None, factor=1, events_path=None, docs_path=None
         "olap_zorder_key": lambda: _zorder_probe(docs),
         "olap_cdc_upsert": lambda: _cdc_probe(docs),
         "multimodal_audio_decode": lambda: decode_audio_features(
-            attach_wav_payload(docs, "doc_id")
+            attach_synth_payload(docs, "doc_id", synth_wav_payload)
         ),
         # dHash decode is a narrow per-doc map (payload bytes never leave
         # the scan); pair volume is planted-density-constant (one planted
