@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_player_analysis_spark.registry import all_queries
-from big_data_player_analysis_spark.session import get_spark
+from big_data_player_analysis_spark.session import get_spark, host_cpus
 
 # Headline set: one per operator family (agg, dedup, join chain, scalar map,
 # TPC-H Q1, windows, sessionization, top-k, iterative flagship) plus the
@@ -97,7 +97,7 @@ def main() -> None:
 
     clean_scratch()  # reclaim dead-run scratch/spill before the session starts
     # ambient load BEFORE our own session exists: during the run the 1-min
-    # loadavg is dominated by this bench's own 32 executor threads, so the
+    # loadavg is dominated by this bench's own executor threads, so the
     # pre-session sample is the only clean external-contention signal
     ambient_load = round(os.getloadavg()[0], 2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,7 +138,7 @@ def main() -> None:
 
         return v * 1.0
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     spark.range(0, cpus * 100, 1, cpus).select(
         _warm_py(F.col("id").cast("double"))
     ).write.format("noop").mode("overwrite").save()

@@ -235,7 +235,10 @@ def decode_audio_features(media: DataFrame) -> DataFrame:
     def rows(did: int, payload: bytes):
         with wave.open(io.BytesIO(payload), "rb") as w:
             sr, nch, nf = w.getframerate(), w.getnchannels(), w.getnframes()
-            pcm = np.frombuffer(w.readframes(nf), dtype="<i2")
+            raw = w.readframes(nf)
+        if len(raw) < 2 * nf * nch:
+            raise ValueError(f"doc {did}: WAV declares {nf * nch} samples, PCM holds {len(raw) // 2}")
+        pcm = np.frombuffer(raw, dtype="<i2")
         yield did, sr, nch, nf, math.sqrt(float(np.mean(pcm.astype(np.float64) ** 2)))
 
     return _map_payloads(media, AUDIO_FEATURE_SCHEMA, rows)
@@ -303,10 +306,15 @@ def _bmp_pixels(did: int, payload: bytes) -> np.ndarray:
     them top-down and is not."""
     if payload[:2] != b"BM":
         raise ValueError(f"doc {did}: not a BMP payload")
+    if len(payload) < 54:
+        raise ValueError(f"doc {did}: BMP header truncated")
     (offset,) = struct.unpack_from("<I", payload, 10)
     _, w, h, _, bpp = struct.unpack_from("<IiiHH", payload, 14)
     if bpp != 24:
         raise ValueError(f"doc {did}: unsupported bpp {bpp}")
+    need = offset + _dib_stride(w) * abs(h)
+    if need > len(payload):
+        raise ValueError(f"doc {did}: BMP pixel data needs {need} bytes, payload has {len(payload)}")
     pix = _read_dib(payload, offset, w, abs(h))
     return pix[::-1] if h > 0 else pix
 
@@ -479,8 +487,10 @@ def decode_png_features(media: DataFrame) -> DataFrame:
             raise ValueError(f"doc {did}: not a PNG payload")
         pos, ihdr, idat = 8, None, bytearray()
         while pos < len(payload):
-            (clen,) = struct.unpack_from(">I", payload, pos)
+            clen = int.from_bytes(payload[pos : pos + 4], "big")
             ctype = payload[pos + 4 : pos + 8]
+            if pos + 12 + clen > len(payload):
+                raise ValueError(f"doc {did}: chunk {ctype!r} at byte {pos} overruns the payload")
             data = payload[pos + 8 : pos + 8 + clen]
             (crc,) = struct.unpack_from(">I", payload, pos + 8 + clen)
             if crc != zlib.crc32(ctype + data):
@@ -492,6 +502,8 @@ def decode_png_features(media: DataFrame) -> DataFrame:
             elif ctype == b"IEND":
                 break
             pos += 12 + clen
+        else:
+            raise ValueError(f"doc {did}: missing IEND")
         if ihdr is None:
             raise ValueError(f"doc {did}: missing IHDR")
         w, h, depth, ctype_n, comp, filt, interlace = ihdr
@@ -1054,13 +1066,15 @@ def decode_baseline_jpeg(did: int, payload: bytes):
     w = h = None
     dc_sel = ac_sel = 0
     scan_start = None
-    while pos < len(payload):
+    while pos + 1 < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"doc {did}: bad marker sync at {pos}")
         marker = payload[pos + 1]
         if marker == 0xD9:
             break
-        (ln,) = struct.unpack_from(">H", payload, pos + 2)
+        ln = int.from_bytes(payload[pos + 2 : pos + 4], "big")
+        if ln < 2 or pos + 2 + ln > len(payload):
+            raise ValueError(f"doc {did}: segment 0xFF{marker:02x} at byte {pos} overruns the payload")
         data = payload[pos + 4 : pos + 2 + ln]
         if marker == 0xDB:
             i = 0
@@ -1110,6 +1124,8 @@ def decode_baseline_jpeg(did: int, payload: bytes):
     def read(n: int) -> int:
         nonlocal spos, acc, nbits
         while nbits < n:
+            if spos + 1 >= len(stream):  # a whole scan ends with EOI's 2 bytes
+                raise ValueError(f"doc {did}: scan data ends at byte {scan_start + spos}")
             b = stream[spos]
             spos += 1
             if b == 0xFF:

@@ -116,12 +116,12 @@ def stream_near_dedup_ingest(
 
 def _read_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame:
     """The accumulated survivors with their partition-derived batch id;
-    empty (correct schema) before the first batch lands."""
+    empty (correct schema) before the first batch lands. The schema is
+    declared, so building the read runs no footer-inference job."""
     import glob as _glob
 
+    schema = "doc_id long, text string, source string, group_size long, batch int"
     parts = _glob.glob(f"{corpus_dir}/batch=*")
     if not parts:
-        return spark.createDataFrame(
-            [], "doc_id long, text string, source string, group_size long, batch int"
-        )
-    return spark.read.option("basePath", corpus_dir).parquet(*parts)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", corpus_dir).parquet(*parts)

@@ -1,6 +1,6 @@
 """Incremental materialized-view maintenance: a per-key aggregate kept
-current by merging each micro-batch's PARTIAL aggregate into the snapshot,
-never rescanning history.
+current by merging each micro-batch into the snapshot's partials, never
+rescanning history.
 
 The lakehouse pattern behind every "keep this rollup fresh" pipeline: the
 MV stores only MERGEABLE partials (count, sum, min, max — the same algebra
@@ -44,40 +44,33 @@ def _read_snapshot(spark: SparkSession, mv_dir: str, below_batch: int) -> DataFr
     """Latest committed MV version with id < below_batch; empty (correct
     schema) when none exists. Reading strictly below the current id is
     what makes crash replay idempotent: a failed attempt's own write is
-    never visible as input state."""
-    versions = []
-    for p in _glob.glob(f"{mv_dir}/v=*"):
-        try:
-            versions.append(int(p.rsplit("=", 1)[1]))
-        except ValueError:
-            continue
-    prior = [v for v in versions if v < below_batch]
+    never visible as input state. The schema is declared, so building the
+    read runs no footer-inference job."""
+    prior = [v for v in mv_versions(mv_dir) if v < below_batch]
     if not prior:
         return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(f"{mv_dir}/v={max(prior)}")
-
-
-def _partial_agg(batch: DataFrame) -> DataFrame:
-    return batch.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
+    return spark.read.schema(_STATE_SCHEMA).parquet(f"{mv_dir}/v={prior[-1]}")
 
 
 def apply_batch(
     spark: SparkSession, batch: DataFrame, batch_id: int, mv_dir: str
 ) -> None:
-    """Merge one micro-batch into the MV: partial-agg the batch, combine
-    with the prior snapshot by re-aggregating the mergeable partials
-    (sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes), write the
-    result as version <batch_id>. The snapshot side is O(keys) and the
-    union re-agg is one partial-agged exchange on the key."""
-    partial = _partial_agg(batch)
-    prev = _read_snapshot(spark, mv_dir, batch_id)
+    """Merge one micro-batch into the MV and write the result as version
+    <batch_id>. Each batch row enters as a one-row partial (count 1 and
+    sum = min = max = value), so one aggregation of its union with the
+    prior snapshot merges both (sum-of-counts, sum-of-sums, min-of-mins,
+    max-of-maxes): one exchange on the key, whose map side pre-aggregates
+    the batch, and the snapshot side is O(keys)."""
+    rows = batch.select(
+        "event_type",
+        F.lit(1).cast("long").alias("n_events"),
+        F.col("value").alias("sum_value"),
+        F.col("value").alias("min_value"),
+        F.col("value").alias("max_value"),
+    )
     merged = (
-        prev.unionByName(partial)
+        _read_snapshot(spark, mv_dir, batch_id)
+        .unionByName(rows)
         .groupBy("event_type")
         .agg(
             F.sum("n_events").alias("n_events"),

@@ -848,6 +848,24 @@ def test_png_decode_rejects_non_png(spark):
         decode_png_features(df).collect()
 
 
+@pytest.mark.parametrize("synth, decode, did, cut", [
+    ("synth_wav_payload", "decode_audio_features", 5, 8),
+    ("synth_bmp_payload", "decode_bmp_features", 5, 7),
+    ("synth_png_payload", "decode_png_features", 5, 7),
+    ("synth_jpeg_payload", "decode_jpeg_features", 9, 40),
+])
+def test_truncated_payload_raises_naming_the_doc(spark, synth, decode, did, cut):
+    """A payload cut short must raise an error naming the doc, never decode
+    the samples or pixels that are left, and never surface a bare numpy,
+    struct or IndexError from the parser."""
+    from big_data_player_analysis_spark import multimodal
+
+    bad = getattr(multimodal, synth)(did)[:-cut]
+    df = spark.createDataFrame([(did, bad)], "doc_id long, payload binary")
+    with pytest.raises(Exception, match=f"ValueError: doc {did}: "):
+        getattr(multimodal, decode)(df).collect()
+
+
 #: sha256 over the concatenated synth_*_payload(i) bytes for i in
 #: (0, 1, 5, 51, 300). The decode oracles check features, not bytes, so
 #: these digests are what catches a writer change that alters the

@@ -9,6 +9,7 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.streaming.ingest import (
@@ -120,3 +121,35 @@ def test_incremental_divergence_case_is_the_documented_one(spark, tmp_path):
     # 21 dropped intra-batch (cluster {20, 21}, min id survives); survivor
     # 20 is not a near-dup of 10, so it is kept — incremental semantics
     assert got == {10: 0, 20: 1}
+
+
+@pytest.mark.parametrize("module, read, extra", [
+    ("ingest", "_read_corpus", {}),
+    ("curation", "_read_curated", {"n_tokens": pa.array([2, 3], pa.int64())}),
+])
+def test_sink_read_back_runs_no_job(spark, tmp_path, module, read, extra):
+    """The foreachBatch sinks read their accumulated corpus back every
+    micro-batch; with the declared schema that read runs no
+    footer-inference job, and `batch` still comes from the directory."""
+    import importlib
+
+    from tests.conftest import jobs_for
+
+    corpus = tmp_path / "corpus"
+    for b in (0, 3):
+        os.makedirs(corpus / f"batch={b}")
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array([10 * b, 10 * b + 1], pa.int64()),
+                "text": pa.array(["x y", "x y z"], pa.string()),
+                "source": pa.array(["feed", "feed"], pa.string()),
+                "group_size": pa.array([1, 2], pa.int64()),
+                **extra,
+            }),
+            str(corpus / f"batch={b}" / "part-0.parquet"),
+        )
+    fn = getattr(importlib.import_module(f"big_data_player_analysis_spark.streaming.{module}"), read)
+    df, jobs = jobs_for(spark, f"read-back-{module}", lambda: fn(spark, str(corpus)))
+    assert jobs == 0
+    assert df.columns == ["doc_id", "text", "source", "group_size", *extra, "batch"]
+    assert sorted((r.doc_id, r.batch) for r in df.collect()) == [(0, 0), (1, 0), (30, 3), (31, 3)]

@@ -32,7 +32,7 @@ def _rows(df):
         out.append(
             tuple(round(v, 6) if isinstance(v, float) else v for v in r)
         )
-    return sorted(out)
+    return sorted(out, key=repr)
 
 
 def test_multi_batch_merge_equals_batch_aggregate(spark, sf_small, tmp_path):
@@ -147,3 +147,53 @@ def test_timed_out_stream_raises_instead_of_returning_rows(spark, sf_small, tmp_
             timeout_sec=0.001,
         )
     assert not spark.streams.active
+
+
+def test_merge_runs_one_exchange_and_read_back_runs_no_job(spark, sf_small, tmp_path):
+    """A merge over a prior snapshot is one shuffle map job plus the write:
+    no separate partial aggregate, and the snapshot is read with its
+    declared schema, so neither it nor read_mv runs a footer-inference
+    job."""
+    from tests.conftest import jobs_for
+
+    ev = load_table(spark, sf_small, "events").select("event_type", "value")
+    mv_dir = str(tmp_path / "mv")
+    apply_batch(spark, ev.filter(F.col("event_type") != "purchase"), 0, mv_dir)
+    b1 = ev.filter(F.col("event_type") == "purchase")
+    _, merge_jobs = jobs_for(spark, "mv-merge", lambda: apply_batch(spark, b1, 1, mv_dir))
+    assert merge_jobs <= 2
+    mv, read_jobs = jobs_for(spark, "mv-read", lambda: read_mv(spark, mv_dir))
+    assert read_jobs == 0
+    assert _rows(mv) == _rows(_expected(ev))
+
+
+def test_null_keys_and_values_match_the_sql_twin(spark, tmp_path):
+    """Null values count as events but not in sum/min/max, an all-null
+    key keeps null sum/min/max/avg until a later batch brings a value, and
+    null event_type rows form their own group: the merged MV equals
+    SQL_INCREMENTAL_MV over all rows in DuckDB."""
+    import duckdb
+    import pandas as pd
+
+    from big_data_player_analysis_spark.registry.streaming_ops import SQL_INCREMENTAL_MV
+
+    batches = [
+        [("a", 1.0), ("a", None), (None, 2.0), (None, None), ("n", None), ("late", None)],
+        [("a", 4.0), (None, None), ("n", None), ("late", -3.5), ("b", 0.5)],
+    ]
+    mv_dir = str(tmp_path / "mv")
+    for i, rows in enumerate(batches):
+        apply_batch(spark, spark.createDataFrame(rows, "event_type string, value double"), i, mv_dir)
+    got = _rows(read_mv(spark, mv_dir))
+
+    events = pd.DataFrame(  # noqa: F841  (read by DuckDB by name)
+        [r for rows in batches for r in rows], columns=["event_type", "value"]
+    )
+    con = duckdb.connect()
+    want = [
+        tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+        for r in con.execute(SQL_INCREMENTAL_MV).fetchall()
+    ]
+    con.close()
+    assert got == sorted(want, key=repr)
+    assert ("n", 2, None, None, None, None) in got
