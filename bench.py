@@ -7,6 +7,11 @@ Execution is forced with the noop datasource (full pipeline runs, nothing
 is collected to the driver), so timings measure the Spark plan, not
 toPandas serialization. A warmup query first amortizes JVM/session startup
 out of the per-query numbers.
+
+Every run also leaves a per-query layer record in tools/bench_last.json
+("layers"): plan-build and execution seconds, and the jobs, stages, tasks,
+executor CPU, input, shuffle and spill of the pass that gave the query's
+min, read back from the session's Spark event log.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_player_analysis_spark.registry import all_queries
 from big_data_player_analysis_spark.session import get_spark, host_cpus
+from perfbench.trace import read_event_log
 
 # Headline set: one per operator family (agg, dedup, join chain, scalar map,
 # TPC-H Q1, windows, sessionization, top-k, iterative flagship) plus the
@@ -34,8 +40,8 @@ from big_data_player_analysis_spark.session import get_spark, host_cpus
 # as operators ship. Deliberately still excluded:
 # dedup_ngram_jaccard — the documented-quadratic EXACT alternate whose
 # ~186 cpu-seconds of pure verify compute at sf0.1 is the cost the minhash
-# scale path exists to avoid; its wall/growth evidence lives in SCALE.md
-# and SHUFFLE.md rather than inflating the suite total every round.
+# scale path exists to avoid; SCALE.md and SHUFFLE.md keep its r10 growth
+# and shuffle record rather than inflating the suite total every round.
 HEADLINE = [
     "q01_count_per_key",
     "q04_smoothed_avg",
@@ -60,10 +66,30 @@ HEADLINE = [
 ]
 
 
-def run_one(spark, spec, sf_dir: str) -> float:
-    """One timed end-to-end run (plan build + full execution via noop
-    sink). Tracked persists are released AFTER the timing stops: the
-    cached intermediates are part of the query's own execution, but their
+def session_conf(log_dir: str) -> dict[str, str]:
+    """The bench session's settings. No console progress bars: their
+    carriage-return spam floods captured output and made every early
+    round's BENCH_r*.json tail unparseable. One uncompressed event log
+    file in log_dir, which `layers` reads back."""
+    return {
+        "spark.ui.showConsoleProgress": "false",
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+
+
+def run_one(spark, spec, sf_dir: str) -> dict:
+    """One timed end-to-end run, split at the DataFrame: `build_s` is
+    spec.fn building it (plan analysis plus any eager sizing jobs the
+    entry runs), `exec_s` is the noop write that executes it. Returns the
+    run's span: those two, `wall_s`, and its start and end in epoch ms
+    (read_event_log gives a job outside any job group, such as a streaming
+    micro-batch, to the span that holds its submission time).
+
+    Tracked persists are released AFTER the timing stops: the cached
+    intermediates are part of the query's own execution, but their
     blocks must not linger into the next query's measurement (storage
     pressure -> spill churn over a 46-query x 2-pass suite).
 
@@ -83,17 +109,57 @@ def run_one(spark, spec, sf_dir: str) -> float:
     t0 = time.time()
     try:
         df = spec.fn(spark, sf_dir)
+        t1 = time.time()
         df.write.format("noop").mode("overwrite").save()
-        elapsed = round(time.time() - t0, 3)
+        t2 = time.time()
     finally:
         # release even when the build/write throws, or this run's tracked
         # blocks stay cached and pollute every later query's cold timing
         release_tracked()
-    return elapsed
+    return {
+        "start_ms": t0 * 1e3,
+        "end_ms": t2 * 1e3,
+        "wall_s": round(t2 - t0, 3),
+        "build_s": round(t1 - t0, 3),
+        "exec_s": round(t2 - t1, 3),
+    }
+
+
+def run_pass(spark, specs, names: list[str], sf_dir: str, p: int) -> dict[str, dict]:
+    """Pass `p` over `names`: each run's span, tagged with the job group
+    `<name>#<p>` its jobs ran under."""
+    sc = spark.sparkContext
+    spans = {}
+    for name in names:
+        tag = f"{name}#{p}"
+        sc.setJobGroup(tag, tag)
+        spans[name] = {"tag": tag, **run_one(spark, specs[name], sf_dir)}
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return spans
+
+
+def layers(log_dir: str, passes: list[dict[str, dict]]) -> dict[str, dict]:
+    """Per query, the layer record of the pass that gave its min wall:
+    build_s, exec_s, and that run's jobs, stages, tasks, failed tasks,
+    executor CPU/run seconds and input/shuffle/spill MB from the event
+    log. Read after the session stopped, so the log is complete."""
+    counts = read_event_log(log_dir, [span for spans in passes for span in spans.values()])
+    out = {}
+    for name in passes[0]:
+        p = min(range(len(passes)), key=lambda i: passes[i][name]["wall_s"])
+        span = passes[p][name]
+        out[name] = {
+            "pass": p,
+            "wall_s": span["wall_s"],
+            "build_s": span["build_s"],
+            "exec_s": span["exec_s"],
+            **{k: round(v, 3) for k, v in counts[span["tag"]].items()},
+        }
+    return out
 
 
 def main() -> None:
-    from big_data_player_analysis_spark.workspace import clean_scratch
+    from big_data_player_analysis_spark.workspace import clean_scratch, scratch_dir
 
     clean_scratch()  # reclaim dead-run scratch/spill before the session starts
     # ambient load BEFORE our own session exists: during the run the 1-min
@@ -102,11 +168,100 @@ def main() -> None:
     ambient_load = round(os.getloadavg()[0], 2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    # no console progress bars: their \r spam floods captured output and
-    # made every prior round's BENCH_r*.json tail unparseable (parsed: null)
-    spark = get_spark(
-        "bdpa-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    with scratch_dir("eventlog") as log_dir:
+        passes, pass_totals, extra_pass = suite(log_dir, sf_dir, ambient_load)
+        layer_record = layers(log_dir, passes)
+    runs = {name: [spans[name]["wall_s"] for spans in passes] for name in passes[0]}
+    timings = {name: min(ts) for name, ts in runs.items()}
+
+    total = round(sum(timings.values()), 3)
+    # Full per-query detail (both raw passes) goes to a repo file for
+    # audit; the stdout line must stay SMALL. The driver captures only the
+    # last ~2 KB of stdout, and rounds 1-5 all recorded `parsed: null`
+    # because the full {queries, runs} line was ~3 KB and arrived
+    # head-truncated. Detail (3-decimal queries, raw per-pass runs, load,
+    # pass totals, semantics) -> tools/bench_last.json; the LAST stdout
+    # line carries the driver contract INCLUDING the per-query map.
+    detail = {
+        "metric": "headline_suite_wall_seconds",
+        "value": total,
+        "unit": "sec",
+        "n_queries": len(timings),
+        "queries": timings,
+        "runs": runs,
+        "sf": sf,
+        "loadavg_ambient": ambient_load,
+        "loadavg_end": round(os.getloadavg()[0], 2),
+        "pass_totals": pass_totals,
+        "extra_pass": extra_pass,
+        "layers": layer_record,
+        # r1-r5 minima were flattered by cross-run CacheManager plan reuse
+        # (persists were never released); r6+ releases tracked persists per
+        # run; since r10 every run also recomputes its plan-sizing counts
+        # and BPE merge table (the engine keeps no cross-run memos)
+        "semantics": "cold per-run (persists released per run; no cross-run memos)",
+    }
+    detail_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "tools", "bench_last.json"
     )
+    with open(detail_path, "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
+    # RESTORED PER-QUERY CONTRACT (round-10, verdict item #2): the driver's
+    # PERF comparator needs {"queries": {...}} in the parsed stdout line —
+    # since round 6 the compact summary dropped it and every PERF_r*.json
+    # recorded n_common=0 / bench_ok=false. The full map at centisecond
+    # precision fits the ~2 KB tail capture only with a MINIMAL envelope
+    # (compact separators, no slowest/pass_totals/semantics — those live in
+    # tools/bench_last.json); a size guard degrades precision rather than
+    # ever emitting a line the tail would head-truncate into unparseability.
+    def _line(ndigits: int, extras: dict) -> str:
+        return json.dumps(
+            {
+                "metric": "headline_suite_wall_seconds",
+                "value": total,
+                "unit": "sec",
+                # the suite GROWS as operators ship, so round-over-round
+                # compare per-query or value/n_queries — never raw totals
+                "n_queries": len(timings),
+                "sf": sf,
+                **extras,
+                "queries": {n: round(v, ndigits) for n, v in timings.items()},
+            },
+            separators=(",", ":"),
+        )
+
+    # ambient = 1-min loadavg before this bench's own session started
+    # budget: line + trailing newline must sit inside the last 2000 chars
+    # of stdout (measured: every BENCH_r*.json tail capture is exactly
+    # 2000), so degrade at 1980 — drop the load field first, then go to
+    # decisecond precision (never needed at current suite size: 67
+    # queries at 2 decimals measure 1944/1920 bytes), and past that fail
+    # with an explicit overflow marker and a non-zero exit
+    line = _line(2, {"loadavg_ambient": ambient_load})
+    if len(line) > 1980:
+        line = _line(2, {})
+    if len(line) > 1980:
+        line = _line(1, {})
+    if len(line) > 1980:
+        # no rung left: a head-truncated line would parse as null, so print
+        # an explicit marker and fail instead of the map
+        sys.stdout.write(
+            '\n{"metric":"headline_suite_wall_seconds","error":"stdout_line_overflow"}\n'
+        )
+        sys.exit(f"bench.py: stdout line is {len(line)} chars, over 1980; see {detail_path}")
+    # the one-line contract: flush everything else, then emit the JSON as
+    # the LAST stdout line, newline-led so any unterminated log/progress
+    # residue can't prefix-garble it for the driver's tail parse
+    sys.stderr.flush()
+    sys.stdout.flush()
+    sys.stdout.write("\n" + line + "\n")
+    sys.stdout.flush()
+
+
+def suite(log_dir: str, sf_dir: str, ambient_load: float):
+    """Session, warmup and the interleaved passes; returns (passes,
+    pass_totals, extra_pass) with the session stopped."""
+    spark = get_spark("bdpa-bench", extra_conf=session_conf(log_dir))
 
     specs = all_queries()
     names = [n for n in HEADLINE if n in specs] + [
@@ -180,105 +335,21 @@ def main() -> None:
     LOAD_AMBIENT_MAX = 4.0
     PASS_GAP_MAX = 1.25
     N_PASSES = 3
-    runs: dict[str, list[float]] = {name: [] for name in names}
-    for _pass in range(N_PASSES):
-        for name in names:
-            runs[name].append(run_one(spark, specs[name], sf_dir))
+    passes = [run_pass(spark, specs, names, sf_dir, p) for p in range(N_PASSES)]
     pass_totals = [
-        round(sum(ts[p] for ts in runs.values()), 3) for p in range(N_PASSES)
+        round(sum(span["wall_s"] for span in spans.values()), 3) for spans in passes
     ]
     extra_pass = ambient_load > LOAD_AMBIENT_MAX or (
         max(pass_totals[-2:]) > PASS_GAP_MAX * min(pass_totals[-2:])
     )
     if extra_pass:
-        for name in names:
-            runs[name].append(run_one(spark, specs[name], sf_dir))
+        passes.append(run_pass(spark, specs, names, sf_dir, N_PASSES))
         pass_totals.append(
-            round(sum(ts[N_PASSES] for ts in runs.values()), 3)
+            round(sum(span["wall_s"] for span in passes[-1].values()), 3)
         )
-    timings = {name: min(ts) for name, ts in runs.items()}
-
-    total = round(sum(timings.values()), 3)
-    # Full per-query detail (both raw passes) goes to a repo file for
-    # audit; the stdout line must stay SMALL. The driver captures only the
-    # last ~2 KB of stdout, and rounds 1-5 all recorded `parsed: null`
-    # because the full {queries, runs} line was ~3 KB and arrived
-    # head-truncated. Detail (3-decimal queries, raw per-pass runs, load,
-    # pass totals, semantics) -> tools/bench_last.json; the LAST stdout
-    # line carries the driver contract INCLUDING the per-query map.
-    detail = {
-        "metric": "headline_suite_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(timings),
-        "queries": timings,
-        "runs": runs,
-        "sf": sf,
-        "loadavg_ambient": ambient_load,
-        "loadavg_end": round(os.getloadavg()[0], 2),
-        "pass_totals": pass_totals,
-        "extra_pass": extra_pass,
-        # r1-r5 minima were flattered by cross-run CacheManager plan reuse
-        # (persists were never released); r6+ releases tracked persists per
-        # run; since r10 every run also recomputes its plan-sizing counts
-        # and BPE merge table (the engine keeps no cross-run memos)
-        "semantics": "cold per-run (persists released per run; no cross-run memos)",
-    }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "tools", "bench_last.json"
-    )
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
-    # RESTORED PER-QUERY CONTRACT (round-10, verdict item #2): the driver's
-    # PERF comparator needs {"queries": {...}} in the parsed stdout line —
-    # since round 6 the compact summary dropped it and every PERF_r*.json
-    # recorded n_common=0 / bench_ok=false. The full map at centisecond
-    # precision fits the ~2 KB tail capture only with a MINIMAL envelope
-    # (compact separators, no slowest/pass_totals/semantics — those live in
-    # tools/bench_last.json); a size guard degrades precision rather than
-    # ever emitting a line the tail would head-truncate into unparseability.
-    def _line(ndigits: int, extras: dict) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_suite_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                # the suite GROWS as operators ship, so round-over-round
-                # compare per-query or value/n_queries — never raw totals
-                "n_queries": len(timings),
-                "sf": sf,
-                **extras,
-                "queries": {n: round(v, ndigits) for n, v in timings.items()},
-            },
-            separators=(",", ":"),
-        )
-
-    # ambient = 1-min loadavg before this bench's own session started
-    # budget: line + trailing newline must sit inside the last 2000 chars
-    # of stdout (measured: every BENCH_r*.json tail capture is exactly
-    # 2000), so degrade at 1980 — drop the load field first, then go to
-    # decisecond precision (never needed at current suite size: 67
-    # queries at 2 decimals measure 1944/1920 bytes), and past that fail
-    # with an explicit overflow marker and a non-zero exit
-    line = _line(2, {"loadavg_ambient": ambient_load})
-    if len(line) > 1980:
-        line = _line(2, {})
-    if len(line) > 1980:
-        line = _line(1, {})
-    if len(line) > 1980:
-        # no rung left: a head-truncated line would parse as null, so print
-        # an explicit marker and fail instead of the map
-        sys.stdout.write(
-            '\n{"metric":"headline_suite_wall_seconds","error":"stdout_line_overflow"}\n'
-        )
-        sys.exit(f"bench.py: stdout line is {len(line)} chars, over 1980; see {detail_path}")
-    # the one-line contract: flush everything else, then emit the JSON as
-    # the LAST stdout line, newline-led so any unterminated log/progress
-    # residue can't prefix-garble it for the driver's tail parse
-    sys.stderr.flush()
-    sys.stdout.flush()
-    sys.stdout.write("\n" + line + "\n")
-    sys.stdout.flush()
+    # stop() drains the listener bus and closes the event log
+    spark.stop()
+    return passes, pass_totals, extra_pass
 
 
 if __name__ == "__main__":

@@ -1196,6 +1196,10 @@ def decode_baseline_jpeg(did: int, payload: bytes):
             img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
                 np.round(pix), 0, 255
             ).astype(np.uint8)
+    # the last MCU's padding bits end the scan: EOI must follow at once,
+    # or the payload was cut (or desynced) after a decodable prefix
+    if stream[spos : spos + 2] != b"\xff\xd9":
+        raise ValueError(f"doc {did}: no EOI after the scan at byte {scan_start + spos}")
     return w, h, img[:h, :w]
 
 

@@ -231,6 +231,32 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int = 8) -> Data
     )
 
 
+def _span_hashes(raw, a, b):
+    """int64 hash of each byte span ``raw[a:b]`` (uint8 bytes, span bound
+    arrays ``a`` < ``b``): the odd-base polynomial sum(raw[i] * B^(b-1-i))
+    mod 2^64, from one prefix sum for the whole buffer. With B odd, hence
+    invertible mod 2^64, and S the cumsum of raw[j] * B^(-j),
+    hash([a, b)) = B^(b-1) * (S[b-1] - S[a-1]): O(len) per buffer however
+    many spans, and no per-span allocation. uint64 overflow IS the
+    mod-2^64 ring, so the power tables are plain wrapping cumprods. The
+    one rolling hash behind _shingle_hash_udf's character shingles and
+    repetition.py's token windows."""
+    import numpy as np
+
+    B = np.uint64(0x9E3779B97F4A7C15)
+    BINV = np.uint64(pow(int(B), -1, 1 << 64))
+    m = raw.size
+    binv_pow = np.concatenate(
+        ([np.uint64(1)], np.cumprod(np.full(m - 1, BINV, dtype=np.uint64)))
+    )
+    b_pow = np.concatenate(
+        ([np.uint64(1)], np.cumprod(np.full(m - 1, B, dtype=np.uint64)))
+    )
+    S = np.cumsum(raw.astype(np.uint64) * binv_pow, dtype=np.uint64)
+    s_lo = np.where(a > 0, S[np.maximum(a, 1) - 1], np.uint64(0))
+    return (b_pow[b - 1] * (S[b - 1] - s_lo)).astype(np.int64)
+
+
 def _shingle_hash_udf(k: int):
     """pandas_udf: lower(text) -> sorted DISTINCT 64-bit rolling-hash
     values of the normalized text's character k-shingles (empty array when
@@ -243,10 +269,9 @@ def _shingle_hash_udf(k: int):
     a per-shingle string allocation and an interpreted xxhash64 call;
     measured as the bulk of the exact-verify stage at sf1 (6.9 s of a
     13 s minhash run). This pass is O(len) per document: normalization is
-    the byte-level exact twin (_np_norm_bytes), window identity is the
-    same invertible-odd-base prefix-sum rolling hash the substring-dup
-    operators already use corpus-wide (repetition.py:_window_hashes), and
-    distinctness is one np.unique.
+    the byte-level exact twin (_np_norm_bytes), window identity is
+    _span_hashes, the rolling hash the substring-dup operators also use
+    (repetition.py:_window_hashes), and distinctness is one np.unique.
 
     IDENTITY CONTRACT: the hash is internal to each operator — both sides
     of every intersection/count use this same function, so outputs change
@@ -262,30 +287,15 @@ def _shingle_hash_udf(k: int):
     def _sh(lt: pd.Series) -> pd.Series:
         import numpy as np
 
-        B = np.uint64(0x9E3779B97F4A7C15)  # odd -> invertible mod 2^64
-        BINV = np.uint64(pow(int(B), -1, 1 << 64))
         empty = np.array([], dtype=np.int64)
         out = []
         for s in lt:
             bb = _np_norm_bytes(s)
-            m = int(bb.size)
-            if m < k:
+            if bb.size < k:
                 out.append(empty)
                 continue
-            raw64 = bb.astype(np.uint64)
-            # wrapping power tables (uint64 overflow IS the mod-2^64 ring)
-            binv_pow = np.concatenate(
-                ([np.uint64(1)], np.cumprod(np.full(m - 1, BINV, dtype=np.uint64)))
-            )
-            b_pow = np.concatenate(
-                ([np.uint64(1)], np.cumprod(np.full(m - 1, B, dtype=np.uint64)))
-            )
-            S = np.cumsum(raw64 * binv_pow, dtype=np.uint64)
-            # hash of window [a, a+k) = B^(a+k-1) * (S[a+k-1] - S[a-1])
-            s_hi = S[k - 1:]
-            s_lo = np.concatenate(([np.uint64(0)], S[: m - k]))
-            h = (b_pow[k - 1:] * (s_hi - s_lo)).astype(np.int64)
-            out.append(np.unique(h))
+            a = np.arange(bb.size - k + 1)
+            out.append(np.unique(_span_hashes(bb, a, a + k)))
         return pd.Series(out)
 
     return _sh.asNondeterministic()

@@ -229,30 +229,20 @@ def _duplicate_spans(
     broadcast_max_rows: int,
 ):
     """Shared span builder for duplicate_span_profile (report) and
-    remove_duplicate_spans (rewrite): returns (base, spans) where base is
-    (doc_id, _text, n_tokens) and spans is the merged maximal duplicated
-    intervals (doc_id, s, e) — the full scale design is documented on
-    duplicate_span_profile, whose machinery this is."""
-    _impl_doc = """Exact-substring duplication profile (Lee et al. 2021, "Deduplicating
+    remove_duplicate_spans (rewrite), after Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better", arXiv:2107.06499): every
     OVERLAPPING ``window_tokens``-token window occurring >= ``min_count``
     times in the whole corpus (all occurrences counted, including repeats
     within one document) marks its token interval as duplicated; per
-    document the intervals are merged into maximal spans.
-
-    Returns (doc_id, n_tokens, n_dup_tokens, n_spans, dup_frac) — the
-    profile a curation run thresholds on (and the exact span bounds a
-    removal pass would cut; this entry reports rather than rewrites, the
-    rewrite is ``remove_repeated_windows``'s job for the non-overlapping
-    case).
+    document the intervals are merged into maximal spans. Returns
+    (base, spans): base is (doc_id, _text, n_tokens), spans is the merged
+    maximal duplicated intervals (doc_id, s, e).
 
     Scale design (100 TB):
       * window identity is a 64-bit ROLLING POLYNOMIAL over the canonical
-        window text's bytes, computed for ALL positions of a document in
-        ONE vectorized Arrow pandas_udf (prefix-sum closed form: with odd
-        base B invertible mod 2^64, hash(span [a,b)) = B^(b-1) *
-        (S[b-1] - S[a-1]) where S is the cumsum of byte[j] * B^(-j) —
-        O(n) total per doc, not O(n*k), and zero per-window allocation).
+        window text's bytes (dedup.py:_span_hashes), computed for ALL
+        positions of a document in ONE vectorized Arrow pandas_udf —
+        O(n) total per doc, not O(n*k), and zero per-window allocation.
         A first JVM form (xxhash64 over sliced token-hash arrays) was
         correct but interpreted expression trees (transform/slice are not
         codegen'd) allocated per window and went 12x super-linear at the
@@ -271,10 +261,9 @@ def _duplicate_spans(
     equivalence argument as the module docstring); the SQL oracle groups
     window text itself.
     """
-    del _impl_doc
     if window_tokens <= 1 or min_count < 2:
         raise ValueError("need window_tokens > 1 and min_count >= 2")
-    from big_data_player_analysis_spark.operators.dedup import _scatter
+    from big_data_player_analysis_spark.operators.dedup import _scatter, _span_hashes
 
     df = _scatter(df)  # the rolling-hash Arrow pass is CPU-bound per doc
     k = window_tokens
@@ -293,8 +282,6 @@ def _duplicate_spans(
 
         import numpy as np
 
-        B = np.uint64(0x9E3779B97F4A7C15)  # odd -> invertible mod 2^64
-        BINV = np.uint64(pow(int(B), -1, 1 << 64))
         # exact twin of the engine-side F.split(F.trim(text), r"\s+"):
         # trim strips SPACES only, and Java's \s is the ASCII class —
         # str.split() would also cut on Unicode whitespace (NBSP etc.),
@@ -307,25 +294,10 @@ def _duplicate_spans(
                 out.append([])
                 continue
             raw = np.frombuffer(" ".join(tk).encode("utf-8"), dtype=np.uint8)
-            raw64 = raw.astype(np.uint64)
-            m = raw64.size
-            # wrapping power tables [1, B, ..., B^(m-1)] (uint64 cumprod
-            # overflow wraps silently — that IS the mod-2^64 arithmetic)
-            binv_pow = np.concatenate(
-                ([np.uint64(1)], np.cumprod(np.full(m - 1, BINV, dtype=np.uint64)))
-            )
-            b_pow = np.concatenate(
-                ([np.uint64(1)], np.cumprod(np.full(m - 1, B, dtype=np.uint64)))
-            )
-            S = np.cumsum(raw64 * binv_pow, dtype=np.uint64)
             sp = np.where(raw == 32)[0]
             starts = np.concatenate(([0], sp + 1))  # byte start of token i
-            ends = np.concatenate((sp, [m]))  # byte end (excl) of token i
-            a = starts[: len(tk) - k + 1]
-            b = ends[k - 1 :]
-            s_hi = S[b - 1]
-            s_lo = np.where(a > 0, S[np.maximum(a, 1) - 1], np.uint64(0))
-            out.append((b_pow[b - 1] * (s_hi - s_lo)).astype(np.int64))
+            ends = np.concatenate((sp, [raw.size]))  # byte end (excl) of token i
+            out.append(_span_hashes(raw, starts[: len(tk) - k + 1], ends[k - 1 :]))
         return pd.Series(out)
 
     # asNondeterministic (guide §4.4): InferFiltersFromGenerate derives a

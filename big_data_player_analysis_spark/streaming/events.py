@@ -12,8 +12,8 @@ Spark's reader rejects — `ts` is then read as int64 nanos
 (spark.sql.legacy.parquet.nanosAsLong) and truncated to microseconds;
 timestamp[us]-without-zone parquet reads as TIMESTAMP_NTZ and is cast to
 the session-zone (UTC) TIMESTAMP. A streaming source needs its schema
-declared up front, so the file footer is probed with a cheap batch
-schema-only read first.
+declared up front, so the driver reads `ts`'s type from the parquet
+footer with pyarrow (no Spark job), and the conversion is catalog.py's.
 """
 
 from __future__ import annotations
@@ -21,19 +21,38 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from big_data_player_analysis_spark.catalog import _normalize_nanos_timestamps
+
 
 def _events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Probe the parquet footer (schema-only batch read — no data scan)
-    for the physical type of `ts`; every other column is fixed."""
+    """The raw stream schema, with `ts` typed as Spark's parquet reader
+    types it, from the footer of `path` (or of a directory's first
+    *.parquet file) read on the driver: TIMESTAMP(NANOS) is a long under
+    nanosAsLong, a zoneless timestamp is TIMESTAMP_NTZ, and a zoned one
+    or a legacy INT96 (Spark's default writer output, which pyarrow shows
+    as nanoseconds) is TIMESTAMP. Every other column is fixed."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type: T.DataType = T.LongType()
-    for f in spark.read.parquet(path).schema.fields:
-        if f.name == "ts":
-            ts_type = f.dataType
+    if os.path.isdir(path):
+        path = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+    footer = pq.ParquetFile(path)
+    ts = footer.schema_arrow.field("ts").type
+    if footer.schema.column(footer.schema.names.index("ts")).physical_type == "INT96":
+        ts_type: T.DataType = T.TimestampType()
+    elif not pa.types.is_timestamp(ts) or ts.unit == "ns":
+        ts_type = T.LongType()
+    elif ts.tz is None:
+        ts_type = T.TimestampNTZType()
+    else:
+        ts_type = T.TimestampType()
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -64,13 +83,7 @@ def events_stream(
         # makes isGlobPath true, which disables that override while still
         # matching exactly this file.
         path = f"{path[:-1]}[{path[-1]}]"
-    sdf = reader.parquet(path)
-    ts_type = schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):  # int64 nanos
-        return sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, T.TimestampNTZType):
-        return sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
+    return _normalize_nanos_timestamps(reader.parquet(path))
 
 
 def run_stream_to_table(

@@ -2,8 +2,7 @@
 repo lands under ONE workspace root, split into a `scratch/` tier that is
 always reclaimed (per-invocation try/finally + wipe-on-tool-startup) and a
 `cache/` tier for content-keyed artifacts that are deliberately reused
-across runs (composed scale-factor tables, scale-probe inputs,
-partitioned-layout copies).
+across runs (composed scale-factor tables, partitioned-layout copies).
 
 Why this exists (round-4 post-mortem): registry streaming entries used to
 mkdir `/tmp/bdpa_ingest/<uuid>` / `/tmp/bdpa_mv/<uuid>` per invocation and
@@ -34,8 +33,6 @@ _LEGACY_DIRS = (
     "/tmp/bdpa_mv_probe",
     "/tmp/bdpa_layout",
     "/tmp/bdpa_composed",
-    "/tmp/bdpa_scale_probe_events",
-    "/tmp/bdpa_scale_probe_docs",
 )
 
 
@@ -54,8 +51,8 @@ def scratch_root() -> str:
 
 
 def cache_root() -> str:
-    """Reused tier: content-keyed artifacts (composed sf tables, probe
-    inputs, partitioned layouts). Bounded by construction — artifacts are
+    """Reused tier: content-keyed artifacts (composed sf tables,
+    partitioned layouts). Bounded by construction — artifacts are
     keyed on source content, so regenerated testdata replaces rather than
     accumulates; `clean_cache()` wipes it for a cold run."""
     d = os.path.join(workspace_root(), "cache")

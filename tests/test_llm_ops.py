@@ -853,6 +853,7 @@ def test_png_decode_rejects_non_png(spark):
     ("synth_bmp_payload", "decode_bmp_features", 5, 7),
     ("synth_png_payload", "decode_png_features", 5, 7),
     ("synth_jpeg_payload", "decode_jpeg_features", 9, 40),
+    ("synth_jpeg_payload", "decode_jpeg_features", 5, 1),
 ])
 def test_truncated_payload_raises_naming_the_doc(spark, synth, decode, did, cut):
     """A payload cut short must raise an error naming the doc, never decode

@@ -35,6 +35,49 @@ def events_sdf(spark, sf_small):
     return events_stream(spark, f"{sf_small}/events.parquet")
 
 
+def test_events_stream_build_runs_no_job(spark, sf_small):
+    """The raw schema comes from the parquet footer, read on the driver:
+    building the stream submits no Spark job."""
+    from tests.conftest import jobs_for
+
+    _, n_jobs = jobs_for(
+        spark, "events_stream_build",
+        lambda: events_stream(spark, f"{sf_small}/events.parquet", 1),
+    )
+    assert n_jobs == 0
+
+
+@pytest.mark.parametrize("unit, tz, int96", [
+    ("ns", None, False), ("us", None, False), ("us", "UTC", False), ("ns", None, True),
+])
+def test_events_raw_schema_matches_the_batch_reader(spark, tmp_path, unit, tz, int96):
+    """The declared stream schema is the schema Spark's batch parquet
+    reader infers, for each physical ts type a pyarrow writer produces,
+    including the legacy INT96 that Spark itself writes by default; a
+    directory is typed by its first file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_player_analysis_spark.streaming.events import _events_raw_schema
+
+    table = pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000_000, 1_700_000_001_000_000_000],
+                       pa.timestamp("ns")).cast(pa.timestamp(unit, tz)),
+        "user_id": pa.array([7, 8], pa.int64()),
+        "event_type": ["click", "view"],
+        "value": [1.0, 2.5],
+        "props": ["{}", "{}"],
+    })
+    d = tmp_path / "events"
+    d.mkdir()
+    p = str(d / "part-0.parquet")
+    pq.write_table(table, p, use_deprecated_int96_timestamps=int96)
+    declared = _events_raw_schema(spark, p)
+    assert declared == spark.read.parquet(p).schema
+    assert _events_raw_schema(spark, str(d)) == declared
+
+
 @pytest.fixture(scope="module")
 def split_events_dir(spark, events, tmp_path_factory):
     """The events table written as 4 time-ordered parquet files (earliest

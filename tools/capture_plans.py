@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from big_data_player_analysis_spark.registry import all_queries
 from big_data_player_analysis_spark.session import get_spark
@@ -25,7 +26,7 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join("/root/repo/plans", ROUND)
+    out_dir = os.path.join(REPO_ROOT, "plans", ROUND)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
         "plan-capture", extra_conf={"spark.ui.showConsoleProgress": "false"}

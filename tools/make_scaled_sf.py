@@ -13,9 +13,8 @@ facts grow by ``factor``:
   * tiny dimensions (region, nation) are SHARED — dims grow slower than
     facts in a real lake, and the copies' *_nationkey columns stay valid;
   * document text is rewritten through a rotated-alphabet substitution per
-    copy (same scheme as tools/scale_probe.py), so the composed corpus
-    does NOT plant near-duplicates — duplicate density, not just size,
-    stays constant;
+    copy, so the composed corpus does NOT plant near-duplicates —
+    duplicate density, not just size, stays constant;
   * embeddings get a small per-copy additive nudge, preserving the
     pairwise-cosine distribution shape without exact duplicates.
 
@@ -36,7 +35,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F
 
