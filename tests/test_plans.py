@@ -471,6 +471,42 @@ def test_cdc_upsert_never_shuffles_snapshot(spark, specs):
     assert "Union" in p
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_simhash",
+        "dedup_simhash_web",
+        "ann_lsh_pairs",
+        "llm_title_hamming_dedup",
+        "multimodal_phash_dedup",
+    ],
+)
+def test_band_candidate_join_is_equi_join_on_band_keys(spark, specs, name):
+    """Every banded pair generator finds candidates with an inner
+    equi-join on (band index, band value) — never a theta join, whose
+    id_a < id_b predicate alone would plan as a nested loop or cartesian
+    product over all n^2 pairs. Checked on the plan that actually ran."""
+    import re
+
+    from big_data_player_analysis_spark.caching import release_tracked
+
+    try:
+        nodes = _executed_nodes(specs[name].fn(spark, SF))
+    finally:
+        release_tracked()
+    names = {n for n, _ in nodes}
+    assert "BroadcastNestedLoopJoin" not in names, name
+    assert "CartesianProduct" not in names, name
+    band_key = r"\[(band|seg_idx)#\d+, (bucket|bits|seg|key)#\d+L?\]"
+    band_joins = [
+        d
+        for n, d in nodes
+        if n in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+        and re.search(band_key + ", " + band_key + ", Inner", d)
+    ]
+    assert band_joins, f"{name}: no inner equi-join on the band keys in {nodes}"
+
+
 def test_near_dedup_survivors_keyed_anti_join_no_cross_product(spark, specs):
     """The survivor materialization must stay a keyed anti/left join on the
     id — no nested loop, no cartesian, and no forced broadcast of the
