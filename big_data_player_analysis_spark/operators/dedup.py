@@ -33,8 +33,9 @@ from big_data_player_analysis_spark.caching import (
 )
 from pyspark.sql import functions as F
 
-from big_data_player_analysis_spark.functions.text import char_shingles
 from big_data_player_analysis_spark.functions.vectors import cosine_similarity
+from big_data_player_analysis_spark.operators.joins import broadcast_if_small
+from big_data_player_analysis_spark.operators.setops import band_rows, pair_join
 from big_data_player_analysis_spark.operators.similarity import ann_lsh_buckets
 
 
@@ -67,11 +68,6 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 _rng = random.Random(20240813)
 MINHASH_A = [_rng.randrange(1, MINHASH_PRIME) for _ in range(N_HASHES)]
 MINHASH_B = [_rng.randrange(0, MINHASH_PRIME) for _ in range(N_HASHES)]
-
-# Broadcast the rare-shingle hash set (int64s) only below this row count
-# (~32 MB serialized at the gate); above it the filter join falls back to
-# a shuffle — same defect-class guard as the line-dedup frequent set.
-RARE_BROADCAST_MAX_ROWS = 4_000_000
 
 SIMHASH_BITS = 64
 # Pigeonhole: detecting hamming <= h needs h+1 bands. Nine bands over 64
@@ -219,15 +215,6 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-    )
-
-
-def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int = 8) -> DataFrame:
-    """(id, shingle) — exploded distinct character k-shingles of the
-    normalized text. The inverted-index building block."""
-    return df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(char_shingles(F.col(text_col), k)).alias("shingle"),
     )
 
 
@@ -416,39 +403,37 @@ def dedup_ngram_jaccard(
          one executor OOMs at web scale.)
       3. the df in [2, max_df] filter leaves a SMALL distinct-hash set
          (singletons — the vast majority — and boilerplate both drop), so
-         it is size-gate-broadcast back onto the occurrence stream: the
-         corpus-sized exploded table never exchanges at all. Above the
-         gate the filter join falls back to a shuffle (AQE still
-         broadcasts genuinely small sets). df <= max_df bounds the pair
-         join's fan-out at max_df per shingle, so the self-join touches
-         only the rare-occurrence slice."""
+         it is broadcast back onto the occurrence stream
+         (broadcast_if_small): the corpus-sized exploded table never
+         exchanges at all. Above the gate the filter join falls back to a
+         shuffle (AQE still broadcasts genuinely small sets). df <= max_df
+         bounds the pair join's fan-out at max_df per shingle, so the
+         self-join touches only the rare-occurrence slice."""
     occ = _lowered(df, id_col, text_col).select(
         "doc",
         F.explode(_shingle_hash_udf(k)("lt")).alias("h"),
     )
-    rare_h = (
+    rare_h = broadcast_if_small(
         occ.groupBy("h")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter((F.col("df") >= 2) & (F.col("df") <= F.lit(max_df)))
         .select("h")
-        .transform(tracked_persist)
     )
-    if rare_h.count() <= RARE_BROADCAST_MAX_ROWS:
-        rare_h = F.broadcast(rare_h)
     # Persisted: the filtered slice is tiny relative to occ, and both
     # sides of the pair self-join read it — without the persist each side
     # would re-shingle the whole corpus through the broadcast filter.
-    rare = occ.join(rare_h, "h").select("doc", "h").transform(tracked_persist)
-    ra = rare.select(F.col("doc").alias("doc_a"), "h")
-    rb = rare.select(F.col("doc").alias("doc_b"), "h")
-    cand = (
-        ra.join(rb, "h")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    rare = (
+        occ.join(rare_h, "h")
+        .select(F.col("doc").alias("id"), "h")
         .transform(tracked_persist)
     )
+    cand = _doc_pairs(pair_join(rare, ["h"])).transform(tracked_persist)
     return _verify_jaccard(cand, df, id_col, text_col, k, threshold)
+
+
+def _doc_pairs(pairs: DataFrame) -> DataFrame:
+    """pair_join's (id_a, id_b) named as the dedup tier's (doc_a, doc_b)."""
+    return pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
 # Exact-path row ceiling for the auto-dispatched pair operators. Below it
@@ -585,73 +570,30 @@ def dedup_minhash_lsh(
     verification. Same output contract as dedup_ngram_jaccard; recall is
     the LSH band-collision probability (>= 1 - (1-t^4)^16, ~0.9998 at
     t=0.8), precision 1.0 because candidates are verified exactly."""
-    # Materialized (lazy localCheckpoint): the signature table (one 64-long
-    # array per doc, ~0.5 KB) is read by both sides of the band self-join;
-    # recomputing it would re-shingle + re-hash the whole corpus twice.
-    # A checkpoint rather than a persist because it also TRUNCATES lineage:
-    # composed callers (near_dedup_survivors -> components -> survivors ->
-    # the curation pipeline) otherwise pay Catalyst re-analysis of this
-    # whole subplan once per downstream branch — measured as a multi-second
-    # driver-only gap in the mega-pipeline's job timeline.
+    # Materialized: the signature table (one 64-long array per doc, ~0.5
+    # KB) is read by both sides of the band self-join, and recomputing it
+    # would re-shingle + re-hash the whole corpus twice.
     sig = minhash_signatures(_lowered(df, id_col, text_col), k).transform(
         _materialize
     )
-    bands = sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.hash(F.slice("sig", i * ROWS_PER_BAND + 1, ROWS_PER_BAND)).alias(
-                            "bucket"
-                        ),
-                    )
-                    for i in range(N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
-    ba = bands.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    bb = bands.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    cand = (
-        ba.join(bb, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .transform(_materialize)
+    cand = _doc_pairs(pair_join(_minhash_bands(sig), ["band", "key"])).transform(
+        _materialize
     )
     return _verify_jaccard(cand, df, id_col, text_col, k, threshold)
 
 
-# Broadcast the new-batch band table only below this row count (docs x
-# N_BANDS rows of (long, int, int)): ~100 MB serialized at the gate — the
-# "new batch" of an incremental run is small by definition, but an
-# unbounded forced broadcast is exactly the round-3 line-dedup defect, so
-# the same persist+count gate applies.
-INCREMENTAL_BROADCAST_MAX_ROWS = 4_000_000
-
-
-def _minhash_bands(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc, band, bucket) banded MinHash signatures — the shared candidate
-    index of dedup_minhash_lsh and dedup_incremental."""
-    sig = minhash_signatures(_lowered(df, id_col, text_col), k)
-    return sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.hash(
-                            F.slice("sig", i * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-                        ).alias("bucket"),
-                    )
-                    for i in range(N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """(id, band, key) banded MinHash signatures from minhash_signatures'
+    (doc, sig): key = hash of the band's ROWS_PER_BAND slots. The shared
+    candidate index of dedup_minhash_lsh and dedup_incremental."""
+    return band_rows(
+        sig.select(F.col("doc").alias("id"), "sig"),
+        ["id"],
+        [
+            F.hash(F.slice("sig", i * ROWS_PER_BAND + 1, ROWS_PER_BAND))
+            for i in range(N_BANDS)
+        ],
+    )
 
 
 def dedup_incremental(
@@ -661,7 +603,6 @@ def dedup_incremental(
     text_col: str,
     k: int = 8,
     threshold: float = 0.6,
-    broadcast_max_rows: int = INCREMENTAL_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Incremental near-dedup: (new_id, corpus_id, jaccard) for each
     incoming document that is a near-duplicate (exact Jaccard >= threshold)
@@ -671,25 +612,21 @@ def dedup_incremental(
 
     Scale shape: both sides get banded MinHash signatures in one narrow
     Arrow pass each; the candidate join broadcasts the NEW batch's band
-    table (size-gated with a shuffle fallback) against the corpus band
-    stream, so the 100 TB corpus side is never exchanged on the band key —
-    it stays on its scan splits and streams through a broadcast hash join.
-    Exact verification (shared _verify_jaccard) then touches only docs in
-    at least one candidate pair. Ids must be distinct across the two
-    inputs (they identify which side a doc came from).
+    table (broadcast_if_small: a shuffle above the gate) against the
+    corpus band stream, so the 100 TB corpus side is never exchanged on
+    the band key — it stays on its scan splits and streams through a
+    broadcast hash join. Exact verification (shared _verify_jaccard) then
+    touches only docs in at least one candidate pair. Ids must be distinct
+    across the two inputs (they identify which side a doc came from).
     """
-    new_bands = _minhash_bands(new_df, id_col, text_col, k).transform(tracked_persist)
-    corpus_bands = _minhash_bands(corpus_df, id_col, text_col, k)
-    if new_bands.count() <= broadcast_max_rows:
-        probe = F.broadcast(new_bands)
-    else:
-        probe = new_bands
+    def bands(d: DataFrame) -> DataFrame:
+        return _minhash_bands(minhash_signatures(_lowered(d, id_col, text_col), k))
+
+    probe = broadcast_if_small(bands(new_df))
     cand = (
-        corpus_bands.join(
-            probe.select(F.col("doc").alias("doc_a"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .select("doc_a", F.col("doc").alias("doc_b"))
+        bands(corpus_df)
+        .join(probe.select(F.col("id").alias("doc_a"), "band", "key"), ["band", "key"])
+        .select("doc_a", F.col("id").alias("doc_b"))
         .distinct()
         .transform(tracked_persist)
     )
@@ -751,12 +688,14 @@ def simhash_signatures(
             z = (z ^ (z >> np.uint64(27))) * c3
             z ^= z >> np.uint64(31)
             # per-bit set counts via one C-level unpackbits over the
-            # little-endian byte view (round-10: the (u, 64) shift-and-mask
-            # broadcast this replaces was the signature pass's hottest
-            # allocation; counters and therefore sig values are unchanged
-            # integer math: counters_j = 2 * count_set_j - u)
+            # little-endian byte view, pinned as "<u8" so bit j of the
+            # unpacked row is bit j of the value on any host (round-10:
+            # the (u, 64) shift-and-mask broadcast this replaces was the
+            # signature pass's hottest allocation; counters and therefore
+            # sig values are unchanged integer math: counters_j =
+            # 2 * count_set_j - u)
             bits = np.unpackbits(
-                z.view(np.uint8), bitorder="little"
+                z.astype("<u8", copy=False).view(np.uint8), bitorder="little"
             ).reshape(-1, SIMHASH_BITS)
             counters = 2 * bits.sum(axis=0, dtype=np.int64) - np.int64(h.size)
             sig = ((counters > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
@@ -798,35 +737,20 @@ def dedup_simhash(
         )
     # Persisted: one (doc, long) row per doc, read by both self-join sides.
     sigs = simhash_signatures(df, id_col, text_col, k).transform(tracked_persist)
-    bands = sigs.select(
-        "doc",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("sig", off)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bucket"),
-                    )
-                    for i, (off, width) in enumerate(simhash_band_bounds(n_bands))
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "sig", "bb.band", "bb.bucket")
-    ba = bands.select(F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bucket")
-    bb = bands.select(F.col("doc").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bucket")
+    bands = band_rows(
+        sigs.select(F.col("doc").alias("id"), "sig"),
+        ["id", "sig"],
+        [
+            F.shiftright("sig", off).bitwiseAND(F.lit((1 << width) - 1))
+            for off, width in simhash_band_bounds(n_bands)
+        ],
+    )
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
-        ba.join(bb, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
-        .withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
-        )
+        pair_join(bands, ["band", "key"], carry=["sig"])
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= F.lit(max_hamming))
-        .select("doc_a", "doc_b", "hamming")
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming")
     )
 
 
@@ -1097,7 +1021,6 @@ def decontaminate(
     text_col: str,
     k: int = 8,
     min_shared: int = 1,
-    scatter: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: training documents that share at least
     ``min_shared`` distinct character k-shingles with ANY eval-set
@@ -1113,14 +1036,6 @@ def decontaminate(
     tier.
 
     Returns (train_id, n_shared) for contaminated docs only.
-
-    ``scatter=False`` is the explicit override for callers that KNOW the
-    train side's layout beats a round-robin spread (e.g. already salted
-    against skew). Composed callers normally leave it on: ``_scatter``
-    self-tunes — file-backed wide scans and partition-rich checkpointed
-    stages pass through exchange-free, while an AQE-coalesced narrow
-    frame is spread so the CPU-bound shingle pass isn't pinned to a
-    few cores (same contract as remove_repeated_windows' flag).
     """
     # Shingles are reduced to int64 hash values BEFORE the exchange /
     # broadcast: a k=32 char shingle is a ~36-byte UTF8String, its hash 8
@@ -1136,8 +1051,7 @@ def decontaminate(
     # SQL oracle joins the shingle text itself, which is exactly the
     # cross-check that would surface one.
     sh = _shingle_hash_udf(k)
-    tr_in = _scatter(train) if scatter else train
-    tr = tr_in.select(
+    tr = _scatter(train).select(
         F.col(id_col).alias("doc"), F.lower(F.col(text_col)).alias("lt")
     ).select("doc", F.explode(sh("lt")).alias("sh"))
     ev = (
@@ -1563,49 +1477,20 @@ def title_hamming_pairs(
     seg_w = width // n_seg
     assert seg_w * n_seg == width, "width must be divisible by max_dist+1"
     keyed = df.select(
-        F.col(id_col),
+        F.col(id_col).alias("id"),
         F.rpad(F.lower(F.substring(text_col, 1, width)), width, " ").alias(
             "hkey"
         ),
     )
-    segs = keyed.select(
-        id_col,
-        "hkey",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("seg_idx"),
-                        F.substring("hkey", i * seg_w + 1, seg_w).alias(
-                            "seg"
-                        ),
-                    )
-                    for i in range(n_seg)
-                ]
-            )
-        ).alias("s"),
-    ).select(id_col, "hkey", "s.seg_idx", "s.seg")
-    a = segs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("hkey").alias("ka"),
-        "seg_idx",
-        "seg",
+    segs = band_rows(
+        keyed,
+        ["id", "hkey"],
+        [F.substring("hkey", i * seg_w + 1, seg_w) for i in range(n_seg)],
     )
-    b = segs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("hkey").alias("kb"),
-        "seg_idx",
-        "seg",
-    )
-    cand = (
-        a.join(b, ["seg_idx", "seg"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ka", "kb")
-        .distinct()
-    )
+    cand = pair_join(segs, ["band", "key"], carry=["hkey"])
     ham = F.expr(
         f"aggregate(sequence(1, {width}), 0, (acc, i) -> "
-        "acc + IF(substring(ka, i, 1) = substring(kb, i, 1), 0, 1))"
+        "acc + IF(substring(hkey_a, i, 1) = substring(hkey_b, i, 1), 0, 1))"
     )
     return (
         cand.withColumn("hamming", ham.cast("long"))
@@ -1640,26 +1525,14 @@ def hamming_sig_pairs(
     64x: 128 buckets/segment; 18-bit segments hold band volume below
     dedup_simhash_web's 16-bit operating point), never the O(n^2) cross
     join."""
-    keyed = sigs.select(F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig"))
-    segs = keyed.select(
-        "_id",
-        "_sig",
-        F.posexplode("_sig").alias("seg_idx", "seg"),
+    segs = sigs.select(
+        F.col(id_col).alias("id"),
+        F.col(sig_col).alias("sig"),
+        F.posexplode(sig_col).alias("band", "key"),
     )
-    a = segs.select(
-        F.col("_id").alias("id_a"), F.col("_sig").alias("sa"), "seg_idx", "seg"
-    )
-    b = segs.select(
-        F.col("_id").alias("id_b"), F.col("_sig").alias("sb"), "seg_idx", "seg"
-    )
-    cand = (
-        a.join(b, ["seg_idx", "seg"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sa", "sb")
-        .distinct()
-    )
+    cand = pair_join(segs, ["band", "key"], carry=["sig"])
     ham = F.expr(
-        "aggregate(zip_with(sa, sb, (x, y) -> bit_count(x ^ y)), 0, "
+        "aggregate(zip_with(sig_a, sig_b, (x, y) -> bit_count(x ^ y)), 0, "
         "(acc, v) -> acc + v)"
     ).cast("long")
     return (

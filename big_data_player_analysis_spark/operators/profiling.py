@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from big_data_player_analysis_spark.caching import tracked_persist
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark.operators.joins import broadcast_if_small
+
 
 def profile_table(
     df: DataFrame, columns: list[str], approx: bool = False
@@ -254,7 +256,6 @@ def heavy_hitters_mg(
     item_col: str,
     phi: float = 0.002,
     k: int = 1000,
-    broadcast_max_rows: int = 4_000_000,
 ) -> DataFrame:
     """EXACT phi-heavy hitters (every item with count >= ceil(phi * N))
     without shuffling the item stream: Misra-Gries summaries as the
@@ -277,8 +278,8 @@ def heavy_hitters_mg(
     true heavy hitter.
 
     Phase 3 (verify): the item stream is filtered to the surviving
-    candidates (size-gated broadcast semi join, same policy as
-    operators/repetition.py) and counted exactly; the exchange carries
+    candidates (size-gated broadcast semi join, joins.py:
+    broadcast_if_small) and counted exactly; the exchange carries
     one row per (partition, candidate) after map-side partial_count —
     at most P * |candidates| rows, NOT the corpus.
 
@@ -328,7 +329,7 @@ def heavy_hitters_mg(
     total = agg.filter(F.col("item").isNull()).select(
         F.col("lower").alias("nn")
     )
-    cand = (
+    cand = broadcast_if_small(
         agg.filter(F.col("item").isNotNull())
         .crossJoin(F.broadcast(total))
         .filter(
@@ -337,8 +338,6 @@ def heavy_hitters_mg(
         )
         .select("item")
     )
-    if broadcast_max_rows > 0 and cand.count() <= broadcast_max_rows:
-        cand = F.broadcast(cand)
     exact = (
         items.join(
             cand, F.col(item_col) == cand["item"], "left_semi"

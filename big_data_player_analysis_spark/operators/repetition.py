@@ -18,13 +18,13 @@ Scale design (100 TB):
     that is only small when min_docs is meaningfully large (C4 removes
     lines occurring >= 3 times; at min_docs=2 the bound is HALF the
     corpus, billions of hashes on a web crawl). The removal join is
-    therefore SIZE-GATED (round-3 verdict): the frequent set is counted
-    (it is persisted — the count and the join share the aggregate), and
-    only if it is under ``broadcast_max_rows`` does the LEFT ANTI join
-    take a broadcast hint (corpus-side window stream never exchanged);
-    above the gate it runs as a plain shuffle anti-join — AQE still
-    converts it to a broadcast at runtime if the set turns out small,
-    but an unbounded set can no longer OOM the driver via a forced hint;
+    therefore SIZE-GATED (round-3 verdict, joins.py:broadcast_if_small):
+    the frequent set is persisted and counted, and only if it is at most
+    joins.BROADCAST_MAX_ROWS does the semi join take a broadcast hint
+    (corpus-side window stream never exchanged); above the gate it runs
+    as a plain shuffle join — AQE still converts it to a broadcast at
+    runtime if the set turns out small, but an unbounded set can no
+    longer OOM the driver via a forced hint;
   * the rebuild (round-9) never shuffles window text at all: only the
     BOILERPLATE occurrences (doc_id, widx — bounded by duplicated
     windows, tiny under the min_docs contract) group per document, and
@@ -51,17 +51,14 @@ from pyspark.sql import DataFrame, Window
 from big_data_player_analysis_spark.caching import tracked_persist
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark.operators.joins import broadcast_if_small
+
 REPEAT_WINDOW_TOKENS = 8  # tokens per window
 # Windows in >= this many distinct docs are removed. 3 is the C4 default
 # (Raffel et al. 2020 drop lines occurring >= 3 times in the corpus) AND the
 # knob that keeps the frequent set broadcast-small: at min_docs=2 the
 # frequent-set bound n_windows/min_docs is half the corpus.
 REPEAT_MIN_DOCS = 3
-# Broadcast the frequent-window set only below this row count: 4M int64
-# hashes ~ 32 MB serialized — comfortably inside executor/driver budgets.
-# Above it the anti-join falls back to a shuffle (AQE may still broadcast
-# at runtime if the actual bytes are small).
-REPEAT_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def _windows(df: DataFrame, id_col: str, text_col: str, w: int) -> DataFrame:
@@ -92,19 +89,17 @@ def remove_repeated_windows(
     text_col: str,
     window_tokens: int = REPEAT_WINDOW_TOKENS,
     min_docs: int = REPEAT_MIN_DOCS,
-    broadcast_max_rows: int = REPEAT_BROADCAST_MAX_ROWS,
     scatter: bool = True,
 ) -> DataFrame:
     """(doc_id, clean_text, n_windows, n_removed): text rebuilt without
     windows that appear in >= min_docs distinct documents. A document all
     of whose windows are boilerplate comes back with clean_text = ''.
 
-    The frequent-set anti-join is size-gated: the set is persisted and
-    counted (one extra cheap job over the persisted aggregate — the join
-    reuses the cache), and the broadcast hint is applied only under
-    ``broadcast_max_rows``. min_docs=2 on a web corpus makes the set
-    unbounded (round-3 verdict); pass broadcast_max_rows=0 to force the
-    shuffle anti-join unconditionally.
+    The frequent-set join is size-gated (broadcast_if_small): the set is
+    persisted and counted (one extra cheap job over the persisted
+    aggregate — the join reuses the cache), and the broadcast hint is
+    applied only up to joins.BROADCAST_MAX_ROWS. min_docs=2 on a web
+    corpus makes the set unbounded (round-3 verdict).
 
     CALLER CONTRACT for ``scatter=False`` (round-9 ADVICE): the input is
     read by TWO subtrees (the window-hash stream and the rebuild side),
@@ -149,17 +144,14 @@ def remove_repeated_windows(
         .select("doc_id", "widx", F.xxhash64("wtext").alias("whash"))
         .transform(tracked_persist)
     )
-    frequent = (
+    frequent = broadcast_if_small(
         wins.select("doc_id", "whash")
         .distinct()
         .groupBy("whash")
         .agg(F.count(F.lit(1)).alias("nd"))
         .filter(F.col("nd") >= F.lit(min_docs))
         .select("whash")
-        .transform(tracked_persist)
     )
-    if broadcast_max_rows > 0 and frequent.count() <= broadcast_max_rows:
-        frequent = F.broadcast(frequent)
     # ROUND-9 REBUILD (guide §2.3 "shuffle keys, not payloads"): the old
     # rebuild anti-joined the persisted window TEXT against the frequent
     # set and re-assembled documents with a groupBy(doc_id) collect_list —
@@ -226,7 +218,6 @@ def _duplicate_spans(
     text_col: str,
     window_tokens: int,
     min_count: int,
-    broadcast_max_rows: int,
 ):
     """Shared span builder for duplicate_span_profile (report) and
     remove_duplicate_spans (rewrite), after Lee et al. 2021 ("Deduplicating
@@ -253,8 +244,8 @@ def _duplicate_spans(
         doc for O(1) shuffle bytes per window occurrence.
       * the occurrence-count aggregate shuffles one int64 per window
         position, partial-aggregated map-side; the duplicated-hash set is
-        SIZE-GATED (same policy as remove_repeated_windows) before the
-        semi join back onto the position stream.
+        SIZE-GATED (broadcast_if_small) before the semi join back onto
+        the position stream.
       * interval merging is gaps-and-islands over (doc_id, position) — a
         shuffle proportional to DUPLICATED positions only, not the corpus.
     Hash collisions conflate distinct windows with P ~ n^2/2^65 (same
@@ -326,15 +317,12 @@ def _duplicate_spans(
         .select("doc_id", F.col("p").cast("long").alias("p"), "whash")
         .transform(tracked_persist)
     )
-    dup = (
+    dup = broadcast_if_small(
         wins.groupBy("whash")
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") >= F.lit(min_count))
         .select("whash")
-        .transform(tracked_persist)
     )
-    if broadcast_max_rows > 0 and dup.count() <= broadcast_max_rows:
-        dup = F.broadcast(dup)
     pos = wins.join(dup, "whash", "left_semi").select(
         "doc_id", "p", (F.col("p") + k).alias("e")
     )
@@ -364,16 +352,13 @@ def duplicate_span_profile(
     text_col: str,
     window_tokens: int = SPAN_WINDOW_TOKENS,
     min_count: int = SPAN_MIN_COUNT,
-    broadcast_max_rows: int = REPEAT_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Exact-substring duplication PROFILE (Lee et al. 2021 EXACTSUBSTR):
     (doc_id, n_tokens, n_dup_tokens, n_spans, dup_frac) — the report a
     curation run thresholds on. Span machinery and the full 100 TB design
     notes live in _duplicate_spans; remove_duplicate_spans below is the
     rewrite pass over the same spans."""
-    base, spans = _duplicate_spans(
-        df, id_col, text_col, window_tokens, min_count, broadcast_max_rows
-    )
+    base, spans = _duplicate_spans(df, id_col, text_col, window_tokens, min_count)
     per_doc = spans.groupBy("doc_id").agg(
         F.sum(F.col("e") - F.col("s")).alias("n_dup_tokens"),
         F.count(F.lit(1)).alias("n_spans"),
@@ -396,7 +381,6 @@ def remove_duplicate_spans(
     text_col: str,
     window_tokens: int = SPAN_WINDOW_TOKENS,
     min_count: int = SPAN_MIN_COUNT,
-    broadcast_max_rows: int = REPEAT_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Exact-substring duplication REMOVAL — the rewrite half of Lee et
     al. 2021's EXACTSUBSTR pipeline: every token inside a merged
@@ -415,9 +399,7 @@ def remove_duplicate_spans(
     duplicated-region-sized, and the token cut is a codegen'd
     higher-order filter (index lambda + exists over the span structs), no
     Python in the rewrite path."""
-    base, spans = _duplicate_spans(
-        df, id_col, text_col, window_tokens, min_count, broadcast_max_rows
-    )
+    base, spans = _duplicate_spans(df, id_col, text_col, window_tokens, min_count)
     per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("_spans")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.functions.vectors import cosine_similarity
+from big_data_player_analysis_spark.operators.setops import band_rows, pair_join
 
 LSH_DIM = 64
 LSH_PLANES = 16
@@ -304,14 +305,14 @@ def ann_lsh_buckets(
     toward brute-force density, dedup_embedding_cosine's blocked GEMM or
     semantic_dedup's adaptive sign-buckets are the designed alternatives.
 
-    Candidate plumbing carries IDS AND SIGS ONLY (two longs per row): the
-    first-cut plan attached both 64-double vectors to every band-join row
-    and pushed them through the dedup exchange — at sf0.1 that moved 93k
-    x ~1 KB pairs and then evaluated an interpreted 3-fold cosine per
-    pair, 10.5 s for the entry; this shape (ids-only distinct, keyed
-    vector join-back touching only surviving pairs, one Arrow batch
-    cosine) runs it ~10x faster and is the shape that survives a corpus
-    whose vectors dwarf its ids."""
+    Candidate plumbing carries IDS AND SIGS ONLY (four longs per pair):
+    the first-cut plan attached both 64-double vectors to every band-join
+    row and pushed them through the dedup exchange — at sf0.1 that moved
+    93k x ~1 KB pairs and then evaluated an interpreted 3-fold cosine per
+    pair, 10.5 s for the entry; this shape (pair_join's id-and-signature
+    distinct, keyed vector join-back touching only surviving pairs, one
+    Arrow batch cosine) runs it ~10x faster and is the shape that
+    survives a corpus whose vectors dwarf its ids."""
     from pyspark.sql.functions import pandas_udf
 
     if n_planes is None:
@@ -333,33 +334,20 @@ def ann_lsh_buckets(
         F.col(id_col).alias("id"),
         lsh_bucket_signature(F.col(vec_col), n_planes).alias("sig"),
     )
-    bands = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("sig", off)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bits"),
-                    )
-                    for i, (off, width) in enumerate(bounds)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bits")
-    a = bands.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bits")
-    b = bands.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bits")
+    bands = band_rows(
+        sigs,
+        ["id", "sig"],
+        [
+            F.shiftright("sig", off).bitwiseAND(F.lit((1 << width) - 1))
+            for off, width in bounds
+        ],
+    )
     cand = (
-        a.join(b, ["band", "bits"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        pair_join(bands, ["band", "key"], carry=["sig"])
         .filter(
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= F.lit(max_hamming)
         )
         .select("id_a", "id_b")
-        .distinct()
     )
 
     @pandas_udf("double")

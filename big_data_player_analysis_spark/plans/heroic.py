@@ -121,9 +121,7 @@ def edges_with_avgs(duels: DataFrame, num_partitions: int | None = None) -> Data
     )
 
 
-def iteration_step(
-    edges: DataFrame, hs: DataFrame | None, alpha: float, broadcast_scores: bool = True
-) -> DataFrame:
+def iteration_step(edges: DataFrame, hs: DataFrame | None, alpha: float) -> DataFrame:
     """One damped update: hs'(c) = alpha * SUM_{c->d} hs(d)*avg(c)/avg(d)
     + (1-alpha), with hs(d) defaulting to 1.0 (reference exercise_4.py:152,
     :180-184). hs=None is the init vector, every score at 1.0: since
@@ -137,11 +135,12 @@ def iteration_step(
             "contrib", F.col("avg_challenger") / F.col("avg_challenged")
         )
     else:
-        hs_by_challenged = hs.select(
-            F.col("player_id").alias("challenged_id"), F.col("hs").alias("hs_challenged")
+        hs_by_challenged = F.broadcast(
+            hs.select(
+                F.col("player_id").alias("challenged_id"),
+                F.col("hs").alias("hs_challenged"),
+            )
         )
-        if broadcast_scores:
-            hs_by_challenged = F.broadcast(hs_by_challenged)
         contrib = (
             edges.join(hs_by_challenged, on="challenged_id", how="left")
             .withColumn("hs_challenged", F.coalesce("hs_challenged", F.lit(1.0)))
@@ -155,9 +154,7 @@ def iteration_step(
     )
 
 
-def with_sq_diff(
-    new_hs: DataFrame, hs: DataFrame | None, broadcast_scores: bool = True
-) -> DataFrame:
+def with_sq_diff(new_hs: DataFrame, hs: DataFrame | None) -> DataFrame:
     """(player_id, hs, sq_diff): the new vector with each player's
     (old - new)^2 against the previous vector (reference Q14,
     exercise_4.py:194-210), old = 1.0 for hs=None. Both vectors hold
@@ -168,9 +165,9 @@ def with_sq_diff(
     if hs is None:
         old = F.lit(1.0)
     else:
-        prev = hs.select(F.col("player_id").alias("_prev_id"), F.col("hs").alias("_old"))
-        if broadcast_scores:
-            prev = F.broadcast(prev)
+        prev = F.broadcast(
+            hs.select(F.col("player_id").alias("_prev_id"), F.col("hs").alias("_old"))
+        )
         new_hs = new_hs.join(prev, F.col("player_id") == F.col("_prev_id"), "left")
         old = F.col("_old")
     return new_hs.select(
@@ -184,7 +181,6 @@ def heroic_score(
     tol: float = 0.1,
     max_iter: int = 50,
     num_partitions: int | None = None,
-    broadcast_scores: bool = True,
     divergence_patience: int = 2,
     vector_partitions: int | None = None,
 ) -> HeroicResult:
@@ -195,13 +191,11 @@ def heroic_score(
     defaults missing scores to 1.0, exercise_4.py:152, which coincides with
     the init — SURVEY.md §3.3).
 
-    broadcast_scores=True broadcasts the per-iteration score vector into
-    the join against the persisted edge table, so iterations do a
-    broadcast-hash join over the cached edges with NO shuffle of the big
-    side (the localCheckpoint'd vector has no size stats, so Catalyst would
-    otherwise plan a sort-merge join). Set False only when the player
-    universe itself is too large for executor memory — then the joins fall
-    back to shuffle.
+    Each iteration broadcasts the score vector into the join against the
+    persisted edge table, so it is a broadcast-hash join over the cached
+    edges with NO shuffle of the big side (the localCheckpoint'd vector
+    has no size stats, so Catalyst would otherwise plan a sort-merge
+    join).
 
     vector_partitions coalesces the score vector before each checkpoint:
     the groupBy leaves it at the edge table's partitioning (sized for the
@@ -220,9 +214,7 @@ def heroic_score(
     for it in range(max_iter):
         # join current scores onto the challenged endpoint; players without a
         # score contribute the default 1.0 (reference exercise_4.py:152)
-        step = with_sq_diff(
-            iteration_step(edges, hs, alpha, broadcast_scores), hs, broadcast_scores
-        )
+        step = with_sq_diff(iteration_step(edges, hs, alpha), hs)
         # the msd is observed while the checkpoint runs: no separate job
         msd_obs = Observation()
         new_hs = step.observe(msd_obs, F.avg("sq_diff").alias("msd")).select(
@@ -256,10 +248,3 @@ def heroic_score(
         )
     result.scores = hs
     return result
-
-
-def heroic_top_k(duels: DataFrame, k: int = 10, **kwargs) -> DataFrame:
-    """End-to-end flagship: converge the heroic scores, return the top-k
-    (reference Q17, exercise_4.py:238-265 + :283)."""
-    result = heroic_score(duels, **kwargs)
-    return result.scores.orderBy(F.desc("hs"), F.desc("player_id")).limit(k)

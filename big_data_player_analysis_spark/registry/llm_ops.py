@@ -13,11 +13,6 @@ as the exact SQL) or are rows-only (SimHash).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from big_data_player_analysis_spark.caching import (
-    tracked_local_checkpoint,
-    tracked_persist,
-)
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.functions.text import (
@@ -3178,7 +3173,10 @@ def curation_pipeline_q(spark: SparkSession, sf: str) -> DataFrame:
     re-exchanged when they arrive already wide."""
     from big_data_player_analysis_spark.operators.chunking import pack_sequences
 
-    from big_data_player_analysis_spark.operators.dedup import _scatter
+    from big_data_player_analysis_spark.operators.dedup import (
+        _materialize,
+        _scatter,
+    )
 
     docs = t(spark, sf, "documents")
     pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
@@ -3202,32 +3200,24 @@ def curation_pipeline_q(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("_q") >= CURATION_MIN_QUALITY) & (F.col("_lang") == "en")
     ).select("doc_id", "text")
 
-    # The three fan-out frames use a LAZY localCheckpoint, not a plain
-    # persist: a persist leaves the full logical plan in place, and every
-    # downstream branch of this six-stage composition re-ANALYZES it —
-    # the job timeline showed a ~4 s driver-only gap (no Spark job
-    # running) purely from Catalyst re-analysis/optimization of the
-    # accumulated plan; truncating lineage at the stage boundaries cut
-    # the sf0.1 cold pass 12.4 -> 8.3 s. The tradeoff (checkpoint blocks
-    # are not recomputable after executor loss) is the same one
-    # plans/heroic.py documents for its iteration frames.
-    _stage = lambda df: tracked_local_checkpoint(df, eager=False)  # noqa: E731
-    # gated is the FOURTH fan-out (round-8): remove_repeated_windows
-    # consumes it twice — its persisted window table materializes under
+    # The fan-out frames are stage checkpoints (dedup._materialize, whose
+    # docstring holds the rationale). gated is the FOURTH fan-out
+    # (round-8): remove_repeated_windows consumes it twice — its
+    # persisted window table materializes under
     # the frequent-set count gate, and the per-doc/anti-join branches
     # re-anchor on the input — so without a boundary here the whole
     # scatter + 25-replace-pass quality/language gate re-ran; measured
     # 13.7 -> 12.0 s on a contended host, ~1.7 s at sf0.1 either way
-    gated = _stage(gated)
+    gated = _materialize(gated)
     cleaned = remove_repeated_windows(
         gated, "doc_id", "text",
         window_tokens=REPEAT_WINDOW_TOKENS, min_docs=REPEAT_MIN_DOCS,
         scatter=False,  # train is scattered once above
-    ).select("doc_id", F.col("clean_text").alias("text")).transform(_stage)
+    ).select("doc_id", F.col("clean_text").alias("text")).transform(_materialize)
 
     surv = near_dedup_survivors(
         cleaned, "doc_id", "text", k=SHINGLE_K, threshold=JACCARD_THRESHOLD
-    ).transform(_stage)
+    ).transform(_materialize)
 
     contaminated = decontaminate(
         surv.select("doc_id", "text"), eval_docs, "doc_id", "text",
@@ -3239,7 +3229,7 @@ def curation_pipeline_q(spark: SparkSession, sf: str) -> DataFrame:
         F.size(
             F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
         ).cast("long").alias("n_tokens"),
-    ).transform(_stage)
+    ).transform(_materialize)
 
     packed = pack_sequences(
         final, "doc_id", "n_tokens", budget=PACK_BUDGET, n_groups=PACK_GROUPS

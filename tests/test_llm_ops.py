@@ -171,6 +171,25 @@ def test_simhash_signatures_narrow_and_dup_invariant(spark):
     assert got[1] == got[2]
     assert got[1] != got[3]
     assert 4 not in got
+
+    # doc 1's signature recomputed with plain Python ints: normalized
+    # text, base-31 polynomial over the distinct 8-gram byte windows,
+    # splitmix64 avalanche, and a majority vote per bit. Pins the values,
+    # including the bit order, which must not depend on the host's byte
+    # order.
+    m64 = (1 << 64) - 1
+    bb = _norm(rows[0][1]).encode()
+    feats = {sum(b * 31**j for j, b in enumerate(bb[i : i + 8])) for i in range(len(bb) - 7)}
+    ones = [0] * 64
+    for h in feats:
+        z = (h + 0x9E3779B97F4A7C15) & m64
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & m64
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & m64
+        z ^= z >> 31
+        for j in range(64):
+            ones[j] += (z >> j) & 1
+    want = sum(1 << j for j in range(64) if 2 * ones[j] > len(feats))
+    assert got[1] == (want - (1 << 64) if want >> 63 else want)
     # _scatter's deliberate round-robin fan-out is the ONLY allowed
     # exchange; there must be no hash/key shuffle (the old explode +
     # 64-conditional-sums aggregate exchanged every shingle on doc)

@@ -573,7 +573,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
                 spark.conf.set(k, v)
 
 
-def test_line_dedup_broadcast_gate_both_paths(spark):
+def test_line_dedup_broadcast_gate_both_paths(spark, monkeypatch):
     """The frequent-window probe must take the broadcast hint ONLY when
     the counted frequent set sits under the gate (round-3 verdict: the
     unconditional hint OOMs at min_docs=2 web scale). Since the round-9
@@ -581,10 +581,11 @@ def test_line_dedup_broadcast_gate_both_paths(spark):
     stream against the frequent set (the old LeftAnti + text-regroup
     rebuild is gone — window text no longer shuffles at all): under the
     gate the semi join is a broadcast; with the gate closed
-    (broadcast_max_rows=0) it must NOT force a broadcast — it plans as a
+    (joins.BROADCAST_MAX_ROWS=0) it must NOT force a broadcast — it plans as a
     shuffle join. autoBroadcastJoinThreshold is disabled so the assertion
     sees only the hint's effect, not a stats-based conversion."""
     from big_data_player_analysis_spark.catalog import load_table
+    from big_data_player_analysis_spark.operators import joins
     from big_data_player_analysis_spark.operators.repetition import (
         remove_repeated_windows,
     )
@@ -597,9 +598,8 @@ def test_line_dedup_broadcast_gate_both_paths(spark):
         assert "LeftSemi" in p_bc
         assert "BroadcastHashJoin" in p_bc and "BuildRight" in p_bc
 
-        p_sh = plan_str(
-            remove_repeated_windows(docs, "doc_id", "text", broadcast_max_rows=0)
-        )
+        monkeypatch.setattr(joins, "BROADCAST_MAX_ROWS", 0)
+        p_sh = plan_str(remove_repeated_windows(docs, "doc_id", "text"))
         assert "LeftSemi" in p_sh
         # the only broadcast allowed with the gate closed is the tiny
         # per-doc bad-index table's join-back (LeftOuter, stats-free here
@@ -621,13 +621,14 @@ def test_incremental_dedup_corpus_never_exchanged_on_band_key(spark, specs):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_incremental_dedup_gate_closed_falls_back_to_shuffle(spark):
-    """With the broadcast gate closed (broadcast_max_rows=0) the band join
+def test_incremental_dedup_gate_closed_falls_back_to_shuffle(spark, monkeypatch):
+    """With the broadcast gate closed (joins.BROADCAST_MAX_ROWS=0) the band join
     must NOT force a broadcast — an oversized 'new batch' can never OOM
     via the hint (same defect class as the round-3 line-dedup finding)."""
     from pyspark.sql import functions as F
 
     from big_data_player_analysis_spark.catalog import load_table
+    from big_data_player_analysis_spark.operators import joins
     from big_data_player_analysis_spark.operators.dedup import dedup_incremental
 
     # the default-gate test persists the equivalent band/candidate plans;
@@ -640,11 +641,8 @@ def test_incremental_dedup_gate_closed_falls_back_to_shuffle(spark):
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        p = plan_str(
-            dedup_incremental(
-                new, corpus, "doc_id", "text", broadcast_max_rows=0
-            )
-        )
+        monkeypatch.setattr(joins, "BROADCAST_MAX_ROWS", 0)
+        p = plan_str(dedup_incremental(new, corpus, "doc_id", "text"))
         assert "hashpartitioning(band" in p  # shuffle band join, no hint
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
