@@ -46,9 +46,12 @@ def bigram_surprisal(
     high = shuffled/noisy text that unigram statistics cannot
     distinguish.
 
-    Adjacent pairs come from zipping each token array with its own tail
-    (``arrays_zip`` over two slices) — a NARROW per-row fan-out; no
-    window/shuffle is needed to line up neighbours.
+    Each document's adjacent pairs become structs of two xxhash64 values
+    (the gram over both tokens, the context over the first), built by
+    indexing the token array at i and i + 1. The structs are sorted, and a
+    run-length scan over the sorted array yields the document's
+    (gram, context, tf) rows: a NARROW per-row pass, with no window or
+    shuffle to line up neighbours.
 
     Returns ``(id_col, n_bigrams, avg_bigram_surprisal)``; documents
     with fewer than two tokens have no bigrams and are absent.

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from big_data_player_analysis_spark.catalog import load_table
+from big_data_player_analysis_spark.catalog import footer_rows, load_table, table_path
 
 # Bucket sizing for the duels derivation's lead() window: each event_type
 # stream is range-bucketed on ts so the sort runs over
@@ -60,9 +60,10 @@ def duel_edges(
     100x, five tasks each sort 20% of the corpus. This derivation computes
     the identical output shuffle-parallel instead:
 
-    1. range-bucket ts into equal spans (bounds + row count come from one
-       3-scalar driver agg, one job per build; bucket count auto-sizes from
-       the row count — see TS_BUCKET_TARGET_ROWS). Bucket is a monotone function
+    1. range-bucket ts into equal spans (bucket count auto-sizes from the
+       row count — see TS_BUCKET_TARGET_ROWS; the bounds come from one
+       3-scalar driver agg, a job that runs only when more than one bucket
+       is needed). Bucket is a monotone function
        of ts alone, so ties in ts land in one bucket and the concatenation
        of within-bucket (ts, event_id) orders IS the global order.
     2. lead() within (event_type, bucket) — n_types x n_buckets window
@@ -79,16 +80,29 @@ def duel_edges(
     identical to the direct window at EVERY bucket count (pinned by
     tests/test_plans.py::test_duel_edges_matches_direct_window and the
     unchanged DUELS_CTE oracle); only the physical plan changes.
+
+    The row count comes from the table's parquet footers, read until it
+    passes TS_BUCKET_TARGET_ROWS: a table within one bucket builds with no
+    Spark job, and a larger one is sized by the agg's count.
     """
-    return duel_edges_from(t(spark, sf_dir, "events"), n_buckets=n_buckets)
+    events = t(spark, sf_dir, "events")
+    if n_buckets is None:
+        n = footer_rows(table_path(sf_dir, "events"), stop_after=TS_BUCKET_TARGET_ROWS)
+        if n <= TS_BUCKET_TARGET_ROWS:
+            n_buckets = 1
+    return duel_edges_from(events, n_buckets=n_buckets)
 
 
 def duel_edges_from(events: DataFrame, n_buckets: int | None = None) -> DataFrame:
     """The derivation over an arbitrary events frame (same semantics and
     plan as duel_edges; split out so the scale probes can feed composed
     scaled copies of the table). n_buckets=None auto-sizes from the row
-    count; pass an explicit value to pin a plan shape (tests do)."""
-    lo, hi, n_rows = _events_ts_stats(events)
+    count; pass an explicit value to pin a plan shape (tests do). The ts
+    bounds and row count come from one agg job, which an explicit
+    n_buckets=1 skips."""
+    lo = hi = None
+    if n_buckets is None or n_buckets > 1:
+        lo, hi, n_rows = _events_ts_stats(events)
     if n_buckets is None:
         n_buckets = max(
             1, min(TS_BUCKET_MAX, -(-n_rows // TS_BUCKET_TARGET_ROWS))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark.catalog import footer_rows, table_path
 from big_data_player_analysis_spark.functions.text import (
     BPE_TOKEN_PATTERN,
     LANG_PRIORITY,
@@ -392,6 +393,7 @@ def dedup_jaccard_q(spark: SparkSession, sf: str) -> DataFrame:
     return dedup_ngram_jaccard_auto(
         t(spark, sf, "documents"), "doc_id", "text",
         k=SHINGLE_K, threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF,
+        n_rows=footer_rows(table_path(sf, "documents")),
     )
 
 
@@ -844,7 +846,8 @@ def dedup_cosine_q(spark: SparkSession, sf: str) -> DataFrame:
     contract holds in the exact regime, which is where the driver gates
     it."""
     return dedup_embedding_cosine_auto(
-        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD
+        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD,
+        n_rows=footer_rows(table_path(sf, "embeddings")),
     )
 
 
@@ -975,7 +978,8 @@ def ann_lsh_q(spark: SparkSession, sf: str) -> DataFrame:
     both the pinned 16-bit config and the auto width, band
     non-degeneracy, and pigeonhole completeness for hamming <= 4."""
     return ann_lsh_buckets(
-        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD
+        t(spark, sf, "embeddings"), "vec_id", "embedding", COSINE_DUP_THRESHOLD,
+        n_rows=footer_rows(table_path(sf, "embeddings")),
     )
 
 

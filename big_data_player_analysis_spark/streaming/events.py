@@ -12,8 +12,9 @@ Spark's reader rejects — `ts` is then read as int64 nanos
 (spark.sql.legacy.parquet.nanosAsLong) and truncated to microseconds;
 timestamp[us]-without-zone parquet reads as TIMESTAMP_NTZ and is cast to
 the session-zone (UTC) TIMESTAMP. A streaming source needs its schema
-declared up front, so the driver reads `ts`'s type from the parquet
-footer with pyarrow (no Spark job), and the conversion is catalog.py's.
+declared up front; it is catalog.footer_schema's, read from the parquet
+footer on the driver (no Spark job), the same schema the batch read
+declares, and the conversion is catalog.py's too.
 """
 
 from __future__ import annotations
@@ -21,48 +22,9 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from big_data_player_analysis_spark.catalog import _normalize_nanos_timestamps
-
-
-def _events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    """The raw stream schema, with `ts` typed as Spark's parquet reader
-    types it, from the footer of `path` (or of a directory's first
-    *.parquet file) read on the driver: TIMESTAMP(NANOS) is a long under
-    nanosAsLong, a zoneless timestamp is TIMESTAMP_NTZ, and a zoned one
-    or a legacy INT96 (Spark's default writer output, which pyarrow shows
-    as nanoseconds) is TIMESTAMP. Every other column is fixed."""
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isdir(path):
-        path = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
-    footer = pq.ParquetFile(path)
-    ts = footer.schema_arrow.field("ts").type
-    if footer.schema.column(footer.schema.names.index("ts")).physical_type == "INT96":
-        ts_type: T.DataType = T.TimestampType()
-    elif not pa.types.is_timestamp(ts) or ts.unit == "ns":
-        ts_type = T.LongType()
-    elif ts.tz is None:
-        ts_type = T.TimestampNTZType()
-    else:
-        ts_type = T.TimestampType()
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+from big_data_player_analysis_spark.catalog import _normalize_nanos_timestamps, footer_schema
 
 
 def events_stream(
@@ -72,8 +34,8 @@ def events_stream(
 ) -> DataFrame:
     """Streaming DataFrame over an events parquet file/directory with `ts`
     converted to a proper event-time timestamp column."""
-    schema = _events_raw_schema(spark, path)
-    reader = spark.readStream.schema(schema)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.readStream.schema(footer_schema(path))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if path.endswith(".parquet"):

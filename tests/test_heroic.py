@@ -130,8 +130,8 @@ def test_heroic_two_player_fixed_point(spark):
 
 
 def test_heroic_job_budget_and_observed_msd(spark, sf_small):
-    """The flagship over sf0.001's events-derived duels: the whole op (ts
-    stats, edge build, every iteration) stays within 22 Spark jobs, each
+    """The flagship over sf0.001's events-derived duels: the whole op (edge
+    build and every iteration) stays within 9 Spark jobs, each
     iteration adds at most 3, and every msd the checkpoint observes equals
     the explicit keyed squared difference of consecutive score vectors."""
     from pyspark.sql import functions as F
@@ -140,7 +140,7 @@ def test_heroic_job_budget_and_observed_msd(spark, sf_small):
     from big_data_player_analysis_spark.operators.joins import keyed_squared_difference
     from big_data_player_analysis_spark.registry.common import duel_edges
 
-    def run(k):  # every run pays its own ts-stats job
+    def run(k):
         return jobs_for(
             spark,
             f"heroic_budget_{k}",
@@ -152,7 +152,7 @@ def test_heroic_job_budget_and_observed_msd(spark, sf_small):
         jobs = [n for _, n in runs]
         full = runs[-1][0]
         assert full.iterations == 3 and full.diverged  # the q16 oracle's unroll
-        assert jobs[-1] <= 22, jobs
+        assert jobs[-1] <= 9, jobs
         assert all(b - a <= 3 for a, b in zip(jobs, jobs[1:])), jobs
 
         vectors = [r.scores for r, _ in runs]

@@ -619,6 +619,41 @@ def test_ann_lsh_pigeonhole_complete(emb, emb_np):
     assert must_find <= got
 
 
+def test_ann_lsh_returns_planted_near_duplicates(spark):
+    """Near-duplicates planted among random vectors, at cosine >= 0.95,
+    are all returned by the auto-width path at the registry threshold, and
+    every returned pair is a true pair by a numpy brute-force cosine. The
+    test data gives the banded path real pairs to find (the registry
+    entry's own tables yield none or one at the oracle scales)."""
+    from big_data_player_analysis_spark.operators.similarity import LSH_DIM
+    from big_data_player_analysis_spark.registry.llm_ops import COSINE_DUP_THRESHOLD
+
+    rng = np.random.default_rng(20261019)
+    E = rng.standard_normal((600, LSH_DIM)).astype(np.float32)
+    src = rng.choice(len(E), 20, replace=False)
+    dups = (E[src] + 0.03 * rng.standard_normal((20, LSH_DIM))).astype(np.float32)
+    E = np.concatenate([E, dups])
+    ids = np.arange(len(E)) * 7 + 3
+    En = E.astype(np.float64) / np.linalg.norm(E.astype(np.float64), axis=1, keepdims=True)
+    S = En @ En.T
+    planted = {(int(ids[i]), int(ids[600 + k])) for k, i in enumerate(src)}
+    assert all(S[i, 600 + k] >= 0.95 for k, i in enumerate(src))
+
+    df = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, E)], "vec_id long, embedding array<float>"
+    )
+    got = {
+        (r.id_a, r.id_b): r.cosine
+        for r in ann_lsh_buckets(df, "vec_id", "embedding", COSINE_DUP_THRESHOLD).collect()
+    }
+    assert planted <= set(got)
+    pos = {int(v): n for n, v in enumerate(ids)}
+    for (a, b), cos in got.items():
+        assert a < b
+        assert round(S[pos[a], pos[b]], 6) >= COSINE_DUP_THRESHOLD
+        assert cos == pytest.approx(S[pos[a], pos[b]], abs=2e-6)
+
+
 def test_bruteforce_topk_vs_numpy(emb, emb_np):
     ids, E, _ = emb_np
     S = _cosine_matrix(E)

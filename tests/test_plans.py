@@ -211,6 +211,16 @@ def test_duel_edges_bucket_autosizing():
     assert nb(10**12) == TS_BUCKET_MAX  # capped: stitch table stays broadcastable
 
 
+def test_duel_edges_builds_without_a_job(spark, sf_small):
+    """At one bucket the row count comes from the events footers and the
+    ts-stats agg is skipped: building the edge table runs no Spark job."""
+    from big_data_player_analysis_spark.registry.common import duel_edges
+    from tests.conftest import jobs_for
+
+    _, n_jobs = jobs_for(spark, "duel_edges_build", lambda: duel_edges(spark, sf_small))
+    assert n_jobs == 0
+
+
 def test_heroic_flagship_broadcasts_score_vector(spark, specs):
     # entry flagship: per-iteration join is broadcast, edges not re-shuffled
     from big_data_player_analysis_spark.plans.heroic import edges_with_avgs

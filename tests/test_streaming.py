@@ -51,14 +51,15 @@ def test_events_stream_build_runs_no_job(spark, sf_small):
     ("ns", None, False), ("us", None, False), ("us", "UTC", False), ("ns", None, True),
 ])
 def test_events_raw_schema_matches_the_batch_reader(spark, tmp_path, unit, tz, int96):
-    """The declared stream schema is the schema Spark's batch parquet
-    reader infers, for each physical ts type a pyarrow writer produces,
-    including the legacy INT96 that Spark itself writes by default; a
-    directory is typed by its first file."""
+    """catalog.footer_schema, the schema both events_stream and load_table
+    declare, is the schema Spark's batch parquet reader infers, for each
+    physical ts type a pyarrow writer produces, including the legacy INT96
+    that Spark itself writes by default; a directory is typed by its first
+    data file, and the footer row count is the reader's count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from big_data_player_analysis_spark.streaming.events import _events_raw_schema
+    from big_data_player_analysis_spark.catalog import footer_rows, footer_schema
 
     table = pa.table({
         "event_id": pa.array([1, 2], pa.int64()),
@@ -73,9 +74,14 @@ def test_events_raw_schema_matches_the_batch_reader(spark, tmp_path, unit, tz, i
     d.mkdir()
     p = str(d / "part-0.parquet")
     pq.write_table(table, p, use_deprecated_int96_timestamps=int96)
-    declared = _events_raw_schema(spark, p)
+    pq.write_table(table.slice(1), str(d / "part-1.parquet"),
+                   use_deprecated_int96_timestamps=int96)
+    (d / "_SUCCESS").write_bytes(b"")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    declared = footer_schema(p)
     assert declared == spark.read.parquet(p).schema
-    assert _events_raw_schema(spark, str(d)) == declared
+    assert footer_schema(str(d)) == declared == spark.read.parquet(str(d)).schema
+    assert footer_rows(str(d)) == spark.read.parquet(str(d)).count() == 3
 
 
 @pytest.fixture(scope="module")
