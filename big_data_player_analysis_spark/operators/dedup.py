@@ -27,6 +27,7 @@ import random
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.caching import (
     tracked_local_checkpoint,
     tracked_persist,
@@ -436,22 +437,6 @@ def _doc_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
-# Exact-path row ceiling for the auto-dispatched pair operators. Below it
-# the documented-quadratic exact paths run (their verify constants are
-# affordable — at 32k docs the rare-shingle verify moves ~2M candidate
-# pairs x 2 shingle arrays, tens of seconds on one 32-core host; the
-# blocked GEMM's 32k x 32k cosine matrix is ~60 BLAS-bound block-pair
-# tasks). Above it nobody calls an all-pairs-exact path on purpose
-# (round-8 verdict: "at 100 TB nobody calls the exact path on purpose;
-# today the engine lets you") — the dispatch routes to the banded scale
-# path with a DOCUMENTED recall contract instead of letting the
-# quadratic constant grow without bound (measured at the composed-sf1
-# 50k-doc corpus: the exact jaccard verify moves 2.4 GB of shuffle in
-# ~60 s where the minhash route moves ~2% of that). Deploy-tunable per
-# call; every driver gate SF (500/5k docs) stays in the exact regime.
-EXACT_PAIRS_MAX_ROWS = 32_768
-
-
 def dedup_ngram_jaccard_auto(
     df: DataFrame,
     id_col: str,
@@ -459,32 +444,31 @@ def dedup_ngram_jaccard_auto(
     k: int = 8,
     threshold: float = 0.6,
     max_df: int = 20,
-    max_exact_rows: int = EXACT_PAIRS_MAX_ROWS,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Count-derived dispatch over the two Jaccard near-dup paths (round-8
     verdict ask #1): same (doc_a, doc_b, jaccard) output contract either
     way, both ending in the same exact-Jaccard verification.
 
-      * n <= max_exact_rows: dedup_ngram_jaccard — candidates from rare-
-        shingle co-occurrence (a loose predicate, ~59 candidates/doc on a
-        shared-vocabulary corpus; the verify constant is the quadratic-ish
-        cost being bounded here).
-      * n > max_exact_rows: dedup_minhash_lsh — banded MinHash candidates,
-        ~4 orders of magnitude fewer candidates on this corpus for the
-        same verified output. RECALL CONTRACT: a true pair at Jaccard t
+      * n <= gates.EXACT_PAIRS_MAX_ROWS: dedup_ngram_jaccard — candidates
+        from rare-shingle co-occurrence (a loose predicate, ~59
+        candidates/doc on a shared-vocabulary corpus; the verify constant
+        is the quadratic-ish cost being bounded here).
+      * n > gates.EXACT_PAIRS_MAX_ROWS: dedup_minhash_lsh — banded MinHash
+        candidates, ~4 orders of magnitude fewer candidates on this corpus
+        for the same verified output. RECALL CONTRACT: a true pair at Jaccard t
         collides in >= 1 of the 16 bands with probability
         1 - (1 - t^4)^16 (>= 0.9998 at t = 0.8, ~0.974 at the 0.6
         threshold edge); precision stays 1.0 because every candidate is
         exact-verified. Pairs the bands miss are the dispatch's documented
         loss — callers needing exactness above the ceiling must raise
-        max_exact_rows explicitly and pay the verify constant.
+        gates.EXACT_PAIRS_MAX_ROWS and pay the verify constant.
 
     The count is one metadata-cheap job (same contract as the GEMM block
     sizer and the LSH width sizer); a caller that knows the row count, such
     as a raw table's footer total, passes n_rows and runs none."""
     n = df.count() if n_rows is None else n_rows
-    if n <= max_exact_rows:
+    if n <= gates.EXACT_PAIRS_MAX_ROWS:
         return dedup_ngram_jaccard(
             df, id_col, text_col, k=k, threshold=threshold, max_df=max_df
         )
@@ -756,16 +740,6 @@ def dedup_simhash(
     )
 
 
-# Single-task union-find ceiling for dedup_components: below this many
-# verified pairs the whole closure runs as ONE task (the "filtering"
-# pattern — Lattanzi et al., SPAA'11: the verified near-dup pair set is
-# orders of magnitude smaller than the corpus, so once candidate
-# generation has distributed, the closure's input fits one worker).
-# 4M pairs = two 32 MB int64 columns + an O(nodes) parent array — far
-# inside a task's memory; above it the label-propagation sweeps run.
-UNIONFIND_MAX_PAIRS = 4_194_304
-
-
 def _components_unionfind(und: DataFrame) -> DataFrame:
     """Exact connected components over a (a, b) long pair table as ONE
     task: ids are compressed to dense indices (np.unique), then
@@ -811,7 +785,6 @@ def dedup_components(
     col_b: str = "doc_b",
     max_iter: int = 20,
     strict: bool = True,
-    unionfind_max_pairs: int = UNIONFIND_MAX_PAIRS,
 ) -> DataFrame:
     """(node, component): connected components over near-duplicate pairs —
     the step that turns pairwise dedup output into canonical groups (keep
@@ -819,9 +792,8 @@ def dedup_components(
 
     TWO PHYSICAL PATHS, one output contract (parity pinned in
     tests/test_llm_ops.py::test_dedup_components_unionfind_matches_sweeps):
-    below ``unionfind_max_pairs`` the closure runs as one exact
-    union-find task (see UNIONFIND_MAX_PAIRS); above it, the
-    distributed min-label sweeps below.
+    below ``gates.UNIONFIND_MAX_PAIRS`` the closure runs as one exact
+    union-find task; above it, the distributed min-label sweeps below.
 
     Iterative min-label propagation: every node starts labeled with itself;
     each sweep takes the min label over direct neighbors AND itself (the
@@ -867,7 +839,7 @@ def dedup_components(
     # no symmetrized edge table. Above the gate the distributed
     # min-label sweeps below take over unchanged. The count is one
     # cheap action over already-checkpointed blocks.
-    if und.count() <= unionfind_max_pairs:
+    if und.count() <= gates.UNIONFIND_MAX_PAIRS:
         return _components_unionfind(und)
     nodes = (
         und.select(F.col("a").alias("node"))
@@ -1131,7 +1103,6 @@ def dedup_embedding_cosine(
     vec_col: str,
     threshold: float = 0.45,
     n_blocks: int | None = None,
-    target_block_rows: int = 8192,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine >= threshold — EXACT, via
@@ -1163,7 +1134,7 @@ def dedup_embedding_cosine(
     B tunes task granularity: one block is n/B vectors * dim * 8 bytes and
     one task's cosine matrix is (n/B)^2 * 8 bytes; flops per task are
     (n/B)^2 * dim at BLAS speed. By default B is SIZED FROM THE DATA
-    (ceil(n / target_block_rows), one count job) so the per-task matrix
+    (ceil(n / gates.GEMM_BLOCK_ROWS), one count job) so the per-task matrix
     stays ~0.5 GB regardless of corpus size — a fixed B is a scale trap:
     the 64x probe measured the default-8 blocks at 320k rows building
     13 GB matrices per task (333 s of allocation/GC for ~30 s of BLAS).
@@ -1187,7 +1158,7 @@ def dedup_embedding_cosine(
         n_blocks = max(
             min_b,
             math.ceil(
-                (df.count() if n_rows is None else n_rows) / target_block_rows
+                (df.count() if n_rows is None else n_rows) / gates.GEMM_BLOCK_ROWS
             ),
         )
     route_df = F.broadcast(
@@ -1286,18 +1257,16 @@ def dedup_embedding_cosine_auto(
     id_col: str,
     vec_col: str,
     threshold: float = 0.45,
-    max_exact_rows: int = EXACT_PAIRS_MAX_ROWS,
-    target_block_rows: int = 8192,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Count-derived dispatch over the two embedding near-dup paths
     (round-8 verdict ask #1): same (id_a, id_b, cosine) output contract,
     both verified with the same exact JVM cosine expression.
 
-      * n <= max_exact_rows: dedup_embedding_cosine — the EXACT blocked
-        GEMM. O(n^2) flops by problem statement; the ceiling bounds where
-        that is allowed to run.
-      * n > max_exact_rows: ann_lsh_buckets — count-auto-sized
+      * n <= gates.EXACT_PAIRS_MAX_ROWS: dedup_embedding_cosine — the EXACT
+        blocked GEMM. O(n^2) flops by problem statement; the ceiling bounds
+        where that is allowed to run.
+      * n > gates.EXACT_PAIRS_MAX_ROWS: ann_lsh_buckets — count-auto-sized
         random-hyperplane signatures, banded candidates, hamming <= 4
         verify then exact cosine. RECALL CONTRACT: only pairs whose
         signatures differ in <= 4 of the 5*lsh_band_bits_for(n) planes
@@ -1306,21 +1275,14 @@ def dedup_embedding_cosine_auto(
         dispatch's documented loss — this corpus measured qualifying
         pairs at hamming up to 10/16. Precision stays 1.0 (exact cosine
         verify). Callers needing the exact product above the ceiling must
-        raise max_exact_rows explicitly and budget the GEMM flops.
+        raise gates.EXACT_PAIRS_MAX_ROWS and budget the GEMM flops.
 
     The count is one metadata-cheap job, passed down as the chosen path's
     n_rows so its own sizer does not count again; a caller that knows the
     row count passes n_rows and runs none."""
     n = df.count() if n_rows is None else n_rows
-    if n <= max_exact_rows:
-        return dedup_embedding_cosine(
-            df,
-            id_col,
-            vec_col,
-            threshold,
-            target_block_rows=target_block_rows,
-            n_rows=n,
-        )
+    if n <= gates.EXACT_PAIRS_MAX_ROWS:
+        return dedup_embedding_cosine(df, id_col, vec_col, threshold, n_rows=n)
     return ann_lsh_buckets(
         df,
         id_col=id_col,
@@ -1340,7 +1302,7 @@ def semantic_dedup(
     vec_col: str,
     threshold: float = 0.4,
     n_bits: int | None = None,
-    target_bucket_rows: int = SEMANTIC_TARGET_BUCKET_ROWS,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column:
     coarse-cluster the corpus, then within each cluster drop every item
@@ -1364,12 +1326,13 @@ def semantic_dedup(
     sum_b |bucket_b|^2 * dim — bounded by the quantizer granularity, the
     same contract SemDeDup runs at web scale. n_bits is the knob: 2**20
     buckets ~= the paper's k=110k at LAION scale. BY DEFAULT it is SIZED
-    FROM THE DATA — max(6, ceil(log2(n / target_bucket_rows))), capped at
-    SEMANTIC_MAX_BITS, one count job — because a fixed bucket count is a
-    scale trap: occupancy grows linearly with the corpus and within-bucket
-    work quadratically (the composed-sf1 bench measured fixed-6-bits at
-    21.9 s for 10x the vectors; adaptive bits keep rows/bucket ~constant,
-    the paper's k-grows-with-n contract). The dropped-id set is
+    FROM THE DATA — max(6, ceil(log2(n / SEMANTIC_TARGET_BUCKET_ROWS))),
+    capped at SEMANTIC_MAX_BITS, from one count job or the caller's n_rows
+    — because a fixed bucket count is a scale trap: occupancy grows
+    linearly with the corpus and within-bucket work quadratically (the
+    composed-sf1 bench measured fixed-6-bits at 21.9 s for 10x the
+    vectors; adaptive bits keep rows/bucket ~constant, the paper's
+    k-grows-with-n contract). The dropped-id set is
     output-bounded and flows into an un-forced anti-join (AQE broadcasts
     it only when it measures small). Cross-bucket recall loss is the
     documented SemDeDup tradeoff; the exact-product path is
@@ -1381,9 +1344,10 @@ def semantic_dedup(
     if n_bits is None:
         import math
 
+        n = df.count() if n_rows is None else n_rows
         n_bits = min(
             SEMANTIC_MAX_BITS,
-            max(6, math.ceil(math.log2(max(1, df.count()) / target_bucket_rows))),
+            max(6, math.ceil(math.log2(max(1, n) / SEMANTIC_TARGET_BUCKET_ROWS))),
         )
     bucket = F.lit(0)
     for d in range(n_bits):

@@ -13,13 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.caching import tracked_persist
-
-# Row ceiling for broadcasting a set computed at run time: 4M rows of a
-# few int64 columns is ~32-100 MB serialized, inside executor and driver
-# budgets. Above it the join falls back to a shuffle (AQE still converts
-# it at run time if the set's bytes turn out small).
-BROADCAST_MAX_ROWS = 4_000_000
 
 
 def enrich(
@@ -39,13 +34,13 @@ def enrich(
 
 def broadcast_if_small(df: DataFrame) -> DataFrame:
     """Persist ``df``, count it, and hint a broadcast only when it holds at
-    most BROADCAST_MAX_ROWS rows. For sets whose size only the data
+    most gates.BROADCAST_MAX_ROWS rows. For sets whose size only the data
     decides (rare shingles, frequent windows, a new batch's bands): an
     unconditional hint OOMs when the set is corpus-sized, and without one
     Catalyst cannot broadcast a derived frame that has no size statistics.
     The count and the join read the same persisted blocks."""
     df = tracked_persist(df)
-    return F.broadcast(df) if df.count() <= BROADCAST_MAX_ROWS else df
+    return F.broadcast(df) if df.count() <= gates.BROADCAST_MAX_ROWS else df
 
 
 def left_join_default(

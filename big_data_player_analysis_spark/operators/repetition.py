@@ -20,7 +20,7 @@ Scale design (100 TB):
     corpus, billions of hashes on a web crawl). The removal join is
     therefore SIZE-GATED (round-3 verdict, joins.py:broadcast_if_small):
     the frequent set is persisted and counted, and only if it is at most
-    joins.BROADCAST_MAX_ROWS does the semi join take a broadcast hint
+    gates.BROADCAST_MAX_ROWS does the semi join take a broadcast hint
     (corpus-side window stream never exchanged); above the gate it runs
     as a plain shuffle join — AQE still converts it to a broadcast at
     runtime if the set turns out small, but an unbounded set can no
@@ -98,7 +98,7 @@ def remove_repeated_windows(
     The frequent-set join is size-gated (broadcast_if_small): the set is
     persisted and counted (one extra cheap job over the persisted
     aggregate — the join reuses the cache), and the broadcast hint is
-    applied only up to joins.BROADCAST_MAX_ROWS. min_docs=2 on a web
+    applied only up to gates.BROADCAST_MAX_ROWS. min_docs=2 on a web
     corpus makes the set unbounded (round-3 verdict).
 
     CALLER CONTRACT for ``scatter=False`` (round-9 ADVICE): the input is

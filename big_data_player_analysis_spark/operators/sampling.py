@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
+
 # Resolution of the hash bucket space: first 4 md5 hex chars = 65536 buckets.
 _BUCKETS = 16**4
 
@@ -97,12 +99,6 @@ def hex_bucket(key: Column) -> Column:
     return val
 
 
-# Bucket sizing for shard_assign's intra-shard position: same
-# load-adaptive contract as the duels derivation / distribution_ranks —
-# one task should own at most ~256k rows, at ANY shard count.
-SHARD_BUCKET_TARGET_ROWS = 262_144
-
-
 def shard_assign(
     df: DataFrame, key_col: str, n_shards: int, n_buckets: int | None = None
 ) -> DataFrame:
@@ -138,11 +134,8 @@ def shard_assign(
     from pyspark.sql import Window
 
     if n_buckets is None:
-        n = df.count()
-        n_buckets = (
-            max(1, min(_BUCKETS, -(-n // (SHARD_BUCKET_TARGET_ROWS * n_shards))))
-            if n
-            else 1
+        n_buckets = gates.bucket_count(
+            df.count(), gates.SHARD_BUCKET_TARGET_ROWS * n_shards, _BUCKETS
         )
     key = F.col(key_col)
     h = F.md5(key.cast("string"))

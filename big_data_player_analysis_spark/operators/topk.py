@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
+
 
 def top_k(df: DataFrame, order_by: list[Column], k: int = 10) -> DataFrame:
     """Global top-k. Pass fully deterministic order columns (include a
@@ -48,8 +50,6 @@ def distribution_ranks(
     tiebreak_col: str,
     n_tiles: int = 4,
     n_buckets: int | None = None,
-    target_rows: int = 262_144,
-    max_buckets: int = 65_536,
 ) -> DataFrame:
     """ntile / percent_rank / cume_dist per partition WITHOUT a per-group
     global sort: the direct window —
@@ -88,7 +88,9 @@ def distribution_ranks(
     ).first()
     lo, hi, n_rows = row["lo"], row["hi"], row["n"]
     if n_buckets is None:
-        n_buckets = max(1, min(max_buckets, -(-n_rows // target_rows))) if n_rows else 1
+        n_buckets = gates.bucket_count(
+            n_rows, gates.RANK_BUCKET_TARGET_ROWS, gates.RANK_BUCKET_MAX
+        )
     if lo is None or hi is None or lo == hi or n_buckets <= 1:
         bkt = F.lit(0)
     else:

@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.caching import tracked_local_checkpoint
 from pyspark.sql import functions as F
 
@@ -111,23 +112,19 @@ class BpeResult:
     iterations: int = 0
 
 
-# Run the merge loop driver-locally when the histogram cap is at or below
-# this many words. The vocab after word_histogram is <= max_words rows BY
-# CONSTRUCTION — a parameter bound, not a data-dependent one — so below
-# the gate the iterative refinement is a small-data loop that 2*n_merges
-# vocab-sized Spark jobs only slow down (~0.25 s scheduler constant per
-# job at ANY scale; guide §1.2 step 1 — don't distribute work that fits
-# in one process). The gate is sized to what _bpe_train_local's DRIVER
-# STRUCTURES cost, not to the collected string bytes (round-9 ADVICE):
-# per word the local loop holds a symbol tuple, Counter entries, and
-# per-pair `where` sets of tuple refs — ~1 KB of Python objects/word —
-# plus _encode_word replay over every word for the vocab surface, so
-# 2^18 words ~ 256 MB of driver heap and sub-second replay: comfortably
-# inside the driver budget where the old 2^22 gate (~4 GB of objects,
-# minutes of replay) was not. Production vocab caps (10^5-10^6 words)
-# mostly sit under it; callers above the gate get the distributed vocab
-# loop below, exactly as before.
-BPE_LOCAL_MAX_WORDS = 262_144
+# Distributed-loop constants (used above gates.BPE_LOCAL_MAX_WORDS).
+# The merge fold nests one expression layer per iteration, so every
+# CHECKPOINT_EVERY-th iteration materializes the vocab with
+# localCheckpoint (vocab-sized, cheap) and resets the lineage, the same
+# no-growth contract plans/heroic.py pins. VOCAB_PARTITIONS sizes every
+# per-iteration job: the ordered-limit histogram materializes as a SINGLE
+# partition (GlobalLimit), which would run each iteration's merge fold
+# single-threaded over the whole vocab AND schedule full shuffle-width
+# task waves for the vocab-sized pair aggregate; a small explicit width
+# keeps the fold parallel while bounding per-iteration scheduling to a
+# handful of tasks.
+CHECKPOINT_EVERY = 4
+VOCAB_PARTITIONS = 4
 
 
 def _bpe_train_local(
@@ -205,37 +202,22 @@ def bpe_train(
     text_col: str,
     n_merges: int = 20,
     max_words: int = 50_000,
-    checkpoint_every: int = 4,
-    vocab_partitions: int = 4,
-    local_max_words: int = BPE_LOCAL_MAX_WORDS,
 ) -> BpeResult:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the ordered
     merge table and the final symbolized vocab. Stops early when no
     adjacent pair is left (fully merged vocab).
 
-    Round-9 optimization: when ``max_words <= local_max_words`` the merge
-    loop runs DRIVER-LOCALLY over the collected histogram
+    Round-9 optimization: when ``max_words <= gates.BPE_LOCAL_MAX_WORDS``
+    the merge loop runs DRIVER-LOCALLY over the collected histogram
     (_bpe_train_local) — the corpus-sized histogram job is unchanged, but
     the 2*n_merges vocab-sized Spark jobs (each ~0.25-0.5 s of pure
     scheduler constant at any data size — the vocab is parameter-bounded,
     never corpus-bounded) collapse into one collect + an incremental-
     pair-count Python loop. Measured sf0.1: 5.1 -> ~1.1 s with
     hash-identical merge tables (tests pin local == distributed == the
-    pure-Python reference). Pass local_max_words=0 to force the
-    distributed loop.
-
-    Distributed-loop knobs (used above the gate): checkpoint_every bounds
-    plan growth — the merge fold nests one expression layer per
-    iteration, so every k-th iteration materializes the vocab with
-    localCheckpoint (vocab-sized, cheap) and resets the lineage, the same
-    no-growth contract plans/heroic.py pins. vocab_partitions sizes every
-    per-iteration job: the ordered-limit histogram materializes as a
-    SINGLE partition (GlobalLimit), which would run each iteration's
-    merge fold single-threaded over the whole vocab AND schedule full
-    shuffle-width task waves for the vocab-sized pair aggregate; a small
-    explicit width keeps the fold parallel while bounding per-iteration
-    scheduling to a handful of tasks."""
-    if max_words <= local_max_words:
+    pure-Python reference). Above the gate the distributed vocab loop
+    runs (see CHECKPOINT_EVERY and VOCAB_PARTITIONS)."""
+    if max_words <= gates.BPE_LOCAL_MAX_WORDS:
         hist_rows = [
             (r["word"], r["freq"])
             for r in word_histogram(docs, text_col, max_words).collect()
@@ -258,7 +240,7 @@ def bpe_train(
         return result
     vocab = (
         word_histogram(docs, text_col, max_words)
-        .repartition(vocab_partitions)
+        .repartition(VOCAB_PARTITIONS)
         .select("word", "freq", _initial_symbols().alias("symbols"))
         .transform(tracked_local_checkpoint)
     )
@@ -283,7 +265,7 @@ def bpe_train(
         left, right = best["pair"].split(" ", 1)
         result.merges.append((left, right, int(best["mx"])))
         vocab = _merge_pair(vocab, left, right)
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % CHECKPOINT_EVERY == 0:
             vocab = vocab.transform(tracked_local_checkpoint)
         result.iterations = it + 1
     result.vocab = vocab

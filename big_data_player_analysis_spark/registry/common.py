@@ -13,23 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.catalog import footer_rows, load_table, table_path
-
-# Bucket sizing for the duels derivation's lead() window: each event_type
-# stream is range-bucketed on ts so the sort runs over
-# n_types x n_buckets window partitions instead of n_types (round-7
-# verdict wrong #1: event_type has 5 values, so the direct window is a
-# 5-task corpus sort at any scale). n_buckets is LOAD-ADAPTIVE —
-# ceil(rows / TARGET_ROWS) clamped to [1, MAX] — so the driver-SF corpora
-# keep the cheap single-bucket plan (the plain per-event_type window with
-# no stitch, which is all a 100k-row table needs) while the 64x
-# probe runs 25 buckets and a 10^12-row corpus hits the cap. The cap
-# keeps the boundary-stitch firsts table (n_types x n_buckets rows)
-# broadcast-small; a deploy trading a bigger stitch table for narrower
-# window sorts raises it and, past broadcast range, switches the stitch
-# join to a (tiny) shuffle join.
-TS_BUCKET_TARGET_ROWS = 262_144
-TS_BUCKET_MAX = 65_536
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -61,7 +46,7 @@ def duel_edges(
     the identical output shuffle-parallel instead:
 
     1. range-bucket ts into equal spans (bucket count auto-sizes from the
-       row count — see TS_BUCKET_TARGET_ROWS; the bounds come from one
+       row count — see gates.TS_BUCKET_TARGET_ROWS; the bounds come from one
        3-scalar driver agg, a job that runs only when more than one bucket
        is needed). Bucket is a monotone function
        of ts alone, so ties in ts land in one bucket and the concatenation
@@ -75,20 +60,20 @@ def duel_edges(
        <= n_types x n_buckets rows) whose own lead() window is over that
        tiny table only.
 
-    At one bucket (up to TS_BUCKET_TARGET_ROWS events) it IS the direct
+    At one bucket (up to gates.TS_BUCKET_TARGET_ROWS events) it IS the direct
     window, with no bucket key and no stitch. Output is row-for-row
     identical to the direct window at EVERY bucket count (pinned by
     tests/test_plans.py::test_duel_edges_matches_direct_window and the
     unchanged DUELS_CTE oracle); only the physical plan changes.
 
     The row count comes from the table's parquet footers, read until it
-    passes TS_BUCKET_TARGET_ROWS: a table within one bucket builds with no
+    passes gates.TS_BUCKET_TARGET_ROWS: a table within one bucket builds with no
     Spark job, and a larger one is sized by the agg's count.
     """
     events = t(spark, sf_dir, "events")
     if n_buckets is None:
-        n = footer_rows(table_path(sf_dir, "events"), stop_after=TS_BUCKET_TARGET_ROWS)
-        if n <= TS_BUCKET_TARGET_ROWS:
+        target = gates.TS_BUCKET_TARGET_ROWS
+        if footer_rows(table_path(sf_dir, "events"), stop_after=target) <= target:
             n_buckets = 1
     return duel_edges_from(events, n_buckets=n_buckets)
 
@@ -104,9 +89,9 @@ def duel_edges_from(events: DataFrame, n_buckets: int | None = None) -> DataFram
     if n_buckets is None or n_buckets > 1:
         lo, hi, n_rows = _events_ts_stats(events)
     if n_buckets is None:
-        n_buckets = max(
-            1, min(TS_BUCKET_MAX, -(-n_rows // TS_BUCKET_TARGET_ROWS))
-        ) if n_rows else 1
+        n_buckets = gates.bucket_count(
+            n_rows, gates.TS_BUCKET_TARGET_ROWS, gates.TS_BUCKET_MAX
+        )
     if lo is None or hi is None or n_buckets <= 1:
         # empty corpus or a single bucket: the plain per-event_type window,
         # with no bucket key and no boundary stitch (its join could only

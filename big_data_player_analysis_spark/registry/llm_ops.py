@@ -383,7 +383,7 @@ def dedup_exact_q(spark: SparkSession, sf: str) -> DataFrame:
 @query("dedup_ngram_jaccard", sql=SQL_JACCARD, tags=("llm", "dedup"))
 def dedup_jaccard_q(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs by exact 8-gram Jaccard >= 0.6, AUTO-DISPATCHED
-    (round-8 verdict ask #1): below EXACT_PAIRS_MAX_ROWS (32k — covers
+    (round-8 verdict ask #1): below gates.EXACT_PAIRS_MAX_ROWS (32k — covers
     every driver gate SF) this is the exact rare-shingle inverted-index
     path the SQL oracle mirrors; above it the count-derived dispatch
     routes to dedup_minhash_lsh (same verified output contract, recall
@@ -836,7 +836,7 @@ def corpus_curation_q(spark: SparkSession, sf: str) -> DataFrame:
 )
 def dedup_cosine_q(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup pairs, cosine >= 0.45, AUTO-DISPATCHED (round-8
-    verdict ask #1): below EXACT_PAIRS_MAX_ROWS (32k — covers every
+    verdict ask #1): below gates.EXACT_PAIRS_MAX_ROWS (32k — covers every
     driver gate SF) this is the EXACT blocked GEMM (block-replicated
     applyInPandas matmul + JVM-expression verify — no nested-loop join;
     plan pinned in tests/test_plans.py) whose output is bit-identical to
@@ -895,6 +895,7 @@ def semantic_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id",
         "embedding",
         SEMANTIC_DEDUP_THRESHOLD,
+        n_rows=footer_rows(table_path(sf, "embeddings")),
     )
 
 

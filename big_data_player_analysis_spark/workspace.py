@@ -24,18 +24,6 @@ import shutil
 import tempfile
 from collections.abc import Iterator
 
-#: Old round-4 locations outside the workspace; removed by clean_scratch()
-#: so upgrading in place reclaims their bytes too.
-_LEGACY_DIRS = (
-    "/tmp/bdpa_ingest",
-    "/tmp/bdpa_mv",
-    "/tmp/bdpa_ingest_probe",
-    "/tmp/bdpa_mv_probe",
-    "/tmp/bdpa_layout",
-    "/tmp/bdpa_composed",
-)
-
-
 def workspace_root() -> str:
     """Root for all out-of-repo writes (override: $BDPA_WORKSPACE)."""
     root = os.environ.get("BDPA_WORKSPACE", "/tmp/bdpa_workspace")
@@ -146,10 +134,10 @@ def _pid_alive(pid: int) -> bool:
 
 
 def clean_scratch(spark_local: bool = True) -> None:
-    """Wipe the reclaimable tier (and legacy round-4 locations). Called by
-    tool/bench entrypoints BEFORE building a SparkSession. Scratch-tier
-    contents are per-invocation by contract (try/finally-reclaimed), so
-    anything found there belongs to a dead process; spark-local subdirs
+    """Wipe the reclaimable tier. Called by tool/bench entrypoints BEFORE
+    building a SparkSession. Scratch-tier contents are per-invocation by
+    contract (try/finally-reclaimed), so anything found there that is not
+    pid-tagged by a live process is reclaimed; spark-local subdirs
     are per-pid and removed ONLY when their owning process is gone — a
     concurrent live session's spill is never touched (spark_local=False
     skips even the dead-pid sweep, for callers that want scratch-only)."""
@@ -163,16 +151,10 @@ def clean_scratch(spark_local: bool = True) -> None:
         start = int(m.group(2)) if m.group(2) else None
         return _owner_is_live(pid, start)
 
-    for d in (scratch_root(), *(_LEGACY_DIRS)):
-        if os.path.isdir(d):
-            for entry in os.listdir(d):
-                if d == scratch_root() and _owner_alive(entry):
-                    continue
-                shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
-    # legacy roots themselves (empty after the loop)
-    for d in _LEGACY_DIRS:
-        with contextlib.suppress(OSError):
-            os.rmdir(d)
+    scratch = scratch_root()
+    for entry in os.listdir(scratch):
+        if not _owner_alive(entry):
+            shutil.rmtree(os.path.join(scratch, entry), ignore_errors=True)
     if spark_local:
         local_root = os.path.join(workspace_root(), "spark-local")
         if os.path.isdir(local_root):

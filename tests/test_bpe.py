@@ -10,7 +10,9 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.plans.bpe import (
+    CHECKPOINT_EVERY,
     EOW,
     _merge_pair,
     bpe_merges_df,
@@ -68,14 +70,15 @@ def test_bpe_matches_reference_algorithm(spark):
     assert got == python_bpe(CORPUS, 12)
 
 
-def test_bpe_distributed_path_matches_local_and_reference(spark):
-    """local_max_words=0 forces the distributed vocab loop; its merge
+def test_bpe_distributed_path_matches_local_and_reference(spark, monkeypatch):
+    """A closed BPE local gate forces the distributed vocab loop; its merge
     table (order, pairs, counts) and final vocab rows must be identical
     to the driver-local gate path and the pure-Python reference — the
     round-9 size-gated dispatch must be invisible in the output."""
     docs = spark.createDataFrame(CORPUS, "text string")
-    dist = bpe_train(docs, "text", n_merges=12, local_max_words=0)
     local = bpe_train(docs, "text", n_merges=12)
+    monkeypatch.setattr(gates, "BPE_LOCAL_MAX_WORDS", 0)
+    dist = bpe_train(docs, "text", n_merges=12)
     assert dist.merges == local.merges == python_bpe(CORPUS, 12)
     assert dist.iterations == local.iterations
     dist_vocab = sorted(
@@ -108,19 +111,20 @@ def test_bpe_stops_when_fully_merged(spark):
     assert [m[:2] for m in res.merges] == [("a", EOW), ("b", EOW)]
 
 
-def test_bpe_plan_does_not_grow(spark):
+def test_bpe_plan_does_not_grow(spark, monkeypatch):
     """The merge fold nests one expression layer per iteration;
     localCheckpoint must reset lineage so the vocab after many merges
     plans as a bounded tree over a materialized RDD scan, not a
     12-iteration expression pyramid."""
     docs = spark.createDataFrame(CORPUS, "text string")
-    # local_max_words=0: the no-growth contract is a property of the
+    # gate closed: the no-growth contract is a property of the
     # DISTRIBUTED loop (the driver-local gate path has no Spark lineage)
-    res = bpe_train(docs, "text", n_merges=12, checkpoint_every=4, local_max_words=0)
+    monkeypatch.setattr(gates, "BPE_LOCAL_MAX_WORDS", 0)
+    res = bpe_train(docs, "text", n_merges=12)
     plan = res.vocab._jdf.queryExecution().optimizedPlan().toString()
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
-    # at most checkpoint_every merge folds above the checkpoint scan
-    assert plan.count("aggregate(") <= 4 * 2
+    # at most CHECKPOINT_EVERY merge folds above the checkpoint scan
+    assert plan.count("aggregate(") <= CHECKPOINT_EVERY * 2
 
 
 def test_bpe_encode_matches_reference(spark):

@@ -216,7 +216,7 @@ class TestDuplicateSpanProfile:
         assert got == self._profile(rows, k=4)
 
     def test_dup_set_join_size_gated(self, spark, monkeypatch):
-        from big_data_player_analysis_spark.operators import joins
+        from big_data_player_analysis_spark import gates
 
         df = self._df(spark, [(1, "a b c d"), (2, "a b c d")])
         plan = (
@@ -224,7 +224,7 @@ class TestDuplicateSpanProfile:
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-        monkeypatch.setattr(joins, "BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(gates, "BROADCAST_MAX_ROWS", 0)
         plan_gated = (
             duplicate_span_profile(df, "doc_id", "text", window_tokens=2)
             ._jdf.queryExecution().executedPlan().toString()

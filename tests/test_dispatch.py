@@ -11,8 +11,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.operators.dedup import (
-    EXACT_PAIRS_MAX_ROWS,
     dedup_embedding_cosine,
     dedup_embedding_cosine_auto,
     dedup_minhash_lsh,
@@ -38,7 +38,7 @@ def rows(df):
 
 def test_jaccard_dispatch_exact_below_ceiling(spark):
     docs = t(spark, SF, "documents")
-    assert docs.count() <= EXACT_PAIRS_MAX_ROWS
+    assert docs.count() <= gates.EXACT_PAIRS_MAX_ROWS
     auto = dedup_ngram_jaccard_auto(docs, "doc_id", "text")
     exact = dedup_ngram_jaccard(docs, "doc_id", "text")
     # the minhash path materializes its signature/candidate tables via
@@ -50,9 +50,10 @@ def test_jaccard_dispatch_exact_below_ceiling(spark):
     assert rows(auto) == rows(exact)
 
 
-def test_jaccard_dispatch_routes_above_ceiling(spark):
+def test_jaccard_dispatch_routes_above_ceiling(spark, monkeypatch):
     docs = t(spark, SF, "documents")
-    auto = dedup_ngram_jaccard_auto(docs, "doc_id", "text", max_exact_rows=10)
+    monkeypatch.setattr(gates, "EXACT_PAIRS_MAX_ROWS", 10)
+    auto = dedup_ngram_jaccard_auto(docs, "doc_id", "text")
     banded = dedup_minhash_lsh(docs, "doc_id", "text")
     p = plan_str(auto)
     # the minhash path's signature/candidate stages sit behind lazy
@@ -64,7 +65,7 @@ def test_jaccard_dispatch_routes_above_ceiling(spark):
 
 def test_cosine_dispatch_exact_below_ceiling(spark):
     emb = t(spark, SF, "embeddings")
-    assert emb.count() <= EXACT_PAIRS_MAX_ROWS
+    assert emb.count() <= gates.EXACT_PAIRS_MAX_ROWS
     auto = dedup_embedding_cosine_auto(emb, "vec_id", "embedding")
     exact = dedup_embedding_cosine(emb, "vec_id", "embedding")
     p = plan_str(auto)
@@ -72,9 +73,10 @@ def test_cosine_dispatch_exact_below_ceiling(spark):
     assert rows(auto) == rows(exact)
 
 
-def test_cosine_dispatch_routes_above_ceiling(spark):
+def test_cosine_dispatch_routes_above_ceiling(spark, monkeypatch):
     emb = t(spark, SF, "embeddings")
-    auto = dedup_embedding_cosine_auto(emb, "vec_id", "embedding", max_exact_rows=10)
+    monkeypatch.setattr(gates, "EXACT_PAIRS_MAX_ROWS", 10)
+    auto = dedup_embedding_cosine_auto(emb, "vec_id", "embedding")
     p = plan_str(auto)
     # the ANN path has no applyInPandas GEMM stage; its signature +
     # verify stages are scalar Arrow pandas_udfs
@@ -84,19 +86,18 @@ def test_cosine_dispatch_routes_above_ceiling(spark):
     assert [f.name for f in auto.schema.fields] == ["id_a", "id_b", "cosine"]
 
 
-def test_cosine_dispatch_counts_the_corpus_once(spark):
+def test_cosine_dispatch_counts_the_corpus_once(spark, monkeypatch):
     """Building either regime runs the dispatcher's one count and nothing
     else: the chosen path sizes itself (GEMM block count, LSH signature
     width) from the n_rows it is handed instead of counting again."""
     emb = t(spark, SF, "embeddings")
     _, one_count = jobs_for(spark, "dispatch_bare_count", emb.count)
     assert one_count >= 1
-    for ceiling in (EXACT_PAIRS_MAX_ROWS, 10):  # GEMM, then the ANN route
+    for ceiling in (gates.EXACT_PAIRS_MAX_ROWS, 10):  # GEMM, then the ANN route
+        monkeypatch.setattr(gates, "EXACT_PAIRS_MAX_ROWS", ceiling)
         _, jobs = jobs_for(
             spark,
             f"dispatch_build_{ceiling}",
-            lambda: dedup_embedding_cosine_auto(
-                emb, "vec_id", "embedding", max_exact_rows=ceiling
-            ),
+            lambda: dedup_embedding_cosine_auto(emb, "vec_id", "embedding"),
         )
         assert jobs == one_count, (ceiling, jobs, one_count)

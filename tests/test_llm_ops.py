@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark import gates
 from big_data_player_analysis_spark.catalog import load_table
 from big_data_player_analysis_spark.operators.dedup import (
     dedup_embedding_cosine,
@@ -1190,7 +1191,7 @@ def test_dedup_components_chain_and_cliques(spark):
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_dedup_components_nonconvergence_raises(spark):
+def test_dedup_components_nonconvergence_raises(spark, monkeypatch):
     """A chain whose diameter exceeds the sweep budget must raise rather
     than silently return split components (round-1 ADVICE finding); with
     strict=False the partial labeling is returned instead."""
@@ -1199,26 +1200,22 @@ def test_dedup_components_nonconvergence_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
-    # unionfind_max_pairs=0 forces the distributed sweep path (a pair set
-    # this small otherwise routes to the single-task union-find, which
-    # has no sweep budget to exceed)
+    # a closed union-find gate forces the distributed sweep path (a pair
+    # set this small otherwise routes to the single-task union-find,
+    # which has no sweep budget to exceed)
+    monkeypatch.setattr(gates, "UNIONFIND_MAX_PAIRS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(chain, max_iter=2, unionfind_max_pairs=0)
+        dedup_components(chain, max_iter=2)
     partial = {
         r.node: r.component
-        for r in dedup_components(
-            chain, max_iter=2, strict=False, unionfind_max_pairs=0
-        ).collect()
+        for r in dedup_components(chain, max_iter=2, strict=False).collect()
     }
     assert len(set(partial.values())) > 1  # genuinely un-converged
-    full = {
-        r.node: r.component
-        for r in dedup_components(chain, max_iter=8, unionfind_max_pairs=0).collect()
-    }
+    full = {r.node: r.component for r in dedup_components(chain, max_iter=8).collect()}
     assert set(full.values()) == {1}
 
 
-def test_dedup_components_unionfind_matches_sweeps(spark):
+def test_dedup_components_unionfind_matches_sweeps(spark, monkeypatch):
     """The size-gated single-task union-find (round-9) must produce the
     identical (node, min-reachable-id) labeling as the distributed
     min-label sweeps on chains, cliques, merged components, and a random
@@ -1236,10 +1233,8 @@ def test_dedup_components_unionfind_matches_sweeps(spark):
         [(a, b) for a, b in edges if a != b], "doc_a long, doc_b long"
     )
     uf = {r.node: r.component for r in dedup_components(pairs).collect()}
-    sweeps = {
-        r.node: r.component
-        for r in dedup_components(pairs, unionfind_max_pairs=0).collect()
-    }
+    monkeypatch.setattr(gates, "UNIONFIND_MAX_PAIRS", 0)
+    sweeps = {r.node: r.component for r in dedup_components(pairs).collect()}
     assert uf == sweeps and len(uf) > 0
 
 

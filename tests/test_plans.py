@@ -193,14 +193,13 @@ def test_duel_edges_bucket_autosizing():
     """The adaptive bucket count: ceil(rows / 256k) clamped to [1, 65536]
     — single bucket at driver SFs (a 100k-row table does not need a wider
     sort than the 5 type streams), 25 buckets at the 64x probe's 6.4M
-    rows, the broadcast-safety cap at petabyte row counts."""
-    from big_data_player_analysis_spark.registry.common import (
-        TS_BUCKET_MAX,
-        TS_BUCKET_TARGET_ROWS,
-    )
+    rows, the broadcast-safety cap at petabyte row counts. The same
+    gates.bucket_count sizes shard_assign and distribution_ranks."""
+    from big_data_player_analysis_spark import gates
+    from big_data_player_analysis_spark.operators.sampling import _BUCKETS
 
     def nb(n):
-        return max(1, min(TS_BUCKET_MAX, -(-n // TS_BUCKET_TARGET_ROWS))) if n else 1
+        return gates.bucket_count(n, gates.TS_BUCKET_TARGET_ROWS, gates.TS_BUCKET_MAX)
 
     assert nb(0) == 1
     assert nb(1_000) == 1
@@ -208,7 +207,19 @@ def test_duel_edges_bucket_autosizing():
     assert nb(262_144) == 1
     assert nb(262_145) == 2
     assert nb(6_400_000) == 25  # the 64x probe
-    assert nb(10**12) == TS_BUCKET_MAX  # capped: stitch table stays broadcastable
+    assert nb(10**12) == gates.TS_BUCKET_MAX  # capped: stitch table stays broadcastable
+    # shard_assign: the target scales with the shard count, capped at the
+    # md5-prefix bucket space
+    shard_target = gates.SHARD_BUCKET_TARGET_ROWS * 8
+    assert gates.bucket_count(0, shard_target, _BUCKETS) == 1
+    assert gates.bucket_count(shard_target, shard_target, _BUCKETS) == 1
+    assert gates.bucket_count(shard_target + 1, shard_target, _BUCKETS) == 2
+    assert gates.bucket_count(10**15, shard_target, _BUCKETS) == _BUCKETS
+    # distribution_ranks
+    rank = (gates.RANK_BUCKET_TARGET_ROWS, gates.RANK_BUCKET_MAX)
+    assert gates.bucket_count(0, *rank) == 1
+    assert gates.bucket_count(6_400_000, *rank) == 25
+    assert gates.bucket_count(10**12, *rank) == gates.RANK_BUCKET_MAX
 
 
 def test_duel_edges_builds_without_a_job(spark, sf_small):
@@ -218,6 +229,16 @@ def test_duel_edges_builds_without_a_job(spark, sf_small):
     from tests.conftest import jobs_for
 
     _, n_jobs = jobs_for(spark, "duel_edges_build", lambda: duel_edges(spark, sf_small))
+    assert n_jobs == 0
+
+
+def test_semantic_dedup_builds_without_a_job(spark, sf_small, specs):
+    """llm_semantic_dedup sizes its bucket width from the embeddings
+    footers (n_rows), not a count job: building the entry runs no job."""
+    from tests.conftest import jobs_for
+
+    fn = specs["llm_semantic_dedup"].fn
+    _, n_jobs = jobs_for(spark, "semantic_dedup_build", lambda: fn(spark, sf_small))
     assert n_jobs == 0
 
 
@@ -591,11 +612,11 @@ def test_line_dedup_broadcast_gate_both_paths(spark, monkeypatch):
     stream against the frequent set (the old LeftAnti + text-regroup
     rebuild is gone — window text no longer shuffles at all): under the
     gate the semi join is a broadcast; with the gate closed
-    (joins.BROADCAST_MAX_ROWS=0) it must NOT force a broadcast — it plans as a
+    (gates.BROADCAST_MAX_ROWS=0) it must NOT force a broadcast — it plans as a
     shuffle join. autoBroadcastJoinThreshold is disabled so the assertion
     sees only the hint's effect, not a stats-based conversion."""
+    from big_data_player_analysis_spark import gates
     from big_data_player_analysis_spark.catalog import load_table
-    from big_data_player_analysis_spark.operators import joins
     from big_data_player_analysis_spark.operators.repetition import (
         remove_repeated_windows,
     )
@@ -608,7 +629,7 @@ def test_line_dedup_broadcast_gate_both_paths(spark, monkeypatch):
         assert "LeftSemi" in p_bc
         assert "BroadcastHashJoin" in p_bc and "BuildRight" in p_bc
 
-        monkeypatch.setattr(joins, "BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(gates, "BROADCAST_MAX_ROWS", 0)
         p_sh = plan_str(remove_repeated_windows(docs, "doc_id", "text"))
         assert "LeftSemi" in p_sh
         # the only broadcast allowed with the gate closed is the tiny
@@ -632,13 +653,13 @@ def test_incremental_dedup_corpus_never_exchanged_on_band_key(spark, specs):
 
 
 def test_incremental_dedup_gate_closed_falls_back_to_shuffle(spark, monkeypatch):
-    """With the broadcast gate closed (joins.BROADCAST_MAX_ROWS=0) the band join
+    """With the broadcast gate closed (gates.BROADCAST_MAX_ROWS=0) the band join
     must NOT force a broadcast — an oversized 'new batch' can never OOM
     via the hint (same defect class as the round-3 line-dedup finding)."""
     from pyspark.sql import functions as F
 
+    from big_data_player_analysis_spark import gates
     from big_data_player_analysis_spark.catalog import load_table
-    from big_data_player_analysis_spark.operators import joins
     from big_data_player_analysis_spark.operators.dedup import dedup_incremental
 
     # the default-gate test persists the equivalent band/candidate plans;
@@ -651,7 +672,7 @@ def test_incremental_dedup_gate_closed_falls_back_to_shuffle(spark, monkeypatch)
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        monkeypatch.setattr(joins, "BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(gates, "BROADCAST_MAX_ROWS", 0)
         p = plan_str(dedup_incremental(new, corpus, "doc_id", "text"))
         assert "hashpartitioning(band" in p  # shuffle band join, no hint
     finally:
