@@ -29,11 +29,20 @@ LANG_PRIORITY = ["en", "de", "fr", "es"]
 
 QUALITY_WEIGHTS = {"stop_ratio": 0.4, "alpha_ratio": 0.3, "len_score": 0.3}
 QUALITY_LEN_NORM = 100.0  # ws-token count at which len_score saturates
+# quality_score cut of the curation gate, batch pipeline and stream alike
+CURATION_MIN_QUALITY = 0.36
 
 
 def ws_token_count(text: Column) -> Column:
     """Whitespace token count: size(split(trim(text), '\\s+'))."""
     return F.size(F.split(F.trim(text), "\\s+"))
+
+
+def ws_tokens(text: Column) -> Column:
+    """Whitespace tokens as an array, NULL text read as empty: one empty
+    token, so every document keeps at least one token (unlike
+    ws_token_count, whose NULL stays NULL)."""
+    return F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
 
 
 def bpe_token_count(text: Column) -> Column:

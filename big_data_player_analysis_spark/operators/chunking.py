@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark.functions.text import ws_tokens
+
 CHUNK_SIZE = 200  # characters per chunk
 CHUNK_STRIDE = 150  # start-to-start distance => 50-char overlap
 
@@ -83,7 +85,7 @@ def chunk_tokens(
     preserved, one empty chunk), matching chunk_fixed."""
     if stride <= 0 or size <= 0 or stride > size:
         raise ValueError("need 0 < stride <= size")
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    toks = ws_tokens(F.col(text_col))
     n = n_chunks_expr(F.size(toks), size, stride)
     out = df.select(
         F.col(id_col).alias("doc_id"),

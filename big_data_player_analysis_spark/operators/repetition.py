@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, Window
 from big_data_player_analysis_spark.caching import tracked_persist
 from pyspark.sql import functions as F
 
+from big_data_player_analysis_spark.functions.text import ws_tokens
 from big_data_player_analysis_spark.operators.joins import broadcast_if_small
 
 REPEAT_WINDOW_TOKENS = 8  # tokens per window
@@ -65,7 +66,7 @@ def _windows(df: DataFrame, id_col: str, text_col: str, w: int) -> DataFrame:
     """(doc_id, n_windows, widx, wtext): non-overlapping w-token windows.
     Empty/NULL text yields one empty window, so every document survives
     to the rebuild (curation filters, not this pass, decide to drop)."""
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    toks = ws_tokens(F.col(text_col))
     n = F.ceil(F.size(toks) / F.lit(float(w))).cast("long")
     exploded = df.select(
         F.col(id_col).alias("doc_id"),
@@ -170,7 +171,7 @@ def remove_repeated_windows(
         .groupBy("doc_id")
         .agg(F.collect_set("widx").alias("_bad"))
     )
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    toks = ws_tokens(F.col(text_col))
     n = F.ceil(F.size(toks) / F.lit(float(window_tokens))).cast("long")
     base = spread.select(
         F.col(id_col).alias("doc_id"),
@@ -258,7 +259,7 @@ def _duplicate_spans(
 
     df = _scatter(df)  # the rolling-hash Arrow pass is CPU-bound per doc
     k = window_tokens
-    toks = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    toks = ws_tokens(F.col(text_col))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_text"),
@@ -403,7 +404,7 @@ def remove_duplicate_spans(
     per_doc = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("_spans")
     )
-    toks = F.split(F.trim(F.coalesce(F.col("_text"), F.lit(""))), r"\s+")
+    toks = ws_tokens(F.col("_text"))
     joined = base.join(per_doc, "doc_id", "left").select(
         "doc_id", "n_tokens", toks.alias("_toks"), "_spans"
     )

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark import gates
+from big_data_player_analysis_spark.functions.text import ws_tokens
 
 # Resolution of the hash bucket space: first 4 md5 hex chars = 65536 buckets.
 _BUCKETS = 16**4
@@ -193,7 +194,7 @@ def source_mix_weights(
     split — then a single-row total broadcast-joined back (the same
     1-row crossJoin pattern as llm_tfidf_top_terms). Sources are few, so
     the final agg is trivially small."""
-    toks = F.size(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"))
+    toks = F.size(ws_tokens(F.col(text_col)))
     per_source = (
         df.select(F.col(source_col).alias("source"), toks.alias("_nt"))
         .groupBy("source")

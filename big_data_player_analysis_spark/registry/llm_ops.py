@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from big_data_player_analysis_spark.catalog import footer_rows, table_path
 from big_data_player_analysis_spark.functions.text import (
     BPE_TOKEN_PATTERN,
+    CURATION_MIN_QUALITY,
     LANG_PRIORITY,
     LANG_STOPWORDS,
     QUALITY_FILTER_RULES,
@@ -34,6 +35,7 @@ from big_data_player_analysis_spark.functions.text import (
     top_bigram_share,
     top_unigram_share,
     ws_token_count,
+    ws_tokens,
     ws_tokens_norm,
 )
 from big_data_player_analysis_spark.operators.dedup import (
@@ -107,6 +109,18 @@ def _sql_lang_case() -> str:
         cond = " AND ".join(f"s_{lang} >= s_{o}" for o in later)
         clauses.append(f"WHEN {cond} THEN '{lang}'")
     return "CASE " + " ".join(clauses) + f" ELSE '{LANG_PRIORITY[-1]}' END"
+
+
+# SQL twin of functions.text.quality_score over a CTE carrying `text` and
+# its padded lowercase `p`
+_SQL_QUALITY_EXPR = f"""floor((
+        {QUALITY_WEIGHTS['stop_ratio']} * (CAST({_sql_lang_score('en')} AS DOUBLE)
+            / len(regexp_split_to_array(trim(text), '\\s+')))
+      + {QUALITY_WEIGHTS['alpha_ratio']} * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
+            / length(text))
+      + {QUALITY_WEIGHTS['len_score']} * least(1.0,
+            len(regexp_split_to_array(trim(text), '\\s+')) / {QUALITY_LEN_NORM})
+      ) * 1000000.0 + 0.5) / 1000000.0"""
 
 
 SQL_SHINGLES_CTE = f"""
@@ -256,14 +270,7 @@ def text_language_id(spark: SparkSession, sf: str) -> DataFrame:
     "text_quality_score",
     sql=f"""
     WITH p AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p FROM documents)
-    SELECT doc_id, floor((
-        {QUALITY_WEIGHTS['stop_ratio']} * (CAST({_sql_lang_score('en')} AS DOUBLE)
-            / len(regexp_split_to_array(trim(text), '\\s+')))
-      + {QUALITY_WEIGHTS['alpha_ratio']} * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-            / length(text))
-      + {QUALITY_WEIGHTS['len_score']} * least(1.0,
-            len(regexp_split_to_array(trim(text), '\\s+')) / {QUALITY_LEN_NORM})
-      ) * 1000000.0 + 0.5) / 1000000.0 AS quality
+    SELECT doc_id, {_SQL_QUALITY_EXPR} AS quality
     FROM p
     """,
     tags=("llm", "text"),
@@ -758,22 +765,13 @@ def near_dedup_best_quality_q(spark: SparkSession, sf: str) -> DataFrame:
     ).select("doc_id", "source", "group_size")
 
 
-CURATION_MIN_QUALITY = 0.36
-
 TAIL_CURATION = f"""
 , noncanon AS (SELECT node FROM comp WHERE component <> node),
 p AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p FROM documents),
 s AS (
   SELECT doc_id,
          {', '.join(f'{_sql_lang_score(lang)} AS s_{lang}' for lang in LANG_PRIORITY)},
-         floor((
-           {QUALITY_WEIGHTS['stop_ratio']} * (CAST({_sql_lang_score('en')} AS DOUBLE)
-               / len(regexp_split_to_array(trim(text), '\\s+')))
-         + {QUALITY_WEIGHTS['alpha_ratio']} * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / length(text))
-         + {QUALITY_WEIGHTS['len_score']} * least(1.0,
-               len(regexp_split_to_array(trim(text), '\\s+')) / {QUALITY_LEN_NORM})
-         ) * 1000000.0 + 0.5) / 1000000.0 AS quality
+         {_SQL_QUALITY_EXPR} AS quality
   FROM p
 )
 SELECT doc_id, quality, {_sql_lang_case()} AS pred_lang
@@ -2535,9 +2533,7 @@ def pack_sequences_q(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     with_nt = docs.select(
         "doc_id",
-        F.size(
-            F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
-        ).cast("long").alias("nt"),
+        F.size(ws_tokens(F.col("text"))).cast("long").alias("nt"),
     )
     return pack_sequences(with_nt, "doc_id", "nt", budget=PACK_BUDGET, n_groups=PACK_GROUPS)
 
@@ -2870,15 +2866,6 @@ def bigram_surprisal_q(spark: SparkSession, sf: str) -> DataFrame:
 
 # ------------------------------------- relative quality threshold filter
 
-_SQL_QUALITY_EXPR = f"""floor((
-        {QUALITY_WEIGHTS['stop_ratio']} * (CAST({_sql_lang_score('en')} AS DOUBLE)
-            / len(regexp_split_to_array(trim(text), '\\s+')))
-      + {QUALITY_WEIGHTS['alpha_ratio']} * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-            / length(text))
-      + {QUALITY_WEIGHTS['len_score']} * least(1.0,
-            len(regexp_split_to_array(trim(text), '\\s+')) / {QUALITY_LEN_NORM})
-      ) * 1000000.0 + 0.5) / 1000000.0"""
-
 SQL_QUALITY_PCTL = f"""
 WITH p AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p FROM documents),
 q AS (SELECT doc_id, {_SQL_QUALITY_EXPR} AS quality FROM p),
@@ -2980,14 +2967,7 @@ pp AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p FROM ptr),
 ps AS (
   SELECT doc_id, text,
          {', '.join(f'{_sql_lang_score(lang)} AS s_{lang}' for lang in LANG_PRIORITY)},
-         floor((
-           {QUALITY_WEIGHTS['stop_ratio']} * (CAST({_sql_lang_score('en')} AS DOUBLE)
-               / len(regexp_split_to_array(trim(text), '\\s+')))
-         + {QUALITY_WEIGHTS['alpha_ratio']} * (CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / length(text))
-         + {QUALITY_WEIGHTS['len_score']} * least(1.0,
-               len(regexp_split_to_array(trim(text), '\\s+')) / {QUALITY_LEN_NORM})
-         ) * 1000000.0 + 0.5) / 1000000.0 AS quality
+         {_SQL_QUALITY_EXPR} AS quality
   FROM pp),
 pq AS (SELECT doc_id, text FROM ps
        WHERE quality >= {CURATION_MIN_QUALITY} AND {_sql_lang_case()} = 'en'),
@@ -3231,9 +3211,7 @@ def curation_pipeline_q(spark: SparkSession, sf: str) -> DataFrame:
     final = surv.join(contaminated, "doc_id", "left_anti").select(
         "doc_id",
         "group_size",
-        F.size(
-            F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
-        ).cast("long").alias("n_tokens"),
+        F.size(ws_tokens(F.col("text"))).cast("long").alias("n_tokens"),
     ).transform(_materialize)
 
     packed = pack_sequences(

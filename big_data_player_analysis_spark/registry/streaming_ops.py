@@ -407,7 +407,6 @@ def stream_incremental_mv_q(spark: SparkSession, sf: str) -> DataFrame:
 # ------------------------------------------------- streaming curation
 
 from big_data_player_analysis_spark.registry.llm_ops import (  # noqa: E402
-    CURATION_MIN_QUALITY,
     SQL_PIPE_UND,
     _sql_pipe_pre,
     closure_oracle,
@@ -458,7 +457,7 @@ ORACLE_SCALE_CURATION = closure_oracle(
     oracle_scale=ORACLE_SCALE_CURATION,
 )
 def stream_curation_q(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming corpus CURATION end-to-end (streaming/curation.py): the
+    """Streaming corpus CURATION end-to-end (streaming/ingest.py): the
     mega-pipeline's stage chain run as a real foreachBatch availableNow
     ingest — per micro-batch quality/language gate, C4 boilerplate-window
     strip, one survivor per intra-batch near-dup cluster, incremental
@@ -471,7 +470,7 @@ def stream_curation_q(spark: SparkSession, sf: str) -> DataFrame:
     parameterized gate+line-dedup+closure oracle (recursive CTE at the
     gate, union-find oracle_scale above it); multi-batch filtering and
     replay idempotence are pinned in tests/test_streaming_curation.py."""
-    from big_data_player_analysis_spark.streaming.curation import (
+    from big_data_player_analysis_spark.streaming.ingest import (
         stream_curation_ingest,
     )
     from big_data_player_analysis_spark.workspace import scratch_dir
@@ -482,7 +481,6 @@ def stream_curation_q(spark: SparkSession, sf: str) -> DataFrame:
             table_path(sf, "documents"),
             f"{scratch}/corpus",
             f"{scratch}/ckpt",
-            min_quality=CURATION_MIN_QUALITY,
         )
         return corpus.select(
             "doc_id", "source", "group_size", "n_tokens", "batch"

@@ -1,4 +1,5 @@
-"""Streaming source + sink helpers for the `events` table.
+"""Streaming source + sink helpers: the declared-schema file source, the
+`events` table over it, and the run-to-completion sinks.
 
 The file source treats a parquet path as an append-only directory: at 100 TB
 the same code points at a landing bucket and each new file becomes a
@@ -20,11 +21,34 @@ declares, and the conversion is catalog.py's too.
 from __future__ import annotations
 
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from big_data_player_analysis_spark.catalog import _normalize_nanos_timestamps, footer_schema
+
+
+def file_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """Streaming DataFrame over a parquet file/dir with a declared schema
+    (one arriving file = one micro-batch when max_files_per_trigger=1)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if path.endswith(".parquet"):
+        # Single-file "table": FileStreamSource force-sets basePath to the
+        # path itself for non-glob paths and then rejects it (basePath must
+        # be a directory). Rewriting the last char as a one-char glob class
+        # makes isGlobPath true, which disables that override while still
+        # matching exactly this file.
+        path = f"{path[:-1]}[{path[-1]}]"
+    return reader.parquet(path)
 
 
 def events_stream(
@@ -35,17 +59,9 @@ def events_stream(
     """Streaming DataFrame over an events parquet file/directory with `ts`
     converted to a proper event-time timestamp column."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(footer_schema(path))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if path.endswith(".parquet"):
-        # Single-file "table": FileStreamSource force-sets basePath to the
-        # path itself for non-glob paths and then rejects it (basePath must
-        # be a directory). Rewriting the last char as a one-char glob class
-        # makes isGlobPath true, which disables that override while still
-        # matching exactly this file.
-        path = f"{path[:-1]}[{path[-1]}]"
-    return _normalize_nanos_timestamps(reader.parquet(path))
+    return _normalize_nanos_timestamps(
+        file_stream(spark, path, footer_schema(path), max_files_per_trigger)
+    )
 
 
 def run_stream_to_table(
@@ -72,6 +88,24 @@ def run_stream_to_table(
     )
     await_completion(q, timeout_sec)
     return sdf.sparkSession.table(name)
+
+
+def run_foreach_batch(
+    sdf: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    timeout_sec: float,
+) -> None:
+    """Run ``process(batch, batch_id)`` over every micro-batch of sdf to
+    completion (availableNow). A replayed batch keeps its id, so a sink
+    keyed on the id makes the stream exactly-once."""
+    q = (
+        sdf.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_completion(q, timeout_sec)
 
 
 def await_completion(q: StreamingQuery, timeout_sec: float) -> None:

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.streaming.events import (
-    await_completion,
     events_stream,
+    run_foreach_batch,
 )
 
 _STATE_SCHEMA = (
@@ -84,15 +84,7 @@ def apply_batch(
 
 def read_mv(spark: SparkSession, mv_dir: str) -> DataFrame:
     """Current MV with the derived (non-mergeable) columns attached."""
-    snap = _read_snapshot(spark, mv_dir, 1 << 62)
-    return snap.select(
-        "event_type",
-        "n_events",
-        "sum_value",
-        "min_value",
-        "max_value",
-        (F.col("sum_value") / F.col("n_events")).alias("avg_value"),
-    )
+    return read_mv_at(spark, mv_dir, 1 << 62)
 
 
 def stream_incremental_mv(
@@ -106,18 +98,12 @@ def stream_incremental_mv(
     """Run the maintenance stream to completion (availableNow) and return
     the current MV. One arriving file = one merge when
     max_files_per_trigger=1."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        apply_batch(spark, batch, batch_id, mv_dir)
-
-    q = (
-        events_stream(spark, events_path, max_files_per_trigger)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        events_stream(spark, events_path, max_files_per_trigger),
+        lambda batch, batch_id: apply_batch(spark, batch, batch_id, mv_dir),
+        checkpoint_dir,
+        timeout_sec,
     )
-    await_completion(q, timeout_sec)
     return read_mv(spark, mv_dir)
 
 
@@ -138,14 +124,8 @@ def read_mv_at(spark: SparkSession, mv_dir: str, version: int) -> DataFrame:
     VERSION AS OF contract). Because every batch writes a complete
     snapshot, time travel is a single partition-directory read: no log
     replay, no reconstruction."""
-    snap = _read_snapshot(spark, mv_dir, version + 1)
-    return snap.select(
-        "event_type",
-        "n_events",
-        "sum_value",
-        "min_value",
-        "max_value",
-        (F.col("sum_value") / F.col("n_events")).alias("avg_value"),
+    return _read_snapshot(spark, mv_dir, version + 1).withColumn(
+        "avg_value", F.col("sum_value") / F.col("n_events")
     )
 
 

@@ -1,4 +1,4 @@
-"""Streaming corpus curation (streaming/curation.py): single-batch parity
+"""Streaming corpus curation (streaming/ingest.py): single-batch parity
 with the batch stage chain, the quality gate, boilerplate-window stripping,
 cross-batch incremental filtering, and exactly-once replay through the
 idempotent partition sink."""
@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from big_data_player_analysis_spark.streaming.curation import (
+from big_data_player_analysis_spark.streaming.ingest import (
     stream_curation_ingest,
 )
 

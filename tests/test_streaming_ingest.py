@@ -1,6 +1,7 @@
 """Streaming near-dedup ingestion (streaming/ingest.py): batch parity,
 cross-batch incremental filtering, the documented divergence-from-global
-case, and exactly-once replay through the idempotent partition sink."""
+case, and exactly-once replay through the idempotent partition sink, the
+last for the curation stream too."""
 
 from __future__ import annotations
 
@@ -13,6 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_player_analysis_spark.streaming.ingest import (
+    CURATED_SCHEMA,
+    INGEST_SCHEMA,
+    _read_batches,
+    stream_curation_ingest,
     stream_near_dedup_ingest,
 )
 
@@ -123,16 +128,14 @@ def test_incremental_divergence_case_is_the_documented_one(spark, tmp_path):
     assert got == {10: 0, 20: 1}
 
 
-@pytest.mark.parametrize("module, read, extra", [
-    ("ingest", "_read_corpus", {}),
-    ("curation", "_read_curated", {"n_tokens": pa.array([2, 3], pa.int64())}),
+@pytest.mark.parametrize("schema, extra", [
+    pytest.param(INGEST_SCHEMA, {}, id="ingest"),
+    pytest.param(CURATED_SCHEMA, {"n_tokens": pa.array([2, 3], pa.int64())}, id="curation"),
 ])
-def test_sink_read_back_runs_no_job(spark, tmp_path, module, read, extra):
+def test_sink_read_back_runs_no_job(spark, tmp_path, schema, extra):
     """The foreachBatch sinks read their accumulated corpus back every
     micro-batch; with the declared schema that read runs no
     footer-inference job, and `batch` still comes from the directory."""
-    import importlib
-
     from tests.conftest import jobs_for
 
     corpus = tmp_path / "corpus"
@@ -148,8 +151,48 @@ def test_sink_read_back_runs_no_job(spark, tmp_path, module, read, extra):
             }),
             str(corpus / f"batch={b}" / "part-0.parquet"),
         )
-    fn = getattr(importlib.import_module(f"big_data_player_analysis_spark.streaming.{module}"), read)
-    df, jobs = jobs_for(spark, f"read-back-{module}", lambda: fn(spark, str(corpus)))
+    df, jobs = jobs_for(
+        spark, "read-back", lambda: _read_batches(spark, str(corpus), schema)
+    )
     assert jobs == 0
     assert df.columns == ["doc_id", "text", "source", "group_size", *extra, "batch"]
     assert sorted((r.doc_id, r.batch) for r in df.collect()) == [(0, 0), (1, 0), (30, 3), (31, 3)]
+
+
+@pytest.mark.parametrize("stream", [
+    pytest.param(stream_near_dedup_ingest, id="ingest"),
+    pytest.param(stream_curation_ingest, id="curation"),
+])
+def test_replayed_batch_rewrites_its_partition_identically(spark, tmp_path, stream):
+    """A crash between batch 1's sink write and its checkpoint commit:
+    removing the commit makes the restart replay batch 1 under the same
+    id. The replay must rewrite batch=1 and read only the corpus below
+    its id, so it never drops doc 50 as a near-dup of its own earlier
+    write."""
+    src = str(tmp_path / "feed")
+    now = time.time()
+    _write_file(src, "f1.parquet", [(10, BASE_A + " alpha")], now - 100)
+    # passes the curation gate (test_streaming_curation.py lands it)
+    _write_file(src, "f2.parquet", [(50, BASE_B + " and the analysts who use them")], now - 50)
+    corpus_dir, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
+
+    def run():
+        corpus = stream(spark, src, corpus_dir, ckpt, max_files_per_trigger=1)
+        return sorted((r.doc_id, r.batch) for r in corpus.collect())
+
+    def batch1_mtimes():
+        part = os.path.join(corpus_dir, "batch=1")
+        return {
+            f: os.stat(os.path.join(part, f)).st_mtime_ns
+            for f in os.listdir(part) if f.endswith(".parquet")
+        }
+
+    first = run()
+    assert first == [(10, 0), (50, 1)]
+    before = batch1_mtimes()
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    time.sleep(0.01)  # so a rewrite moves the mtime on coarse clocks
+    assert run() == first
+    after = batch1_mtimes()
+    assert len(after) == 1 and after != before
